@@ -51,7 +51,7 @@ def test_disk_anti_join_empty_dirs_and_extra(spark, tmp_path):
     assert disk_anti_join(cands, [str(tmp_path / "nope")], 8).count() == 20
     # extra_seen broadcast backstop removes rows dirs cannot cover
     out = disk_seen_anti_join(
-        cands, [], 8, extra_seen=_urls(spark, ["https://x.test/3"]))
+        cands, [], 8, extra_seen=_urls(spark, ["https://x.test/3"])).new
     assert out.count() == 19
 
 
@@ -267,3 +267,85 @@ def test_df_seeds_disk_seen_resume(spark, tmp_path):
     with pytest.raises(ValueError, match="seeds table was written with"):
         crawl(spark, cdf, seeds_df,
               CrawlConfig(**{**dcfg, "disk_seen_buckets": 16}), resume=True)
+
+
+def test_df_seeds_disk_cuckoo_equals_plain(spark, tmp_path):
+    """DataFrame seeds behind the one-pass cuckoo gate: the seed table
+    is no blob's input until the first gated round rebuilds each
+    bucket's blob from the seen files it reads (seed table included),
+    so a seed linked later is still caught. Fresh and interrupted +
+    resumed runs both equal the plain DataFrame-seeded crawl."""
+    pdf = C.corpus_pandas(seed=7, n_hosts=3, total_pages=40, with_bytes=False)
+    cdf = spark.createDataFrame(pdf)
+    seeds_df = spark.createDataFrame(
+        [(f"https://h{i}.example-7.test/",) for i in range(3)], "url string")
+    base = dict(max_depth=3, same_domain=False, same_path_prefix=False)
+    want = [(r["url"], r["depth"], r["order"]) for r in
+            crawl(spark, cdf, seeds_df, CrawlConfig(**base))
+            .results.orderBy("order").collect()]
+
+    def dcfg(ck, **kw):
+        return CrawlConfig(**base, checkpoint_dir=ck, broadcast_seen_max_urls=0,
+                           disk_seen=True, disk_seen_buckets=8, bloom_seen=True,
+                           seen_filter="cuckoo", bloom_buckets=4,
+                           bloom_bits=1 << 14, **kw)
+
+    fresh = crawl(spark, cdf, seeds_df, dcfg(str(tmp_path / "fresh")))
+    assert [(r["url"], r["depth"], r["order"])
+            for r in fresh.results.orderBy("order").collect()] == want
+    # every round that ran the gate reports its filter counts
+    assert all("filter_maybe" in m and "filter_new" in m
+               for m in fresh.metrics if m["processed"])
+
+    ck = str(tmp_path / "resumed")
+    crawl(spark, cdf, seeds_df, dcfg(ck, max_rounds=1))
+    resumed = crawl(spark, cdf, seeds_df, dcfg(ck), resume=True)
+    assert [(r["url"], r["depth"], r["order"])
+            for r in resumed.results.orderBy("order").collect()] == want
+
+
+_PARITY_DRIVER = r"""
+import json, sys
+from urlmap_spark.session import get_spark
+from urlmap_spark.sources import corpus as C
+from urlmap_spark.plans.crawl import CrawlConfig, crawl
+
+master, ck, out = sys.argv[1:4]
+spark = get_spark(master=master)
+cdf = spark.createDataFrame(
+    C.corpus_pandas(seed=42, n_hosts=4, total_pages=60, with_bytes=False))
+run = crawl(spark, cdf, "https://h0.example-42.test/", CrawlConfig(
+    max_depth=3, same_path_prefix=False, checkpoint_dir=ck,
+    broadcast_seen_max_urls=0, disk_seen=True, disk_seen_buckets=8,
+    bloom_seen=True, seen_filter="cuckoo", bloom_buckets=4,
+    bloom_bits=1 << 14))
+rows = [(r["url"], r["depth"], r["order"])
+        for r in run.results.orderBy("order").collect()]
+with open(out, "w") as f:
+    json.dump(rows, f)
+spark.stop()
+"""
+
+
+def test_disk_cuckoo_order_parallelism_invariant(tmp_path):
+    """The disk + cuckoo crawl assigns the identical `order` column at
+    local[2] and local[4] (each in its own JVM, so the core count really
+    differs) — the gate's per-bucket task layout cannot leak into the
+    crawl order."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    driver = tmp_path / "parity.py"
+    driver.write_text(_PARITY_DRIVER)
+    env = {**os.environ, "PYTHONPATH": repo + os.pathsep + os.environ.get("PYTHONPATH", "")}
+    got = {}
+    for n in (2, 4):
+        out = tmp_path / f"rows{n}.json"
+        r = subprocess.run([sys.executable, str(driver), f"local[{n}]",
+                            str(tmp_path / f"ck{n}"), str(out)],
+                           capture_output=True, text=True, timeout=600, env=env)
+        assert r.returncode == 0, r.stderr[-3000:]
+        got[n] = json.loads(out.read_text())
+    assert got[2] == got[4] and len(got[2]) > 10

@@ -4,6 +4,8 @@ on: committed blobs cover exactly the committed seen set, resume loads
 them instead of rebuilding, cuckoo deletes fingerprints in place while
 bloom rebuilds."""
 
+import os
+
 from urlmap_spark.plans.crawl import CrawlConfig, crawl
 from urlmap_spark.plans.maintenance import requeue_urls, retire_urls
 from urlmap_spark.sources.catalog import RoundCatalog
@@ -77,20 +79,15 @@ def test_requeue_refetches_with_fresh_orders(spark, tmp_path):
     assert {u for (u, _, _, _) in after} == {u for (u, _, _, _) in before}
 
 
-def test_retire_enables_organic_rediscovery(spark, tmp_path):
-    """Partial crawl (D pending) -> retire B -> resume: D's link to B
-    re-enqueues it (it left the seen set) and B is refetched at its
-    rediscovery depth. Retiring the SEED is a no-op: seeds never enter
-    the committed deltas and resume re-pins them into seen."""
-    ck = str(tmp_path / "ck")
+def _retire_rediscovery(spark, ck, **kw):
     partial = crawl(spark, _web(spark), "https://h.test/",
-                    _cfg(ck, max_rounds=2))
+                    _cfg(ck, max_rounds=2, **kw))
     assert partial.rounds == 2  # frontier now holds D
 
     out = retire_urls(spark, ck, ["https://h.test/b", "https://h.test/"])
     assert out == {"retired": 1, "skipped_pending": 0, "round": 2}
 
-    resumed = crawl(spark, _web(spark), "https://h.test/", _cfg(ck),
+    resumed = crawl(spark, _web(spark), "https://h.test/", _cfg(ck, **kw),
                     resume=True)
     rows = _rows(resumed)
     b_rows = [r for r in rows if r[0] == "https://h.test/b"]
@@ -101,6 +98,62 @@ def test_retire_enables_organic_rediscovery(spark, tmp_path):
     # B's own outlink D is still seen, and the seed A was never retired)
     for u in ("https://h.test/", "https://h.test/c", "https://h.test/d"):
         assert sum(1 for r in rows if r[0] == u) == 1
+
+
+def test_retire_enables_organic_rediscovery(spark, tmp_path):
+    """Partial crawl (D pending) -> retire B -> resume: D's link to B
+    re-enqueues it (it left the seen set) and B is refetched at its
+    rediscovery depth. Retiring the SEED is a no-op: seeds never enter
+    the committed deltas and resume re-pins them into seen."""
+    _retire_rediscovery(spark, str(tmp_path / "ck"))
+
+
+def test_retire_disk_layout_after_blob_vacuum(spark, tmp_path):
+    """The same retire -> rediscover contract on the disk seen gate's
+    blob layout (one cuckoo blob per disk bucket, deleted from under the
+    gate's own bucket key and hashes), with compaction every round, so
+    every superseded seen_filters dir is already gone when retire_urls
+    and the resume read the last one."""
+    ck = str(tmp_path / "ck")
+    _retire_rediscovery(spark, ck, disk_seen=True, disk_seen_buckets=4,
+                        compact_seen_every=1)
+    cat = RoundCatalog(ck)
+    rounds = cat.committed_rounds()
+    kept = [r for r in rounds
+            if os.path.isdir(cat.round_table_dir(r, "seen_filters"))]
+    assert kept == [rounds[-1]]
+    assert sorted(d for d in os.listdir(cat.round_table_dir(rounds[-1], "seen_filters"))
+                  if d.startswith("_ub=")) == [f"_ub={b}" for b in range(4)]
+    assert cat.read_metrics(rounds[-1])["seen_filter_cfg"][3] == "_ub"
+
+
+def test_persisted_disk_filters_cover_committed_seen(spark, tmp_path):
+    """Disk twin of test_persisted_filters_cover_committed_seen: the
+    blobs the gate committed with the last round must mark every
+    committed seen URL "maybe seen" (a miss would bypass the exact
+    probe and re-enqueue it), and record their layout."""
+    from urlmap_spark.operators.diskseen import (disk_seen_anti_join,
+                                                 filter_config)
+
+    ck = str(tmp_path / "ck")
+    run = crawl(spark, _web(spark), "https://h.test/",
+                _cfg(ck, disk_seen=True, disk_seen_buckets=4))
+    cat = RoundCatalog(ck)
+    last = cat.last_round()
+    fcfg = filter_config("cuckoo", 4, 4 * (1 << 14))
+    assert cat.read_metrics(last)["seen_filter_cfg"] == ["cuckoo", 4, 1 << 14, "_ub"]
+    seen = cat.read_union(spark, "seen_delta").select("url")
+    n = seen.count()
+    assert n == 3  # b, c, d; the seed never enters a delta
+    gate = disk_seen_anti_join(seen, [], 4, fcfg,
+                               cat.round_table_dir(last, "seen_filters"))
+    assert len(gate.filters.collect()) == 4  # one blob row per bucket
+    assert gate.observation.get == {"filter_maybe": n, "filter_new": 0}
+    # the round metrics carry the gate's counts: a definitely-new row is
+    # new, and every new row was either proved new or probed exactly
+    for m in run.metrics:
+        assert m["filter_new"] <= m["new_discovered"] \
+            <= m["filter_new"] + m["filter_maybe"]
 
 
 def test_retire_skips_pending_frontier_urls(spark, tmp_path):

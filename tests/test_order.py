@@ -81,3 +81,20 @@ def test_with_global_order_null_key_raises(spark):
     got, n = with_global_order(clean, ["k"], order_col="order")
     assert {(r["k"], r["order"]) for r in got.collect()} == {(1, 0), (2, 1)}
     assert n == 2
+
+
+def test_first_wins_packed_rejects_other_columns(spark):
+    """The packed first-wins would silently drop a fifth column (and so
+    return another schema than the struct form): it must raise."""
+    import pytest
+
+    from urlmap_spark.operators.order import first_wins_packed
+
+    df = spark.createDataFrame([("u", 1, 2, 3, "x")],
+                               "url string, parent_order long, pos int, "
+                               "depth int, extra string")
+    with pytest.raises(ValueError, match="first_wins_packed needs exactly"):
+        first_wins_packed(df)
+    four = df.drop("extra")
+    assert first_wins_packed(four).columns == \
+        first_wins(four, "url", ["parent_order", "pos"]).columns

@@ -245,7 +245,8 @@ def main(argv: list[str] | None = None, _spark=None) -> int:
             print(json.dumps({"event": "round", **m}), file=sys.stderr)
         else:
             extras = "".join(
-                f" {k}={m[k]}" for k in ("blocked_robots", "retried", "rendered")
+                f" {k}={m[k]}" for k in ("blocked_robots", "retried", "rendered",
+                                         "filter_maybe", "filter_new")
                 if m.get(k))
             # with the live ticker active, clear its half-painted \r
             # status line first — otherwise the round line is appended

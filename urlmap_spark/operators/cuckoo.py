@@ -1,12 +1,16 @@
 """Partitioned cuckoo-filter URL-seen prefilter — the second structure
 named by the north_rule ("partitioned bloom/cuckoo URL-seen").
 
-Same contract and plumbing as the bloom in seen.py: per host-hash
-bucket one fixed-size filter blob persisted as (bucket, filter) rows,
-built/merged with one applyInPandas task per bucket, probed by a
-bucket-cogroup (the blobs never visit the driver), and ALWAYS backed
-by the exact anti-join — a false positive costs an extra exact check,
-a false negative cannot happen by construction:
+Same contract and plumbing as the bloom in seen.py, in two layouts.
+In memory: per hash bucket one fixed-size filter blob persisted as
+(bucket, filter) rows, built/merged with one applyInPandas task per
+bucket and probed by a bucket-cogroup. On disk (operators/diskseen.py):
+one blob per disk-seen bucket that the seen gate's own bucket task
+reads, probes, extends with the round's new URLs and emits — no
+separate build, merge or cogroup pass. Either way the blobs never
+visit the driver, and the filter is ALWAYS backed by the exact
+anti-join — a false positive costs an extra exact check, a false
+negative cannot happen by construction:
 
 - an inserted fingerprint lives in one of its two buckets or in the
   overflow stash (insertion never silently drops — eviction chains
@@ -20,12 +24,15 @@ DELETION support (drop one copy of the fingerprint) — the bloom can
 only grow, so retiring URLs (e.g. recrawl-after-TTL) needs a rebuild
 there but is an O(1) slot clear here.
 
-All per-URL hashing is JVM-side (the same _with_hash_cols columns the
-bloom uses); fingerprint/index math is vectorized numpy. The placement
-loop itself is per-fingerprint Python over the numpy table — cuckoo
-insertion is inherently sequential (eviction chains) — which is fine
-at per-bucket-per-round batch sizes; the PROBE (the per-candidate hot
-path) is fully vectorized.
+In memory, per-URL hashing is JVM-side (the same _with_hash_cols
+columns the bloom uses); the disk layout hashes inside its task
+(seen.task_hashes). Probe, insert and delete are one kernel
+(CuckooBlob) for every path; fingerprint/index math is vectorized
+numpy. Insertion places every fingerprint whose first or second row
+has a free slot in two vectorized passes; only the rest (a few % at
+design occupancy) walk the per-fingerprint eviction chain, which is
+inherently sequential. The PROBE (the per-candidate hot path) is fully
+vectorized.
 """
 
 from __future__ import annotations
@@ -45,6 +52,8 @@ class CuckooConfig:
     """Drop-in for BloomConfig: (n_buckets, m_bits) sizes the table to
     the same per-bucket byte budget as a bloom of m_bits bits."""
 
+    kind = "cuckoo"
+
     def __init__(self, n_buckets: int = 32, m_bits: int = 1 << 22,
                  bucket_slots: int = 4, fp_bits: int = 16,
                  max_kicks: int = 250):
@@ -57,6 +66,9 @@ class CuckooConfig:
         total_slots = max(bucket_slots, m_bits // 16)
         rows = max(1, total_slots // bucket_slots)
         self.n_rows = 1 << (int(rows).bit_length() - 1)  # pow2 floor
+
+    def blob(self, blobs=()) -> "CuckooBlob":
+        return CuckooBlob(self, blobs)
 
 
 def _fp_rows(h1: np.ndarray, h2: np.ndarray, cfg: CuckooConfig):
@@ -114,6 +126,99 @@ def _deserialize(blob: bytes):
     return table, stash
 
 
+def _place(table: np.ndarray, rows: np.ndarray, fps: np.ndarray) -> np.ndarray:
+    """Vectorized placement without eviction: entries that share a row
+    claim that row's free slots in turn (rank within the row against
+    the running count of free slots). Returns the mask of entries
+    placed; the rest need their partner row or the eviction loop."""
+    placed = np.zeros(len(rows), dtype=bool)
+    if not len(rows):
+        return placed
+    order = np.argsort(rows, kind="stable")
+    rs, fs = rows[order], fps[order]
+    run_start = np.flatnonzero(np.r_[True, rs[1:] != rs[:-1]])
+    rank = np.arange(len(rs)) - np.repeat(run_start,
+                                          np.diff(np.r_[run_start, len(rs)]))
+    free = np.cumsum(table[rs] == 0, axis=1)  # free slots up to each column
+    ok = rank < free[:, -1]
+    slot = np.argmax(free[ok] > rank[ok, None], axis=1)
+    table[rs[ok], slot] = fs[ok]
+    placed[order[ok]] = True
+    return placed
+
+
+class CuckooBlob:
+    """One bucket's cuckoo table plus its overflow stash: the
+    probe/insert/delete kernel every cuckoo path shares (build, merge,
+    cogroup probe, removal, disk gate). Several persisted blobs of one
+    bucket fold into the first — possible (unlike a generic hash set)
+    because an entry's current row IS one of its two legal rows and the
+    partner relation is an involution."""
+
+    def __init__(self, cfg: CuckooConfig, blobs=()):
+        self.cfg = cfg
+        blobs = list(blobs)
+        if blobs:
+            self.table, st0 = _deserialize(bytes(blobs[0]))
+            self.stash = [int(x) for x in st0]
+        else:
+            self.table = np.zeros((cfg.n_rows, cfg.bucket_slots), dtype=np.uint16)
+            self.stash = []
+        for b in blobs[1:]:
+            t2, s2 = _deserialize(bytes(b))
+            rows, cols = np.nonzero(t2)
+            fp = t2[rows, cols]
+            mask = np.uint64(cfg.n_rows - 1)
+            partner = (rows.astype(np.uint64)
+                       ^ ((fp.astype(np.uint64) * _FP_MULT) & mask)).astype(np.int64)
+            self._insert(fp, rows.astype(np.int64), partner)
+            self.stash.extend(int(x) for x in s2)
+
+    def _insert(self, fp, r1, r2) -> None:
+        # vectorized first and second choice; only what finds both rows
+        # full (a few % at design occupancy) takes the sequential
+        # eviction loop. Placement differs from pure-sequential
+        # insertion but membership — the only observable through the
+        # probe — is identical: every fingerprint lands in one of its
+        # two legal rows or the stash.
+        left = np.flatnonzero(~_place(self.table, r1, fp))
+        left = left[~_place(self.table, r2[left], fp[left])]
+        for i, j in enumerate(left):
+            _insert_one(self.table, self.stash, int(r1[j]), int(fp[j]),
+                        self.cfg, i)
+
+    def insert(self, h1, h2) -> None:
+        self._insert(*_fp_rows(np.asarray(h1), np.asarray(h2), self.cfg))
+
+    def probe(self, h1, h2) -> np.ndarray:
+        """True where the fingerprint sits in either legal row or the
+        stash (maybe seen)."""
+        fp, r1, r2 = _fp_rows(np.asarray(h1), np.asarray(h2), self.cfg)
+        t = self.table
+        maybe = (t[r1] == fp[:, None]).any(axis=1) | (t[r2] == fp[:, None]).any(axis=1)
+        if self.stash:
+            maybe |= np.isin(fp, np.array(self.stash, dtype=np.uint16))
+        return maybe
+
+    def delete(self, h1, h2) -> None:
+        """Drop one stored copy of each fingerprint (callers delete only
+        URLs that were inserted — see remove_urls)."""
+        fp, r1, r2 = _fp_rows(np.asarray(h1), np.asarray(h2), self.cfg)
+        for i in range(len(fp)):
+            f = int(fp[i])
+            for r in (int(r1[i]), int(r2[i])):
+                hit = np.nonzero(self.table[r] == f)[0]
+                if len(hit):
+                    self.table[r, hit[0]] = 0
+                    break
+            else:
+                if f in self.stash:
+                    self.stash.remove(f)
+
+    def to_bytes(self) -> bytes:
+        return _serialize(self.table, self.stash)
+
+
 def build_filters(urls: DataFrame, cfg: CuckooConfig,
                   existing: DataFrame | None = None) -> DataFrame:
     """urls(url) [+ existing (bucket, filter)] -> merged (bucket, filter).
@@ -124,31 +229,9 @@ def build_filters(urls: DataFrame, cfg: CuckooConfig,
     tagged = _with_hash_cols(urls, cfg).select("_h1", "_h2", "_bk")
 
     def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        table = np.zeros((cfg.n_rows, cfg.bucket_slots), dtype=np.uint16)
-        stash: list = []
-        fp, r1, _ = _fp_rows(pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy(), cfg)
-        # vectorized bulk placement (valid because the table is EMPTY
-        # here): each entry's rank within its target row claims a free
-        # slot directly; only rank-overflow entries (a few % at design
-        # occupancy) take the sequential eviction loop. Placement
-        # differs from pure-sequential insertion but membership — the
-        # only observable through the probe — is identical: every
-        # fingerprint lands in one of its two legal rows or the stash.
-        if len(fp):
-            order = np.argsort(r1, kind="stable")
-            rs, fs = r1[order], fp[order]
-            boundaries = np.flatnonzero(np.diff(rs)) + 1
-            run_start = np.concatenate(([0], boundaries))
-            run_len = np.diff(np.concatenate((run_start, [len(rs)])))
-            rank = np.arange(len(rs)) - np.repeat(run_start, run_len)
-            direct = rank < cfg.bucket_slots
-            table[rs[direct], rank[direct]] = fs[direct]
-            spill_r, spill_f = rs[~direct], fs[~direct]
-            for i in range(len(spill_f)):
-                _insert_one(table, stash, int(spill_r[i]), int(spill_f[i]),
-                            cfg, i)
-        return pd.DataFrame({"bucket": [int(key[0])],
-                             "filter": [_serialize(table, stash)]})
+        blob = cfg.blob()
+        blob.insert(pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy())
+        return pd.DataFrame({"bucket": [int(key[0])], "filter": [blob.to_bytes()]})
 
     fresh = tagged.groupBy("_bk").applyInPandas(build, FILTER_SCHEMA)
     if existing is None:
@@ -156,16 +239,8 @@ def build_filters(urls: DataFrame, cfg: CuckooConfig,
     both = fresh.unionByName(existing)
 
     def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        table, st0 = _deserialize(bytes(pdf["filter"].iloc[0]))
-        stash = list(st0)
-        for b in pdf["filter"].iloc[1:]:
-            t2, s2 = _deserialize(bytes(b))
-            rows, cols = np.nonzero(t2)
-            for r, c in zip(rows, cols):
-                _insert_one(table, stash, int(r), int(t2[r, c]), cfg, int(r))
-            stash.extend(int(x) for x in s2)
         return pd.DataFrame({"bucket": [int(key[0])],
-                             "filter": [_serialize(table, stash)]})
+                             "filter": [cfg.blob(pdf["filter"]).to_bytes()]})
 
     return both.groupBy("bucket").applyInPandas(merge, FILTER_SCHEMA)
 
@@ -191,29 +266,11 @@ def remove_urls(filters: DataFrame, urls: DataFrame,
     def drop(key, fpdf: pd.DataFrame, updf: pd.DataFrame) -> pd.DataFrame:
         if len(fpdf) == 0:  # removals for a bucket with no filter: no-op
             return pd.DataFrame({"bucket": [], "filter": []})
-        table, st0 = _deserialize(bytes(fpdf["filter"].iloc[0]))
-        stash = list(st0)
-        for b in fpdf["filter"].iloc[1:]:  # fold unmerged deltas first —
-            t2, s2 = _deserialize(bytes(b))  # deleting from only one blob
-            rows, cols = np.nonzero(t2)      # would leave the copy in the
-            for r, c in zip(rows, cols):     # other blob findable
-                _insert_one(table, stash, int(r), int(t2[r, c]), cfg, int(r))
-            stash.extend(int(x) for x in s2)
-        if len(updf):
-            fp, r1, r2 = _fp_rows(updf["_h1"].to_numpy(),
-                                  updf["_h2"].to_numpy(), cfg)
-            for i in range(len(fp)):
-                f = int(fp[i])
-                for r in (int(r1[i]), int(r2[i])):
-                    hit = np.nonzero(table[r] == f)[0]
-                    if len(hit):
-                        table[r, hit[0]] = 0
-                        break
-                else:
-                    if f in stash:
-                        stash.remove(f)
-        return pd.DataFrame({"bucket": [int(key[0])],
-                             "filter": [_serialize(table, stash)]})
+        # unmerged deltas fold first — deleting from only one blob would
+        # leave the copy in another blob findable
+        blob = cfg.blob(fpdf["filter"])
+        blob.delete(updf["_h1"].to_numpy(), updf["_h2"].to_numpy())
+        return pd.DataFrame({"bucket": [int(key[0])], "filter": [blob.to_bytes()]})
 
     return filters.groupBy("bucket").cogroup(
         tagged.groupBy("_bk")).applyInPandas(drop, FILTER_SCHEMA)
@@ -234,15 +291,9 @@ def split_candidates(candidates: DataFrame, filters: DataFrame,
         if len(cpdf) == 0 or len(fpdf) == 0:
             out["_maybe"] = np.zeros(len(cpdf), dtype=bool)
             return out[out_cols]
-        fp, r1, r2 = _fp_rows(cpdf["_h1"].to_numpy(), cpdf["_h2"].to_numpy(), cfg)
-        maybe = np.zeros(len(cpdf), dtype=bool)
-        for b in fpdf["filter"]:  # first blob + any unmerged deltas
-            table, stash = _deserialize(bytes(b))
-            maybe |= (table[r1] == fp[:, None]).any(axis=1) | \
-                     (table[r2] == fp[:, None]).any(axis=1)
-            if len(stash):
-                maybe |= np.isin(fp, stash)
-        out["_maybe"] = maybe
+        # first blob + any unmerged deltas
+        out["_maybe"] = cfg.blob(fpdf["filter"]).probe(
+            cpdf["_h1"].to_numpy(), cpdf["_h2"].to_numpy())
         return out[out_cols]
 
     probed = cand.groupBy("_bk").cogroup(

@@ -136,6 +136,7 @@ def first_wins(df: DataFrame, key: str, tie_cols: list[str]) -> DataFrame:
 # point), pos 14, depth 11; 63 bits total keeps the long positive so
 # numeric min == lexicographic (parent_order, pos, depth) min.
 _PK_PO_BITS, _PK_POS_BITS, _PK_D_BITS = 38, 14, 11
+_PK_COLUMNS = ["url", "parent_order", "pos", "depth"]
 
 
 def first_wins_packed_bounds(max_parent_order: int, max_pos: int,
@@ -158,7 +159,12 @@ def first_wins_packed(df: DataFrame) -> DataFrame:
     Measured on the bench round shape (8M candidate rows, 2.5M distinct
     urls): 1.88 -> 1.27 s min, bit-equal output (r6 session-3 A/B).
     (parent_order, pos) identifies one href slot, so depth rides the
-    low bits without affecting which row wins."""
+    low bits without affecting which row wins. Any other column set
+    raises: the packed form would silently drop extra columns, so it
+    could return a different schema than the struct form."""
+    if sorted(df.columns) != sorted(_PK_COLUMNS):
+        raise ValueError(f"first_wins_packed needs exactly the columns "
+                         f"{_PK_COLUMNS}, got {df.columns}")
     p = df.select("url", (
         (F.col("parent_order") * F.lit(1 << (_PK_POS_BITS + _PK_D_BITS)))
         + (F.col("pos").cast("long") * F.lit(1 << _PK_D_BITS))

@@ -18,7 +18,10 @@ URL-seen structure". Design (SURVEY.md §4.3.1):
 At 10^10 URLs the exact set is a bucketed Iceberg table and the maybe-
 seen fraction ~= true-dup fraction + false-positive rate — the anti-
 join's probe side shrinks by the share of genuinely-new URLs, which in
-a growing crawl is most of them.
+a growing crawl is most of them. That is the disk path's layout
+(operators/diskseen.py): one blob per disk-seen bucket, probed and
+extended inside the exact probe's own bucket task through the same
+BloomBlob kernel the in-memory closures here use.
 """
 
 from __future__ import annotations
@@ -64,11 +67,61 @@ def _positions_vec(h1: np.ndarray, h2: np.ndarray, m_bits: int, k: int) -> np.nd
             % np.uint64(m_bits)).astype(np.int64)
 
 
+def task_hashes(urls) -> tuple[np.ndarray, np.ndarray]:
+    """Two 64-bit hashes of each URL string computed inside a pandas
+    task (SipHash under two fixed keys) — the hash family of the
+    disk-layout blobs (operators/diskseen.py). The gate task hashes
+    candidates and the bucket's persisted seen rows with the same call,
+    so a blob can be rebuilt from seen files task-side, and the
+    fingerprint bits are independent of the xxhash64 bucket key."""
+    vals = np.asarray(urls, dtype=object)
+    return (pd.util.hash_array(vals, hash_key="urlmap-fp-h1-key", categorize=False),
+            pd.util.hash_array(vals, hash_key="urlmap-fp-h2-key", categorize=False))
+
+
 class BloomConfig:
+    kind = "bloom"
+
     def __init__(self, n_buckets: int = 32, m_bits: int = 1 << 20, k: int = 5):
         self.n_buckets = n_buckets
         self.m_bits = m_bits  # bits per bucket filter (1 MiB/8 default)
         self.k = k
+
+    def blob(self, blobs=()) -> "BloomBlob":
+        return BloomBlob(self, blobs)
+
+
+class BloomBlob:
+    """One bucket's bloom bitmap: the probe/insert kernel every bloom
+    path shares (build, merge, cogroup probe, disk gate). Several
+    persisted blobs of one bucket fold by OR."""
+
+    def __init__(self, cfg: BloomConfig, blobs=()):
+        self.cfg = cfg
+        self.bits = np.zeros(cfg.m_bits // 8, dtype=np.uint8)
+        for b in blobs:
+            self.bits |= np.frombuffer(bytes(b), dtype=np.uint8)
+
+    def _pos(self, h1, h2) -> np.ndarray:
+        return _positions_vec(np.asarray(h1), np.asarray(h2), self.cfg.m_bits, self.cfg.k)
+
+    def probe(self, h1, h2) -> np.ndarray:
+        """True where every one of the k bits is set (maybe seen)."""
+        pos = self._pos(h1, h2)
+        return (((self.bits[pos // 8] >> (pos % 8).astype(np.uint8)) & 1)
+                .all(axis=1))
+
+    def insert(self, h1, h2) -> None:
+        pos = self._pos(h1, h2)
+        # bitwise_or.AT, not fancy-index |=: when two positions land in
+        # the SAME byte, buffered fancy indexing applies only one of
+        # them — a silently missing bit, i.e. a bloom false negative
+        # (observed on real data)
+        np.bitwise_or.at(self.bits, (pos // 8).ravel(),
+                         (1 << (pos % 8)).astype(np.uint8).ravel())
+
+    def to_bytes(self) -> bytes:
+        return self.bits.tobytes()
 
 
 def build_filters(urls: DataFrame, cfg: BloomConfig,
@@ -76,20 +129,14 @@ def build_filters(urls: DataFrame, cfg: BloomConfig,
     """urls(url) [+ existing (bucket, filter)] -> merged (bucket, filter).
     One applyInPandas task per bucket; merge = bitwise OR. The per-URL
     work is fully vectorized: hashes computed JVM-side, bit positions as
-    one (n, k) numpy broadcast, bits set with a single bitwise_or.at."""
-    m_bits, k = cfg.m_bits, cfg.k
+    one (n, k) numpy broadcast, bits set with a single bitwise_or.at
+    (BloomBlob)."""
     tagged = _with_hash_cols(urls, cfg).select("_h1", "_h2", "_bk")
 
     def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(m_bits // 8, dtype=np.uint8)
-        pos = _positions_vec(pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy(), m_bits, k)
-        # bitwise_or.AT, not fancy-index |=: when two positions land in
-        # the SAME byte, buffered fancy indexing applies only one of
-        # them — a silently missing bit, i.e. a bloom false negative
-        # (observed on real data)
-        np.bitwise_or.at(bits, (pos // 8).ravel(),
-                         (1 << (pos % 8)).astype(np.uint8).ravel())
-        return pd.DataFrame({"bucket": [int(key[0])], "filter": [bits.tobytes()]})
+        blob = cfg.blob()
+        blob.insert(pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy())
+        return pd.DataFrame({"bucket": [int(key[0])], "filter": [blob.to_bytes()]})
 
     fresh = tagged.groupBy("_bk").applyInPandas(build, FILTER_SCHEMA)
     if existing is None:
@@ -97,10 +144,8 @@ def build_filters(urls: DataFrame, cfg: BloomConfig,
     both = fresh.unionByName(existing)
 
     def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = np.zeros(m_bits // 8, dtype=np.uint8)
-        for b in pdf["filter"]:
-            acc |= np.frombuffer(bytes(b), dtype=np.uint8)
-        return pd.DataFrame({"bucket": [int(key[0])], "filter": [acc.tobytes()]})
+        return pd.DataFrame({"bucket": [int(key[0])],
+                             "filter": [cfg.blob(pdf["filter"]).to_bytes()]})
 
     return both.groupBy("bucket").applyInPandas(merge, FILTER_SCHEMA)
 
@@ -119,7 +164,6 @@ def split_candidates(candidates: DataFrame, filters: DataFrame, cfg: BloomConfig
     once on the 4-byte bucket key; on a cluster that shuffle replaces a
     per-round broadcast of the whole filter set to every executor.
     """
-    m_bits, k = cfg.m_bits, cfg.k
     cand = _with_hash_cols(candidates, cfg, url_col)
     schema = T.StructType(cand.schema.fields + [T.StructField("_maybe", T.BooleanType())])
     out_cols = [f.name for f in schema.fields]
@@ -130,12 +174,9 @@ def split_candidates(candidates: DataFrame, filters: DataFrame, cfg: BloomConfig
             # no candidates in this bucket, or no filter yet -> all new
             out["_maybe"] = np.zeros(len(cpdf), dtype=bool)
             return out[out_cols]
-        blob = np.frombuffer(bytes(fpdf["filter"].iloc[0]), dtype=np.uint8)
-        for b in fpdf["filter"].iloc[1:]:  # unmerged deltas: fold by OR
-            blob = blob | np.frombuffer(bytes(b), dtype=np.uint8)
-        pos = _positions_vec(cpdf["_h1"].to_numpy(), cpdf["_h2"].to_numpy(), m_bits, k)
-        got = (blob[pos // 8] >> (pos % 8).astype(np.uint8)) & 1
-        out["_maybe"] = got.all(axis=1)
+        # unmerged deltas fold by OR
+        out["_maybe"] = cfg.blob(fpdf["filter"]).probe(
+            cpdf["_h1"].to_numpy(), cpdf["_h2"].to_numpy())
         return out[out_cols]
 
     probed = cand.groupBy("_bk").cogroup(

@@ -127,8 +127,8 @@ class CrawlConfig:
                                              # (input_hint per-row invariant)
     bloom_seen: bool = False                 # partitioned bloom prefilter in
                                              # front of the exact seen anti-join
-    bloom_buckets: int = 32
-    bloom_bits: int = 1 << 22                # 512 KiB per bucket at default
+    bloom_buckets: int = 32                  # x bloom_bits = total filter bits
+    bloom_bits: int = 1 << 22                # (disk_seen: one blob per disk bucket)
     seen_filter: str = "bloom"               # "bloom" | "cuckoo" — which
                                              # partitioned prefilter structure
                                              # backs the seen probe (north_rule
@@ -171,8 +171,8 @@ class CrawlConfig:
                                              # path (storage-partitioned-join
                                              # analog). Requires
                                              # checkpoint_dir; composes with
-                                             # bloom/cuckoo prefilters and
-                                             # the broadcast-seen fast path
+                                             # the broadcast-seen fast path and
+                                             # bloom/cuckoo (one-pass gate)
     disk_seen_buckets: int = 64              # |seen|/B must fit a task (the
                                              # scale knob: 10^10 urls / 4096
                                              # buckets ~ 150 MB per task)
@@ -346,22 +346,35 @@ def crawl(
         df_seeded = seeds_df is not None or (
             catalog is not None and catalog.has_table("seeds"))
 
-        if resume and catalog is not None and catalog.last_round() is not None:
-            last = catalog.last_round()
-            # drop is a no-op on pre-bucketing checkpoints (no _hb column)
-            frontier = catalog.read(spark, last, "next_frontier").drop("_hb")
-            seen = catalog.read_union(spark, "seen_delta", upto=last).select("url")
+        def committed_seen(upto: int | None = None) -> DataFrame:
+            """The committed seen set: every seen_delta plus the seeds,
+            which never enter any delta — list seeds from the config, a
+            DataFrame-seeded crawl's from its persisted seed table."""
+            seen = (catalog.read_union(spark, "seen_delta", upto=upto).select("url")
+                    if catalog.committed_rounds()
+                    else spark.createDataFrame([], "url string"))
             if seeds:
                 seen = seen.unionByName(
                     spark.createDataFrame([(s,) for s in seeds], "url string"))
             if catalog.has_table("seeds"):
-                # DataFrame-seeded crawl: seeds never enter any
-                # seen_delta, so the persisted seed table re-joins the
-                # seen set exactly as config seeds do on the list path
                 seen = seen.unionByName(
                     catalog.read_table(spark, "seeds").select("url"))
+            return seen
+
+        def keeps_seen_frames() -> bool:
+            """Whether the next round may read `seen` as DataFrames: the
+            disk gate reads its bucket files task-side, so a disk crawl
+            needs them only while a broadcast round can still come
+            (|seen| == order_counter only grows)."""
+            return not cfg.disk_seen or order_counter <= cfg.broadcast_seen_max_urls
+
+        if resume and catalog is not None and catalog.last_round() is not None:
+            last = catalog.last_round()
+            # drop is a no-op on pre-bucketing checkpoints (no _hb column)
+            frontier = catalog.read(spark, last, "next_frontier").drop("_hb")
             m = catalog.read_metrics(last)
             order_counter = int(m["order_counter"])
+            seen = committed_seen(upto=last) if keeps_seen_frames() else None
             round_idx = last + 1
             metrics = [catalog.read_metrics(r) for r in catalog.committed_rounds()]
         elif resume and catalog is not None and catalog.has_table("seeds"):
@@ -425,78 +438,82 @@ def crawl(
 
         # seen is kept as a list of materialized deltas (union on demand):
         # no per-round checkpoint of the whole set, compacted past a threshold
-        seen_parts: list[DataFrame] = [seen.localCheckpoint(eager=True)]
+        seen_parts: list[DataFrame] = []
+        if keeps_seen_frames():
+            seen_parts = [seen.localCheckpoint(eager=True)]
         tick0("setup_seen_ckpt")
         seeds_seen_small: DataFrame | None = None
         seeds_table_dirs: list[str] = []
         if cfg.disk_seen:
             # the only seen URLs that never reach the catalog's seen_delta
-            # tables are the seeds themselves (each round's new URLs are
-            # committed before the next anti-join runs) — list seeds are
-            # kept as a tiny broadcastable frame; a DataFrame seed TABLE
-            # (10^10-frontier path: never broadcastable) is persisted in
-            # the same _ub bucket layout as seen_delta, so the bucket
-            # probe reads it like one more delta dir
+            # tables are the seeds: list seeds stay a tiny broadcastable
+            # frame; a DataFrame seed TABLE (never broadcastable) is
+            # persisted in the same _ub layout, so the bucket probe reads
+            # it like one more delta dir
             if seeds:
                 seeds_seen_small = spark.createDataFrame(
-                    [(s,) for s in seeds], "url string").localCheckpoint(eager=True)
+                    [(s,) for s in seeds], "url string")
+            # a checkpoint (or seed table) written without disk_seen has
+            # FLAT dirs: the bucket probe would read nothing from them and
+            # silently re-enqueue seen URLs — refuse instead
+            checks = []
             if df_seeded and catalog is not None and catalog.has_table("seeds"):
-                got_sd = catalog.read_table_meta("seeds").get("disk_seen_cfg")
-                if got_sd != [cfg.disk_seen_buckets]:
-                    raise ValueError(
-                        f"disk_seen resume: seeds table was written with "
-                        f"disk_seen_cfg={got_sd!r}, this run wants "
-                        f"{[cfg.disk_seen_buckets]!r} — bucket layouts are "
-                        "incompatible; re-crawl or match disk_seen_buckets")
+                checks.append(("seeds table", catalog.read_table_meta("seeds")))
                 seeds_table_dirs = [catalog.table_dir("seeds")]
             if resume and catalog is not None and catalog.last_round() is not None:
-                # a checkpoint written without disk_seen has FLAT seen_delta
-                # dirs: the bucket probe would read nothing from them and
-                # silently re-enqueue seen URLs — refuse instead
-                want_dsk = [cfg.disk_seen_buckets]
-                got = catalog.read_metrics(catalog.last_round()).get("disk_seen_cfg")
-                if got != want_dsk:
+                checks.append(("checkpoint", catalog.read_metrics(catalog.last_round())))
+            for what, meta in checks:
+                if meta.get("disk_seen_cfg") != [cfg.disk_seen_buckets]:
                     raise ValueError(
-                        f"disk_seen resume: checkpoint was written with "
-                        f"disk_seen_cfg={got!r}, this run wants {want_dsk!r} "
-                        "— bucket layouts are incompatible; re-crawl or "
-                        "match disk_seen_buckets")
-        if cfg.seen_filter == "cuckoo":
+                        f"disk_seen resume: {what} was written with disk_seen_cfg="
+                        f"{meta.get('disk_seen_cfg')!r}, this run wants "
+                        f"{[cfg.disk_seen_buckets]!r} — bucket layouts are "
+                        "incompatible; re-crawl or match disk_seen_buckets")
+        # prefilter state. Disk path: the gate reads and rewrites its own
+        # blobs task-side (one per disk bucket, diskseen.filter_gate);
+        # the driver only tracks which committed round holds them — a
+        # checkpoint with another blob layout is rebuilt from seen.
+        # In-memory path: a (bucket, filter) frame folded every round.
+        bloom_cfg = filters = filter_dir = None
+        if cfg.bloom_seen and cfg.disk_seen:
+            from ..operators import diskseen as _dsk
+            bloom_cfg = _dsk.filter_config(cfg.seen_filter, cfg.disk_seen_buckets,
+                                           cfg.bloom_buckets * cfg.bloom_bits)
+            filter_record = _dsk.layout_record(bloom_cfg)
+            last = catalog.last_round() if resume else None
+            if last is not None and catalog.read_metrics(last).get(
+                    "seen_filter_cfg") == filter_record:
+                filter_dir = catalog.round_table_dir(last, "seen_filters")
+        elif cfg.bloom_seen:
             from ..operators import cuckoo as _fmod
-            _mk_filter_cfg = _fmod.CuckooConfig
-        elif cfg.seen_filter == "bloom":
-            from ..operators import seen as _fmod
-            _mk_filter_cfg = BloomConfig
-        else:
-            raise ValueError(f"unknown seen_filter: {cfg.seen_filter!r}")
-        bloom_cfg = _mk_filter_cfg(cfg.bloom_buckets, cfg.bloom_bits) if cfg.bloom_seen else None
-        filters: DataFrame | None = None
-        if cfg.bloom_seen:
-            persisted = None
+            if cfg.seen_filter == "bloom":
+                from ..operators import seen as _fmod
+            elif cfg.seen_filter != "cuckoo":
+                raise ValueError(f"unknown seen_filter: {cfg.seen_filter!r}")
+            bloom_cfg = (_fmod.CuckooConfig if cfg.seen_filter == "cuckoo"
+                         else BloomConfig)(cfg.bloom_buckets, cfg.bloom_bits)
+            filter_record = [cfg.seen_filter, cfg.bloom_buckets, cfg.bloom_bits]
             if resume and catalog is not None and catalog.last_round() is not None:
                 # the committed seen_filters cover exactly the committed
                 # seen set (folded pre-commit), so a matching-config
-                # resume loads the blobs instead of rebuilding from the
-                # full seen history — at the 10^10-URL design point the
-                # rebuild is a full-table scan, the load is ~MBs/bucket
+                # resume loads the blobs instead of rebuilding them
                 last = catalog.last_round()
-                want = [cfg.seen_filter, cfg.bloom_buckets, cfg.bloom_bits]
-                if catalog.read_metrics(last).get("seen_filter_cfg") == want:
+                if catalog.read_metrics(last).get("seen_filter_cfg") == filter_record:
                     try:
-                        persisted = catalog.read(spark, last, "seen_filters")
+                        filters = catalog.read(spark, last, "seen_filters")
                         if seeds:
                             # extra resume seeds joined `seen` above, so
                             # they must enter the blobs too — a filter
                             # miss bypasses the exact anti-join entirely
-                            persisted = _fmod.build_filters(
+                            filters = _fmod.build_filters(
                                 spark.createDataFrame([(s,) for s in seeds],
                                                       "url string"),
-                                bloom_cfg, existing=persisted)
-                        persisted = persisted.localCheckpoint(eager=True)
+                                bloom_cfg, existing=filters)
+                        filters = filters.localCheckpoint(eager=True)
                     except Exception:  # noqa: BLE001 — older checkpoint layout
-                        persisted = None
-            filters = persisted if persisted is not None else \
-                _fmod.build_filters(seen_parts[0], bloom_cfg).localCheckpoint(eager=True)
+                        filters = None
+            if filters is None:
+                filters = _fmod.build_filters(seen_parts[0], bloom_cfg).localCheckpoint(eager=True)
         total_skipped = 0
         politeness = (cfg.host_quota is not None or cfg.default_quota is not None
                       or cfg.global_cap is not None)
@@ -764,7 +781,8 @@ def crawl(
             )
 
             # --- first-wins intra-round dedup + anti-join the seen set --------
-            seen = seen_parts[0]
+            new_filters = gate_obs = None  # set by the disk gate
+            seen = seen_parts[0] if seen_parts else None
             for p in seen_parts[1:]:
                 seen = seen.unionByName(p)
             cand = links.select(
@@ -793,15 +811,17 @@ def crawl(
             elif cfg.disk_seen:
                 # 10^10 exact path: seen stays in its persisted _ub bucket
                 # layout and is read task-side — the only exchange ships
-                # the candidates + a 4-byte bucket key (diskseen.py)
+                # the candidates + a 4-byte bucket key; with a prefilter
+                # the same bucket tasks also probe and extend the blobs
+                # (diskseen.py)
                 from ..operators import diskseen as _dsk
-                deduped = _fw(cand)
-                new = _dsk.disk_seen_anti_join(
-                    deduped,
+                gate = _dsk.disk_seen_anti_join(
+                    _fw(cand),
                     seeds_table_dirs + catalog.table_paths("seen_delta"),
-                    cfg.disk_seen_buckets, filters, bloom_cfg,
+                    cfg.disk_seen_buckets, bloom_cfg, filter_dir,
                     extra_seen=seeds_seen_small,
                 )
+                new, new_filters, gate_obs = gate.new, gate.filters, gate.observation
             else:
                 deduped = _fw(cand)
                 if filters is None:
@@ -815,25 +835,6 @@ def crawl(
                                        "left_anti")
                 else:
                     new = _fmod.seen_anti_join(deduped, seen, filters, bloom_cfg)
-
-            if _DEBUG and order_counter > 0:
-                # sub-phase attribution of the extract_dedup span (debug
-                # only — each noop re-runs the chain prefix, so the deltas
-                # are the incremental costs of canonicalize / anti-join /
-                # first-wins; the real path below is untouched). On the
-                # broadcast path `cand` already carries the anti-join; on
-                # the shuffled path the order is dedup-then-anti.
-                links.write.format("noop").mode("overwrite").save()
-                tick("dbg_canonicalize")
-                if order_counter <= cfg.broadcast_seen_max_urls:
-                    cand.write.format("noop").mode("overwrite").save()
-                    tick("dbg_plus_anti")
-                elif not cfg.disk_seen:
-                    _fw(cand) \
-                        .write.format("noop").mode("overwrite").save()
-                    tick("dbg_plus_dedup1")
-                new.write.format("noop").mode("overwrite").save()
-                tick("dbg_plus_rest")
 
             # --- assign global crawl order (FIFO enqueue order). ONE fused
             # materialization: with_global_order eagerly checkpoints the
@@ -849,7 +850,6 @@ def crawl(
                 num_partitions=cfg.frontier_partitions,
             )
             tick("extract_dedup_ckpt")
-            tick("order_counts")
             n_new = order_counter - prev_counter
             new_frontier = new.select("url", "depth", "order")
             if has_attempt:
@@ -892,8 +892,8 @@ def crawl(
                 **({"deferred": n_deferred} if politeness else {}),
                 # lets resume/maintenance validate the persisted
                 # seen_filters blobs before trusting them
-                **({"seen_filter_cfg": [cfg.seen_filter, cfg.bloom_buckets,
-                                        cfg.bloom_bits]} if cfg.bloom_seen else {}),
+                **({"seen_filter_cfg": filter_record}
+                   if filters is not None or new_filters is not None else {}),
                 # lets a disk_seen resume validate the persisted bucket
                 # layout before trusting it
                 **({"disk_seen_cfg": [cfg.disk_seen_buckets]}
@@ -910,7 +910,7 @@ def crawl(
             })
             total_skipped += skipped_depth + int(blocked_robots)
 
-            if cfg.bloom_seen:
+            if filters is not None:
                 # fold the round's delta BEFORE the commit so the
                 # persisted seen_filters cover exactly the committed
                 # seen set — a resume can then load the blobs directly
@@ -954,14 +954,25 @@ def crawl(
                     "seen_delta": sd,
                     "lineage": lineage,
                 }
-                if cfg.bloom_seen:
+                if filters is not None:
                     tables["seen_filters"] = filters
+                elif new_filters is not None:
+                    tables["seen_filters"] = new_filters
+                    pb["seen_filters"] = ["_ub"]
+                # the gate's filter counts are observed on its blob write
                 catalog.commit_round(round_idx, tables, m,
-                                     partition_by=pb or None)
+                                     partition_by=pb or None, observed=gate_obs)
+                # the next gate reads the blobs this round just committed;
+                # a round without them (broadcast path) leaves none
+                filter_dir = (catalog.round_table_dir(round_idx, "seen_filters")
+                              if new_filters is not None else None)
                 # re-read from storage: snapshot-isolated resume point
                 frontier = catalog.read(spark, round_idx, "next_frontier").drop("_hb")
-                seen_parts.append(
-                    catalog.read(spark, round_idx, "seen_delta").select("url"))
+                if keeps_seen_frames():
+                    seen_parts.append(
+                        catalog.read(spark, round_idx, "seen_delta").select("url"))
+                else:
+                    seen_parts = []
                 if cfg.compact_seen_every > 0 and \
                         (round_idx + 1) % cfg.compact_seen_every == 0:
                     catalog.compact(spark, "seen_delta", vacuum=True)
@@ -975,17 +986,13 @@ def crawl(
                     # fold cannot perturb resume state.
                     catalog.compact(spark, "results", vacuum=True)
                     catalog.compact(spark, "lineage", vacuum=True)
+                    # resume, maintenance and the next gate read only the
+                    # last round's prefilter blobs: older ones are dead
+                    catalog.drop_superseded("seen_filters")
                     # the old seen_parts entries lazily reference the
-                    # just-vacuumed delta dirs — rebuild from the
-                    # snapshot (+ seeds, which never enter any delta)
-                    seen_parts = [catalog.read_union(spark, "seen_delta")
-                                  .select("url")]
-                    if seeds:
-                        seen_parts.append(spark.createDataFrame(
-                            [(s,) for s in seeds], "url string"))
-                    if catalog.has_table("seeds"):
-                        seen_parts.append(
-                            catalog.read_table(spark, "seeds").select("url"))
+                    # just-vacuumed delta dirs — rebuild from the snapshot
+                    if seen_parts:
+                        seen_parts = [committed_seen()]
                     tick("seen_compact")
             else:
                 results_parts.append(results_r)
@@ -1008,22 +1015,13 @@ def crawl(
             round_idx += 1
 
         if catalog is not None:
-            if catalog.committed_rounds():
-                results = catalog.read_union(spark, "results")
-                seen_df = catalog.read_union(spark, "seen_delta").select("url")
-            else:
-                # interrupted before any round committed (e.g. a
-                # max_rounds=0 probe of a DataFrame-seeded setup): the
-                # seed table below is the only state
-                results = spark.createDataFrame([], T.StructType(
-                    [T.StructField(c, T.StringType()) for c in RESULT_COLUMNS]))
-                seen_df = spark.createDataFrame([], "url string")
-            if seeds:
-                seen_df = seen_df.unionByName(
-                    spark.createDataFrame([(s,) for s in seeds], "url string"))
-            if catalog.has_table("seeds"):
-                seen_df = seen_df.unionByName(
-                    catalog.read_table(spark, "seeds").select("url"))
+            # interrupted before any round committed (e.g. a max_rounds=0
+            # probe of a DataFrame-seeded setup): the seeds are all state
+            results = (catalog.read_union(spark, "results")
+                       if catalog.committed_rounds()
+                       else spark.createDataFrame([], T.StructType(
+                           [T.StructField(c, T.StringType()) for c in RESULT_COLUMNS])))
+            seen_df = committed_seen()
         else:
             results = results_parts[0] if results_parts else spark.createDataFrame([], T.StructType(
                 [T.StructField(c, T.StringType()) for c in RESULT_COLUMNS]))

@@ -21,6 +21,9 @@ operations become first-class:
   remove_urls — safe because every retired URL was inserted), while a
   bloom cannot unset bits and must REBUILD from the surviving seen
   rows — the concrete reason the north_rule names both structures.
+  Blobs in the disk layout (one per disk bucket, diskseen.py) are
+  deleted from / rebuilt under the same bucket key and task-side
+  hashes the crawl's seen gate inserts with.
 
 Both commit a normal catalog round (marker-last atomicity), so a
 crashed maintenance run is invisible and ``crawl(..., resume=True)``
@@ -58,10 +61,11 @@ def _zero_metrics(round_idx: int, order_counter: int, **extra) -> dict:
 
 
 def _load_filter_state(spark, cat: RoundCatalog, last: int):
-    """(kind, cfg, filters_df) from the last committed round, or
-    (None, None, None) when blobs were not persisted there."""
-    m = cat.read_metrics(last)
-    fc = m.get("seen_filter_cfg")
+    """(cfg, filters_df, partition_by) from the last committed round, or
+    (None, None, None) when blobs were not persisted there. A 4-field
+    seen_filter_cfg marks the disk layout: one (_ub, filter) blob per
+    disk bucket, committed partitioned by _ub."""
+    fc = cat.read_metrics(last).get("seen_filter_cfg")
     if not fc:
         return None, None, None
     kind, n_buckets, m_bits = fc[0], int(fc[1]), int(fc[2])
@@ -69,11 +73,14 @@ def _load_filter_state(spark, cat: RoundCatalog, last: int):
         filters = cat.read(spark, last, "seen_filters")
     except Exception:  # noqa: BLE001 — blobs absent in this layout
         return None, None, None
+    if len(fc) > 3:
+        from ..operators.diskseen import filter_config
+        return filter_config(kind, n_buckets, n_buckets * m_bits), filters, ["_ub"]
     if kind == "cuckoo":
         from ..operators.cuckoo import CuckooConfig
-        return kind, CuckooConfig(n_buckets, m_bits), filters
+        return CuckooConfig(n_buckets, m_bits), filters, None
     from ..operators.seen import BloomConfig
-    return kind, BloomConfig(n_buckets, m_bits), filters
+    return BloomConfig(n_buckets, m_bits), filters, None
 
 
 def requeue_urls(spark: SparkSession, checkpoint_dir: str, urls,
@@ -113,7 +120,7 @@ def requeue_urls(spark: SparkSession, checkpoint_dir: str, urls,
     n_requeued = new_counter - order_counter
 
     tables = {"next_frontier": merged}
-    kind, fcfg, filters = _load_filter_state(spark, cat, last)
+    _, filters, fpb = _load_filter_state(spark, cat, last)
     if filters is not None:
         tables["seen_filters"] = filters  # carry forward unchanged
     mm = _zero_metrics(last + 1, new_counter, maintenance="requeue",
@@ -122,7 +129,8 @@ def requeue_urls(spark: SparkSession, checkpoint_dir: str, urls,
                           if m.get("seen_filter_cfg") else {}),
                        **({"disk_seen_cfg": m["disk_seen_cfg"]}
                           if m.get("disk_seen_cfg") else {}))
-    cat.commit_round(last + 1, tables, mm)
+    cat.commit_round(last + 1, tables, mm,
+                     partition_by={"seen_filters": fpb} if fpb else None)
     return {"requeued": n_requeued, "round": last + 1}
 
 
@@ -156,15 +164,28 @@ def retire_urls(spark: SparkSession, checkpoint_dir: str, urls) -> dict:
         .localCheckpoint(eager=True)
     n_retired = retire.count()
 
-    kind, fcfg, filters = _load_filter_state(spark, cat, last)
+    fcfg, filters, fpb = _load_filter_state(spark, cat, last)
 
     # snapshot = (all committed seen) minus retired; vacuums the deltas
     # it covers so resume reads one snapshot + post-maintenance deltas
     cat.compact(spark, "seen_delta", minus=retire, vacuum=True)
 
     tables = {"next_frontier": frontier}
-    if filters is not None:
-        if kind == "cuckoo":
+    if filters is not None and fpb:
+        from ..operators import diskseen
+        if fcfg.kind == "cuckoo":
+            tables["seen_filters"] = diskseen.remove_urls(filters, retire, fcfg)
+        else:
+            # the disk gate with no blobs to read rebuilds each bucket's
+            # blob from its surviving seen rows (the seed table's too)
+            dirs = cat.table_paths("seen_delta")
+            if cat.has_table("seeds"):
+                dirs.append(cat.table_dir("seeds"))
+            tables["seen_filters"] = diskseen.disk_seen_anti_join(
+                spark.createDataFrame([], "url string"), dirs, fcfg.n_buckets,
+                fcfg, None).filters
+    elif filters is not None:
+        if fcfg.kind == "cuckoo":
             from ..operators.cuckoo import remove_urls
             tables["seen_filters"] = remove_urls(filters, retire, fcfg)
         else:
@@ -178,6 +199,7 @@ def retire_urls(spark: SparkSession, checkpoint_dir: str, urls) -> dict:
                           if m.get("seen_filter_cfg") else {}),
                        **({"disk_seen_cfg": m["disk_seen_cfg"]}
                           if m.get("disk_seen_cfg") else {}))
-    cat.commit_round(last + 1, tables, mm)
+    cat.commit_round(last + 1, tables, mm,
+                     partition_by={"seen_filters": fpb} if fpb else None)
     return {"retired": n_retired, "skipped_pending": n_pending,
             "round": last + 1}

@@ -45,6 +45,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("URLMAP_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # static: Spark's default of 100 generated classes is below what
+        # one crawl generates, so every round evicted classes the next
+        # round needed again (the benchmark crawl compiled ~460 classes
+        # at 100 entries, ~200 at 4096)
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # PySpark 4 otherwise walks the Python stack and makes three
+        # py4j calls on every DataFrame/Column API call to record its
+        # call site for error messages: ~2.5 ms a call, ~2.7 s of driver
+        # time per benchmark crawl, which builds its plans call by call
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -22,7 +22,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 
 class RoundCatalog:
@@ -46,12 +46,15 @@ class RoundCatalog:
         return rs[-1] if rs else None
 
     def commit_round(self, r: int, tables: dict[str, DataFrame], metrics: dict,
-                     partition_by: dict[str, list[str]] | None = None) -> None:
+                     partition_by: dict[str, list[str]] | None = None,
+                     observed: Observation | None = None) -> None:
         """Write all tables + metrics, then the commit marker (atomic-ish:
         a reader only trusts rounds with the marker). partition_by maps a
         table name to its on-disk partition columns (e.g. the frontier's
         host-hash bucket — north_rule: a frontier partitioned by
-        host-hash, so per-host maintenance reads prune at scan time)."""
+        host-hash, so per-host maintenance reads prune at scan time).
+        observed: an Observation on one of the tables; its values join
+        `metrics` (in place) once the table writes have fired it."""
         rdir = self._rdir(r)
         if os.path.exists(rdir):  # uncommitted leftover from a crash
             shutil.rmtree(rdir)
@@ -62,6 +65,8 @@ class RoundCatalog:
             if cols:
                 w = w.partitionBy(*cols)
             w.parquet(os.path.join(rdir, name))
+        if observed is not None:
+            metrics.update(observed.get)
         tmp = os.path.join(rdir, ".metrics.tmp")
         with open(tmp, "w") as f:
             json.dump(metrics, f)
@@ -71,8 +76,18 @@ class RoundCatalog:
         open(mtmp, "w").close()
         os.replace(mtmp, os.path.join(rdir, "_COMMITTED"))
 
+    def round_table_dir(self, r: int, name: str) -> str:
+        return os.path.join(self._rdir(r), name)
+
     def read(self, spark: SparkSession, r: int, name: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self._rdir(r), name))
+        return spark.read.parquet(self.round_table_dir(r, name))
+
+    def drop_superseded(self, name: str) -> None:
+        """Delete table `name` from every committed round but the last —
+        for state whose readers only ever take the last round's copy
+        (the seen prefilter blobs: each round commits a full set)."""
+        for r in self.committed_rounds()[:-1]:
+            shutil.rmtree(self.round_table_dir(r, name), ignore_errors=True)
 
     # --- named (non-round) tables -------------------------------------------
     # Crawl-lifetime state that belongs to the whole run rather than any
@@ -123,14 +138,19 @@ class RoundCatalog:
     def _cdir(self, name: str) -> str:
         return os.path.join(self.root, "compact", name)
 
-    def _compact_version(self, name: str) -> int | None:
-        """Highest committed compaction round for `name`, or None."""
+    def _snapshot(self, name: str) -> tuple[int, int, str] | None:
+        """Newest committed compaction snapshot of `name` as (round it
+        covers, sequence, dir), or None. A second compaction at the same
+        round (e.g. retirement right after an inline compaction) writes
+        v=<round>.<seq> next to the snapshot it reads."""
         base = self._cdir(name)
         if not os.path.isdir(base):
             return None
-        vs = [int(d[2:]) for d in os.listdir(base)
-              if d.startswith("v=")
-              and os.path.exists(os.path.join(base, d, "_COMMITTED"))]
+        vs = []
+        for d in os.listdir(base):
+            if d.startswith("v=") and os.path.exists(os.path.join(base, d, "_COMMITTED")):
+                r, _, k = d[2:].partition(".")
+                vs.append((int(r), int(k or 0), os.path.join(base, d)))
         return max(vs) if vs else None
 
     def compact(self, spark: SparkSession, name: str = "seen_delta",
@@ -167,7 +187,12 @@ class RoundCatalog:
             df = df.join(minus.select(minus_key), minus_key, "left_anti")
         if num_files:
             df = df.coalesce(num_files)
-        vdir = os.path.join(self._cdir(name), f"v={last:04d}")
+        # never overwrite the committed snapshot this one reads from:
+        # the deltas it covers may already be vacuumed
+        prev = self._snapshot(name)
+        seq = prev[1] + 1 if prev is not None and prev[0] == last else 0
+        vdir = os.path.join(self._cdir(name),
+                            f"v={last:04d}" + (f".{seq}" if seq else ""))
         if os.path.exists(vdir):  # crashed previous attempt
             shutil.rmtree(vdir)
         w = df.write.mode("overwrite")
@@ -185,7 +210,7 @@ class RoundCatalog:
                         shutil.rmtree(tdir)
             # older snapshots are fully covered by the new one
             for d in os.listdir(self._cdir(name)):
-                if d.startswith("v=") and int(d[2:]) != last:
+                if d.startswith("v=") and os.path.join(self._cdir(name), d) != vdir:
                     shutil.rmtree(os.path.join(self._cdir(name), d))
         return last
 
@@ -198,10 +223,10 @@ class RoundCatalog:
         if upto is not None:
             rs = [r for r in rs if r <= upto]
         paths = []
-        cv = self._compact_version(name)
-        if cv is not None and (upto is None or cv <= upto):
-            paths.append(os.path.join(self._cdir(name), f"v={cv:04d}", "data"))
-            rs = [r for r in rs if r > cv]
+        snap = self._snapshot(name)
+        if snap is not None and (upto is None or snap[0] <= upto):
+            paths.append(os.path.join(snap[2], "data"))
+            rs = [r for r in rs if r > snap[0]]
         paths += [os.path.join(self._rdir(r), name) for r in rs
                   if os.path.exists(os.path.join(self._rdir(r), name))]
         return paths

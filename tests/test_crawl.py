@@ -440,3 +440,66 @@ def test_packed_first_wins_equals_struct_fallback(spark, monkeypatch):
     a = [(r["url"], r["depth"], r["order"]) for r in packed.results.orderBy("order").collect()]
     b = [(r["url"], r["depth"], r["order"]) for r in fallback.results.orderBy("order").collect()]
     assert a == b and len(a) > 10
+
+
+def test_resume_from_checkpoint_without_schema_records(spark, tmp_path):
+    """Every committed table dir records its schema, so reading it back
+    runs no Spark job; a checkpoint written without those records (an
+    older layout) resumes by schema inference to the same crawl."""
+    import glob
+    import os
+
+    from urlmap_spark.sources.catalog import SCHEMA_FILE, RoundCatalog
+
+    cdf = spark.createDataFrame(
+        C.corpus_pandas(seed=42, n_hosts=4, total_pages=60, with_bytes=False))
+    seed = "https://h0.example-42.test/"
+
+    def cfg(ck, **kw):
+        return CrawlConfig(max_depth=3, same_path_prefix=False, checkpoint_dir=ck,
+                           default_quota=2, disk_seen=True, disk_seen_buckets=4,
+                           broadcast_seen_max_urls=0, compact_seen_every=2, **kw)
+
+    full = crawl(spark, cdf, seed, cfg(str(tmp_path / "full")))
+    expect = [(r["url"], r["depth"], r["order"]) for r in full.results.orderBy("order").collect()]
+
+    ck = str(tmp_path / "ck")
+    crawl(spark, cdf, seed, cfg(ck, max_rounds=3))
+    cat = RoundCatalog(ck)
+    sc = spark.sparkContext._jsc.sc()
+    j0 = sc.dagScheduler().nextJobId()
+    nf = cat.read(spark, cat.last_round(), "next_frontier")
+    seen = cat.read_union(spark, "seen_delta")
+    assert sc.dagScheduler().nextJobId() == j0
+    assert {"url", "depth", "order", "_hb"} <= set(nf.columns)
+    assert set(seen.columns) == {"url", "_ub"}
+
+    records = glob.glob(os.path.join(ck, "**", SCHEMA_FILE), recursive=True)
+    assert records
+    for p in records:
+        os.remove(p)
+    resumed = crawl(spark, cdf, seed, cfg(ck), resume=True)
+    got = [(r["url"], r["depth"], r["order"]) for r in resumed.results.orderBy("order").collect()]
+    assert got == expect
+    strip = [{k: v for k, v in m.items() if k not in ("wall_s", "urls_per_sec")}
+             for m in resumed.metrics]
+    assert strip == [{k: v for k, v in m.items() if k not in ("wall_s", "urls_per_sec")}
+                     for m in full.metrics]
+
+
+def test_commit_round_failed_write_leaves_round_uncommitted(spark, tmp_path):
+    """commit_round writes its tables concurrently; a table whose write
+    fails surfaces its error and the round gets no commit marker, so a
+    resume never trusts it. A later commit of the same round succeeds."""
+    from urlmap_spark.sources.catalog import RoundCatalog
+
+    cat = RoundCatalog(str(tmp_path))
+    good = spark.range(5)
+    bad = spark.range(5).select(
+        F.expr("if(id >= 0, cast(raise_error('boom') as bigint), id)").alias("id"))
+    with pytest.raises(Exception, match="boom"):
+        cat.commit_round(0, {"a": good, "b": bad, "c": good}, {"round": 0})
+    assert cat.committed_rounds() == []
+    cat.commit_round(0, {"a": good, "b": good}, {"round": 0})
+    assert cat.committed_rounds() == [0]
+    assert cat.read(spark, 0, "b").count() == 5

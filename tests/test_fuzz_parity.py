@@ -239,7 +239,10 @@ def _py_robots_allowed(lines: list[str], user_agent: str, path: str) -> bool:
 @given(lines=st.lists(_ROBOT_LINE, min_size=0, max_size=14),
        paths=st.lists(_ROBOT_PATH, min_size=1, max_size=8, unique=True))
 def test_robots_parse_gate_fuzzed(spark, lines, paths):
-    from urlmap_spark.operators.robots import parse_robots, robots_gate
+    """The gate over the parsed rules and over their once-built per-host
+    fold (host_rule_lists, what the crawl passes every round) both equal
+    the independent matcher."""
+    from urlmap_spark.operators.robots import host_rule_lists, parse_robots, robots_gate
 
     host = "rfz.test"
     raw = spark.createDataFrame(
@@ -248,11 +251,12 @@ def test_robots_parse_gate_fuzzed(spark, lines, paths):
     rules, _, _ = parse_robots(raw, user_agent="urlmap/1.0")
     frontier = spark.createDataFrame(
         [(f"https://{host}{p}",) for p in paths], "url string")
-    got = {r["url"]: r["robots_allowed"]
-           for r in robots_gate(frontier, rules).collect()}
     want = {f"https://{host}{p}":
             _py_robots_allowed(lines, "urlmap/1.0", p) for p in paths}
-    assert got == want
+    for r in (rules, host_rule_lists(rules)):
+        got = {row["url"]: row["robots_allowed"]
+               for row in robots_gate(frontier, r).collect()}
+        assert got == want
 
 
 UNI_HREFS = [

@@ -200,3 +200,37 @@ def test_global_cap_has_no_partitionless_window(spark):
         # a partitionless window compiles to an Exchange SinglePartition
         # feeding the Window — the plan must have none anywhere
         assert "SinglePartition" not in plan, plan
+
+
+def test_flagged_schedule_matches_reference(spark):
+    """schedule_frontier(flag_col=...) flags every row once, and the
+    flagged rows are exactly the straightforward ranking's picks: per
+    host the `quota` best by (priority desc, order), then the global cap
+    over those. Without a global cap the flags come from one window
+    chain: two exchanges, no union, no partitionless window — even with
+    a Zipf-hot host."""
+    rows = [(f"https://hot.test/p{i}", 1 + i % 3, i) for i in range(600)]
+    rows += [(f"https://c{i % 7}.test/p{i}", 1 + i % 2, 600 + i) for i in range(60)]
+    fr = _frontier(spark, rows).withColumn("prio", F.col("depth") % 2)
+    pdf = fr.toPandas()
+    pdf["host"] = pdf["url"].str.extract(r"https://([^/]+)/")[0]
+    quota = spark.createDataFrame([("c3.test", 1), ("hot.test", 40)], "host string, quota int")
+    qmap = {"c3.test": 1, "hot.test": 40}
+    for kw in (dict(default_quota=4), dict(host_quota=quota, default_quota=2),
+               dict(default_quota=4, priority_col="prio"),
+               dict(global_cap=25), dict(default_quota=5, global_cap=30, priority_col="prio")):
+        key = (["prio", "order"], [False, True]) if "priority_col" in kw else (["order"], [True])
+        ranked = pdf.sort_values(key[0], ascending=key[1])
+        if "default_quota" in kw:
+            q = ranked["host"].map(qmap if "host_quota" in kw else {}).fillna(kw["default_quota"])
+            ranked = ranked[ranked.groupby("host").cumcount() < q]
+        if "global_cap" in kw:
+            ranked = ranked.head(kw["global_cap"])
+        flagged = schedule_frontier(fr, n_salts=8, flag_col="_s", **kw)
+        plan = flagged._jdf.queryExecution().executedPlan().toString()  # before it runs
+        assert flagged.columns == fr.columns + ["_s"]
+        got = sorted((r["order"], r["_s"]) for r in flagged.collect())
+        assert got == sorted((o, o in set(ranked["order"])) for o in pdf["order"]), kw
+        if "global_cap" not in kw:
+            assert "Union" not in plan and "SinglePartition" not in plan, plan
+            assert plan.count("Exchange hashpartitioning") == 2, plan

@@ -4,7 +4,7 @@
 import pandas as pd
 from pyspark.sql import functions as F
 
-from urlmap_spark.operators.robots import parse_robots, robots_gate
+from urlmap_spark.operators.robots import host_rule_lists, parse_robots, robots_gate
 
 ROBOTS_TXT = """User-agent: *
 Disallow: /admin/
@@ -82,6 +82,64 @@ def test_gate_length_tie_first_rule_in_file_order_wins(spark):
         "url string, depth int, `order` long")
     out = {r["url"]: r["robots_allowed"] for r in robots_gate(frontier, rules).collect()}
     assert out == {"https://h.test/a": False, "https://g.test/a": True}
+
+
+def test_gate_wildcard_length_tie(spark):
+    """A trailing '*' counts toward the pattern length (robots.go:214
+    compares len(rule.path)): 'Disallow: /a*' and 'Allow: /ab' tie at 3,
+    so the earlier line wins whichever directive it carries; the
+    longer '/ab*' (4) beats both."""
+    frontier = spark.createDataFrame(
+        [("https://h.test/abc", 0, 0), ("https://g.test/abc", 0, 1),
+         ("https://k.test/abc", 0, 2), ("https://h.test/ax", 0, 3)],
+        "url string, depth int, `order` long")
+    rules = spark.createDataFrame(
+        [("h.test", "*", "Disallow", "/a*", 1), ("h.test", "*", "Allow", "/ab", 2),
+         ("g.test", "*", "Allow", "/ab", 1), ("g.test", "*", "Disallow", "/a*", 2),
+         ("k.test", "*", "Allow", "/ab", 1), ("k.test", "*", "Disallow", "/a*", 2),
+         ("k.test", "*", "Disallow", "/ab*", 3)],
+        "host string, user_agent string, directive string, path string, lineno int")
+    want = {"https://h.test/abc": False, "https://g.test/abc": True,
+            "https://k.test/abc": False, "https://h.test/ax": False}
+    for r in (rules, host_rule_lists(rules)):
+        assert {x["url"]: x["robots_allowed"]
+                for x in robots_gate(frontier, r).collect()} == want
+
+
+def test_gate_without_lineno_tie_allows(spark):
+    """Rules without a lineno column (ad-hoc tables) rank a length tie
+    as all-equal, and Allow then wins — deterministically, whatever the
+    row order of the rule table."""
+    frontier = spark.createDataFrame(
+        [("https://h.test/a", 0, 0), ("https://h.test/b", 0, 1)],
+        "url string, depth int, `order` long")
+    for rows in ([("h.test", "*", "Disallow", "/a"), ("h.test", "*", "Allow", "/a")],
+                 [("h.test", "*", "Allow", "/a"), ("h.test", "*", "Disallow", "/a")]):
+        rules = spark.createDataFrame(
+            rows + [("h.test", "*", "Disallow", "/b")],
+            "host string, user_agent string, directive string, path string")
+        got = {x["url"]: x["robots_allowed"] for x in robots_gate(frontier, rules).collect()}
+        assert got == {"https://h.test/a": True, "https://h.test/b": False}
+
+
+def test_gate_keeps_rows_and_columns_without_exchange(spark):
+    """The gate is a broadcast join plus a projection: every frontier row
+    (duplicates included) and column comes out, and the plan holds no
+    shuffle exchange."""
+    frontier = spark.createDataFrame(
+        [("https://h.test/a", 0, 0, "x"), ("https://h.test/a", 0, 0, "x"),
+         ("https://u.test/a", 1, 1, None)],
+        "url string, depth int, `order` long, extra string")
+    rules = spark.createDataFrame(
+        [("h.test", "*", "Disallow", "/a", 1)],
+        "host string, user_agent string, directive string, path string, lineno int")
+    gated = robots_gate(frontier, host_rule_lists(rules).localCheckpoint(eager=True))
+    assert gated.columns == frontier.columns + ["robots_allowed"]
+    assert sorted(tuple(r) for r in gated.collect()) == [
+        ("https://h.test/a", 0, 0, "x", False), ("https://h.test/a", 0, 0, "x", False),
+        ("https://u.test/a", 1, 1, None, True)]
+    plan = gated._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "hashpartitioning" not in plan
 
 
 def test_gate_longest_match_and_wildcards(spark):

@@ -7,9 +7,16 @@ re-shuffled EVERY round, which dwarfs the per-round candidate volume.
 This operator removes the seen side from the shuffle entirely:
 
     candidates --repartition on _ub = pmod(xxhash64(url), B)-->
-        one applyInPandas task per bucket reads ONLY that bucket's
+        one applyInPandas call per bucket reads ONLY that bucket's
         seen parquet files (written partitioned by _ub) straight from
         storage with pyarrow and anti-joins in pandas.
+
+The grouping exchange is a plain groupBy, so AQE may coalesce a small
+round's buckets into fewer tasks (at bench scale all B buckets run in
+one task, one call after another); a big round keeps its partitions.
+An explicit-count ``repartition(B, "_ub")``, which AQE leaves alone,
+was measured slower on the bench crawl (more Python workers, more CPU
+and memory for sub-second bucket work), so the grouping stays plain.
 
 Seen bytes move disk -> task memory, never through an exchange; the
 only shuffle ships the candidates plus a 4-byte bucket key. This is

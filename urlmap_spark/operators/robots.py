@@ -8,11 +8,15 @@ The group-tracking (order-dependent in Go) becomes a last-non-null
 window over line numbers — fully distributed.
 
 Gating mirrors IsAllowed (robots.go:49-78 + checkRules :208-225 +
-pathMatches :228-252): broadcast-join frontier->rules on host, prefix
-match (with trailing-* wildcard), LONGEST matching rule path wins —
-with the FIRST rule in file order winning a length tie (checkRules
-uses a strict `>` while scanning in file order, robots.go:214-221) —
-default allow, fail-open for hosts with no rules.
+pathMatches :228-252): prefix match (with trailing-* wildcard), LONGEST
+matching rule path wins — with the FIRST rule in file order winning a
+length tie (checkRules uses a strict `>` while scanning in file order,
+robots.go:214-221) — default allow, fail-open for hosts with no rules.
+The rules are folded ONCE into one row per host holding its rules in
+precedence order (``host_rule_lists``); the gate broadcast-joins those
+lists on host and keeps the first rule whose stem prefixes the path
+(a higher-order ``filter``), so it adds no exchange to the frontier's
+plan and preserves every frontier row and column.
 """
 
 from __future__ import annotations
@@ -82,47 +86,48 @@ def parse_robots(
     return rules, delays, sitemaps
 
 
-def path_matches_expr(pattern, url_path):
-    """pathMatches (reference: robots.go:228-252): empty pattern never
-    matches; trailing '*' = prefix on the stem; otherwise prefix match."""
+def host_rule_lists(rules: DataFrame) -> DataFrame:
+    """rules(host, directive, path[, lineno]) -> (_host, _rules): one row
+    per host, its rules as array<struct<l, nl, a, stem>> sorted in
+    precedence order — pattern length (a trailing ``*`` counts)
+    descending, then ``lineno`` ascending, then Allow before Disallow —
+    so the first rule that matches a path is the one IsAllowed keeps.
+    Empty patterns never match (robots.go:229) and are dropped here.
+    Rules without a ``lineno`` column (ad-hoc rule tables) tie-break as
+    all-equal, so a length tie goes to Allow. Build it once and pass it
+    to ``robots_gate`` in place of the rules to skip the per-call fold.
+    """
+    lineno = F.col("lineno") if "lineno" in rules.columns else F.lit(0)
+    pattern = F.col("path")
     wildcard = pattern.endswith("*")
-    stem = F.when(wildcard, F.substring(pattern, F.lit(1), F.length(pattern) - 1)).otherwise(pattern)
-    return (pattern != "") & url_path.startswith(stem)
+    return (
+        rules.filter(pattern.isNotNull() & (pattern != ""))
+        .groupBy(F.col("host").alias("_host"))
+        .agg(F.sort_array(F.collect_list(F.struct(
+            F.length(pattern).alias("l"),
+            (-lineno).alias("nl"),
+            (F.col("directive") == "Allow").alias("a"),
+            F.when(wildcard, F.expr("substring(path, 1, length(path) - 1)"))
+            .otherwise(pattern).alias("stem"),
+        )), asc=False).alias("_rules"))
+    )
 
 
 def robots_gate(frontier: DataFrame, rules: DataFrame) -> DataFrame:
     """Adds ``robots_allowed`` to the frontier (host/path derived from url).
 
-    Longest-matching-rule-wins via max_by(directive, (length(path),
-    -lineno)) — a hash aggregate with map-side partial, cheaper than a
-    row_number window. On a length tie the FIRST rule in file order wins
-    (reference checkRules keeps a rule only when strictly longer,
-    robots.go:214-221). Rules constructed without a ``lineno`` column
-    (ad-hoc rule tables) tie-break as all-equal, i.e. undefined order,
-    same as a reference file would never produce.
-    Hosts with no matching rule (or no rules at all) default to allowed
-    (fail-open, reference: robots.go:69-72).
+    rules: the parsed rule table, or its ``host_rule_lists`` fold. The
+    lists broadcast-join on host; the first rule in precedence order
+    whose stem prefixes the path decides (longest pattern, then the
+    first in file order, module doc). Hosts with no matching rule (or
+    no rules at all) default to allowed (fail-open, reference:
+    robots.go:69-72). No exchange: every frontier row and column is
+    kept as it is.
     """
-    f = frontier.withColumn("_host", F.expr("try_parse_url(url, 'HOST')")) \
-                .withColumn("_path", F.coalesce(F.expr("try_parse_url(url, 'PATH')"), F.lit("/")))
-    lineno = F.col("lineno") if "lineno" in rules.columns else F.lit(0)
-    r = rules.select(F.col("host").alias("_host"), "directive",
-                     F.col("path").alias("pattern"), lineno.alias("_lineno"))
-    joined = f.join(F.broadcast(r), "_host", "left")
-    matched = joined.withColumn(
-        "_match",
-        F.when(
-            F.col("pattern").isNotNull() & path_matches_expr(F.col("pattern"), F.col("_path")),
-            F.struct(F.length("pattern").alias("l"),
-                     (-F.col("_lineno")).alias("nl"),
-                     (F.col("directive") == "Allow").alias("a")),
-        ),
-    )
-    keys = [c for c in frontier.columns]
-    best = (
-        matched.groupBy(*keys)
-        .agg(F.max("_match").alias("_best"))
-        .withColumn("robots_allowed", F.coalesce(F.col("_best.a"), F.lit(True)))
-        .drop("_best")
-    )
-    return best
+    lists = rules if "_rules" in rules.columns else host_rule_lists(rules)
+    path = F.coalesce(F.expr("try_parse_url(url, 'PATH')"), F.lit("/"))
+    first = F.get(F.filter("_rules", lambda r: path.startswith(r["stem"])), 0)
+    # two DataFrame calls: the crawl builds this plan every round
+    return frontier.join(
+        F.broadcast(lists), F.expr("try_parse_url(url, 'HOST')") == lists["_host"], "left"
+    ).select(*frontier.columns, F.coalesce(first["a"], F.lit(True)).alias("robots_allowed"))

@@ -4,7 +4,8 @@ Reimplements the reference's sequential BFS semantics
 (reference: internal/crawler/crawler.go:168-276) as synchronous
 DataFrame supersteps (SURVEY.md §3.4):
 
-    frontier(d) --depth gate--> --politeness--> --robots gate-->
+    frontier(d) --depth gate--> --politeness--> --robots gate-->   (one
+      materialization: a flagged frame, deferred rows read back from it)
       --fetch-join corpus--> results(d)
       --outlink UDF + posexplode--> --scope filter vs seed-->
       --first-wins dedup--> --anti-join seen--> frontier(d+1)
@@ -34,6 +35,8 @@ import time
 from dataclasses import dataclass, field
 from urllib.parse import urlsplit
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -53,7 +56,7 @@ from ..operators.order import (
     with_global_order,
 )
 from ..operators.politeness import schedule_frontier
-from ..operators.robots import robots_gate
+from ..operators.robots import host_rule_lists, robots_gate
 from ..operators.seen import BloomConfig, build_filters, seen_anti_join
 from ..sources.catalog import RoundCatalog
 
@@ -274,6 +277,14 @@ def crawl(
                 seen_set.add(n)
                 seeds.append(n)
         seed = seeds[0]
+    # the seed list as ONE local relation (pandas-built: a LocalTableScan).
+    # A list-of-tuples frame plans as a Python-RDD scan that re-runs on
+    # every use — the round-0 frontier, the disk gate's broadcast of the
+    # seeds every round, committed_seen()
+    seed_frame = (spark.createDataFrame(pd.DataFrame({
+        "url": seeds, "depth": np.zeros(len(seeds), dtype=np.int32),
+        "order": np.arange(len(seeds), dtype=np.int64)}), FRONTIER_SCHEMA)
+        if seeds else None)
 
     # The round plan places every filter by hand (depth gate before fetch,
     # scope before dedup, ...). Catalyst's PushPredicateThroughNonJoin
@@ -353,9 +364,8 @@ def crawl(
             seen = (catalog.read_union(spark, "seen_delta", upto=upto).select("url")
                     if catalog.committed_rounds()
                     else spark.createDataFrame([], "url string"))
-            if seeds:
-                seen = seen.unionByName(
-                    spark.createDataFrame([(s,) for s in seeds], "url string"))
+            if seed_frame is not None:
+                seen = seen.unionByName(seed_frame.select("url"))
             if catalog.has_table("seeds"):
                 seen = seen.unionByName(
                     catalog.read_table(spark, "seeds").select("url"))
@@ -374,6 +384,11 @@ def crawl(
             frontier = catalog.read(spark, last, "next_frontier").drop("_hb")
             m = catalog.read_metrics(last)
             order_counter = int(m["order_counter"])
+            # the committed frontier is that round's new, deferred and
+            # retried rows; a maintenance round rewrote it, so count it
+            n_frontier = (frontier.count() if "maintenance" in m else
+                          sum(int(m.get(k, 0)) for k in
+                              ("new_discovered", "deferred", "retried")))
             seen = committed_seen(upto=last) if keeps_seen_frames() else None
             round_idx = last + 1
             metrics = [catalog.read_metrics(r) for r in catalog.committed_rounds()]
@@ -386,6 +401,7 @@ def crawl(
                         .select("url", "depth", "order")
                         .localCheckpoint(eager=True))
             order_counter = int(catalog.read_table_meta("seeds")["order_counter"])
+            n_frontier = order_counter
             seen = frontier.select("url")
             round_idx = 0
             tick0("setup_seeds_table_resume")
@@ -402,6 +418,7 @@ def crawl(
                 norm.withColumn("depth", F.lit(0)), ["url"], order_col="order",
                 start=0, num_partitions=cfg.frontier_partitions)
             frontier = frontier.select("url", "depth", "order").localCheckpoint(eager=True)
+            n_frontier = order_counter
             if catalog is not None:
                 # persist the normalized round-0 frontier as the named
                 # seed table BEFORE any round runs: from here on every
@@ -424,13 +441,12 @@ def crawl(
             round_idx = 0
             tick0("setup_seeds_df")
         else:
-            frontier = spark.createDataFrame(
-                [(s, 0, i) for i, s in enumerate(seeds)], FRONTIER_SCHEMA)
+            frontier = seed_frame
             if len(seeds) > 64:
                 frontier = frontier.repartition(
                     cfg.frontier_partitions or spark.sparkContext.defaultParallelism)
             seen = frontier.select("url")
-            order_counter = len(seeds)
+            order_counter = n_frontier = len(seeds)
             round_idx = 0
 
         if has_attempt and "attempt" not in frontier.columns:
@@ -450,9 +466,8 @@ def crawl(
             # frame; a DataFrame seed TABLE (never broadcastable) is
             # persisted in the same _ub layout, so the bucket probe reads
             # it like one more delta dir
-            if seeds:
-                seeds_seen_small = spark.createDataFrame(
-                    [(s,) for s in seeds], "url string")
+            if seed_frame is not None:
+                seeds_seen_small = seed_frame.select("url")
             # a checkpoint (or seed table) written without disk_seen has
             # FLAT dirs: the bucket probe would read nothing from them and
             # silently re-enqueue seen URLs — refuse instead
@@ -506,15 +521,19 @@ def crawl(
                             # they must enter the blobs too — a filter
                             # miss bypasses the exact anti-join entirely
                             filters = _fmod.build_filters(
-                                spark.createDataFrame([(s,) for s in seeds],
-                                                      "url string"),
-                                bloom_cfg, existing=filters)
+                                seed_frame.select("url"), bloom_cfg,
+                                existing=filters)
                         filters = filters.localCheckpoint(eager=True)
                     except Exception:  # noqa: BLE001 — older checkpoint layout
                         filters = None
             if filters is None:
                 filters = _fmod.build_filters(seen_parts[0], bloom_cfg).localCheckpoint(eager=True)
         total_skipped = 0
+        fcols = ["url", "depth", "order"] + (["attempt"] if has_attempt else [])
+        # the robots rules folded once per crawl into one row per host
+        # (operators/robots.py): each round's gate is a broadcast join
+        robots_lists = (host_rule_lists(cfg.robots_rules).localCheckpoint(eager=True)
+                        if cfg.robots_rules is not None else None)
         politeness = (cfg.host_quota is not None or cfg.default_quota is not None
                       or cfg.global_cap is not None)
         if cfg.priority_expr is not None and not politeness:
@@ -523,13 +542,10 @@ def crawl(
                 "default_quota / global_cap) to act on — without one the "
                 "whole frontier is processed every round and the priority "
                 "would be a silent no-op")
-        # driver-side frontier count: known from the previous round's ordering
-        # pass (no count() job per round); -1 = unknown (resume), count once
-        n_frontier = (frontier.count()
-                      if (resume and catalog is not None) or seeds_df is not None
-                      else len(seeds))
         tick0("setup_rest")
 
+        # n_frontier, the frontier's exact row count, stays driver-side:
+        # each round's counts give the next one (no count() job per round)
         while round_idx < cfg.max_rounds and n_frontier > 0:
             t0 = time.time()
             tick = _Tick(round_idx)
@@ -538,26 +554,52 @@ def crawl(
             # Pure BFS keeps one depth per round (= round_idx), so the gate is
             # a driver-side comparison; with politeness deferral (or retry
             # re-enqueues) depths mix and we fall back to a real filter.
-            skipped_depth = 0
-            persisted = None  # unpersisted once the fetch checkpoint lands
-            if cfg.max_depth >= 0 and not (politeness or has_attempt):
-                if round_idx > cfg.max_depth:
-                    skipped_depth = n_frontier
-                    process = None
-                else:
-                    process = frontier
-            elif cfg.max_depth >= 0:
-                process = frontier.filter(F.col("depth") <= cfg.max_depth).persist()
-                persisted = process
-                n_process = process.count()
-                skipped_depth = n_frontier - n_process
-                if n_process == 0:
-                    process = None
-            else:
-                process = frontier
+            skipped_depth = blocked_robots = n_deferred = 0
+            deferred = None
+            process = frontier
+            depth_filtered = cfg.max_depth >= 0 and (politeness or has_attempt)
+            if depth_filtered:
+                process = frontier.filter(F.col("depth") <= cfg.max_depth)
+            elif 0 <= cfg.max_depth < round_idx:
+                skipped_depth, process = n_frontier, None
+            if process is not None and (depth_filtered or politeness
+                                        or robots_lists is not None):
+                # --- ONE materialization before the fetch: the depth-gated
+                # rows, each flagged by the politeness schedule (quota
+                # overflow re-queues, never drops) and the robots gate
+                # (disallowed = skipped, crawler.go:583-600), stored by one
+                # eager checkpoint. Its Observation reports the gate counts
+                # (zero extra jobs); the deferred rows and the fetch input
+                # are both read back from the stored frame, so the window
+                # exchanges run once per round.
+                pre, pcol = process, None
+                if politeness:
+                    if cfg.priority_expr is not None:
+                        pre = pre.withColumn("_priority", F.expr(cfg.priority_expr))
+                        pcol = "_priority"
+                    pre = schedule_frontier(
+                        pre, cfg.host_quota, cfg.default_quota, cfg.global_cap,
+                        priority_col=pcol, flag_col="_sched")
+                if robots_lists is not None:
+                    pre = robots_gate(pre, robots_lists)
+                sched_ok = F.col("_sched") if politeness else F.lit(True)
+                allowed_ok = F.col("robots_allowed") if robots_lists is not None else F.lit(True)
+                pobs = Observation()
+                pre = pre.observe(
+                    pobs, F.count(F.lit(1)).alias("n"),
+                    F.sum(F.when(~sched_ok, 1).otherwise(0)).alias("deferred"),
+                    F.sum(F.when(sched_ok & ~allowed_ok, 1).otherwise(0)).alias("blocked"),
+                ).localCheckpoint(eager=True)
+                n_kept = int(pobs.get["n"] or 0)
+                # n_frontier is exact (the previous round's counts), so the
+                # gated rows need no column of their own
+                skipped_depth = n_frontier - n_kept
+                n_deferred = int(pobs.get["deferred"] or 0)
+                blocked_robots = int(pobs.get["blocked"] or 0)
+                process = pre.filter(sched_ok & allowed_ok).select(*fcols) if n_kept else None
+                if politeness:
+                    deferred = pre.filter(~sched_ok).select(*fcols)
             if process is None:
-                if persisted is not None:
-                    persisted.unpersist()
                 metrics.append({
                     "round": round_idx, "frontier": n_frontier, "processed": 0,
                     "crawled": 0, "failed": 0, "skipped_depth": skipped_depth,
@@ -573,52 +615,12 @@ def crawl(
                 total_skipped += skipped_depth
                 break
 
-            # --- politeness schedule (quota overflow re-queues, never drops) --
-            n_deferred = 0
-            if politeness:
-                fcols = ["url", "depth", "order"] + (["attempt"] if has_attempt else [])
-                sched_in, pcol = process, None
-                if cfg.priority_expr is not None:
-                    sched_in = process.withColumn(
-                        "_priority", F.expr(cfg.priority_expr))
-                    pcol = "_priority"
-                sched, deferred = schedule_frontier(
-                    sched_in, cfg.host_quota, cfg.default_quota, cfg.global_cap,
-                    priority_col=pcol)
-                if pcol is not None:
-                    sched = sched.drop(pcol)
-                # the deferred count rides the checkpoint job itself (an
-                # Observation fires on eager localCheckpoint) — no
-                # separate count() job per round
-                dobs = Observation()
-                deferred = deferred.select(*fcols).observe(
-                    dobs, F.count(F.lit(1)).alias("n")
-                ).localCheckpoint(eager=True)
-                n_deferred = int(dobs.get["n"] or 0)
-            else:
-                sched, deferred = process, None
-
-            # --- robots gate (disallowed = skipped, reference: crawler.go:583-600)
-            if cfg.robots_rules is not None:
-                robs = Observation()
-                gated = robots_gate(sched, cfg.robots_rules).observe(
-                    robs,
-                    F.sum(F.when(~F.col("robots_allowed"), 1).otherwise(0))
-                    .alias("blocked"),
-                ).localCheckpoint(eager=True)
-                allowed = gated.filter(F.col("robots_allowed")).drop("robots_allowed")
-                # blocked count observed during the checkpoint job — no
-                # separate filter().count() job per round
-                blocked_robots = int(robs.get["blocked"] or 0)
-            else:
-                allowed, blocked_robots = sched, 0
-
             # --- fetch = join against the corpus (reference: client.Get ->
             #     crawler.go:331-334 status window; misses stay as failed rows).
             # Eager checkpoint: ONE materialization reused by results, metrics
             # and extraction (and truncates the per-round lineage chain, which
             # otherwise OOMs plan compilation after ~10 rounds).
-            fetched = allowed.join(web, "url", "left")
+            fetched = process.join(web, "url", "left")
             if transient:
                 # flaky-server model: attempts beyond the row's transient
                 # budget succeed (reference: client_test.go retry cases)
@@ -690,11 +692,6 @@ def crawl(
                     "url", "depth", "order",
                     (F.col("attempt") + 1).alias("attempt"))
                 final = fetched.filter(~can_retry)
-            if persisted is not None:
-                # every consumer (deferred, gated, fetched) is materialized
-                # by now; without this, cached frontiers accrete in executor
-                # storage for the life of a depth-limited politeness crawl
-                persisted.unpersist()
             tick("fetch_ckpt")
 
             # --- outlink extraction on OK pages only (crawler.go:644).
@@ -857,18 +854,16 @@ def crawl(
                 if n_retry:
                     new_frontier = new_frontier.unionByName(retry_rows)
 
-            if deferred is not None:
-                next_frontier = new_frontier.unionByName(deferred).localCheckpoint(eager=True)
-            elif catalog is not None or n_retry:
-                next_frontier = new_frontier.localCheckpoint(eager=True)
-            else:
-                # pure-BFS in-memory path: new_frontier is one projection
-                # over the checkpointed `new` (rank offsets are driver
-                # literals) with exactly one consumer next round — the
-                # range shuffle was already materialized by the ordering
-                # pass, so an eager checkpoint here is a whole Spark job
-                # of pure fixed cost
-                next_frontier = new_frontier
+            next_frontier = (new_frontier if deferred is None
+                             else new_frontier.unionByName(deferred))
+            # every branch reads a stored frame (ordering pass, fetch and
+            # pre-fetch checkpoints). With a catalog the frontier is
+            # written and re-read, so an eager checkpoint here would be a
+            # whole Spark job of pure fixed cost; so it is on the pure-BFS
+            # in-memory path, a projection over the checkpointed `new`
+            # (rank offsets are driver literals) with one consumer
+            if catalog is None and (deferred is not None or n_retry):
+                next_frontier = next_frontier.localCheckpoint(eager=True)
             tick("frontier_ckpt")
 
             results_r = final.select(

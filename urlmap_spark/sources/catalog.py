@@ -14,6 +14,11 @@ snapshot semantics (readers never see a half-written round) with rename-
 level atomicity, and keeps the code Iceberg-ready: every write goes
 through commit_round()/read_* below, so swapping in `writeTo(...).append()`
 is a one-file change.
+
+Every table dir also holds its schema (``_schema.json``, a hidden file
+to parquet readers): reads pass it to ``spark.read.schema(...)``, so a
+read plans without the footer-sampling job that schema inference runs.
+A dir written without one (an older checkpoint) is read by inference.
 """
 
 from __future__ import annotations
@@ -21,8 +26,36 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import types as T
+
+SCHEMA_FILE = "_schema.json"
+
+
+def write_parquet(df: DataFrame, path: str,
+                  partition_by: list[str] | None = None) -> None:
+    """Overwrite `path` with df as parquet and record df's schema there."""
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(path)
+    os.makedirs(path, exist_ok=True)
+    with open(os.path.join(path, SCHEMA_FILE), "w") as f:
+        f.write(df.schema.json())
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read a dir written by write_parquet with its recorded schema (no
+    inference job); a dir without the record falls back to inference."""
+    sp = os.path.join(path, SCHEMA_FILE)
+    if not os.path.exists(sp):
+        return spark.read.parquet(path)
+    with open(sp) as f:
+        schema = T.StructType.fromJson(json.load(f))
+    return spark.read.schema(schema).parquet(path)
 
 
 class RoundCatalog:
@@ -54,17 +87,24 @@ class RoundCatalog:
         host-hash bucket — north_rule: a frontier partitioned by
         host-hash, so per-host maintenance reads prune at scan time).
         observed: an Observation on one of the tables; its values join
-        `metrics` (in place) once the table writes have fired it."""
+        `metrics` (in place) once the table writes have fired it.
+
+        The tables are written concurrently, one driver thread each: they
+        are independent, and written one after another each write's
+        driver-side planning and file commit left the executors idle."""
         rdir = self._rdir(r)
         if os.path.exists(rdir):  # uncommitted leftover from a crash
             shutil.rmtree(rdir)
         os.makedirs(rdir)
-        for name, df in tables.items():
-            w = df.write.mode("overwrite")
-            cols = (partition_by or {}).get(name)
-            if cols:
-                w = w.partitionBy(*cols)
-            w.parquet(os.path.join(rdir, name))
+        with ThreadPoolExecutor(max(1, len(tables))) as pool:
+            writes = [pool.submit(
+                # carries this thread's job properties (e.g. a job
+                # description) over to the writer thread
+                inheritable_thread_target(write_parquet),
+                df, os.path.join(rdir, name), (partition_by or {}).get(name))
+                for name, df in tables.items()]
+            for w in writes:
+                w.result()  # re-raises a failed write; no marker then
         if observed is not None:
             metrics.update(observed.get)
         tmp = os.path.join(rdir, ".metrics.tmp")
@@ -80,7 +120,7 @@ class RoundCatalog:
         return os.path.join(self._rdir(r), name)
 
     def read(self, spark: SparkSession, r: int, name: str) -> DataFrame:
-        return spark.read.parquet(self.round_table_dir(r, name))
+        return read_parquet(spark, self.round_table_dir(r, name))
 
     def drop_superseded(self, name: str) -> None:
         """Delete table `name` from every committed round but the last —
@@ -110,10 +150,7 @@ class RoundCatalog:
         if os.path.exists(tdir):  # uncommitted leftover / re-commit
             shutil.rmtree(tdir)
         os.makedirs(tdir)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(os.path.join(tdir, "data"))
+        write_parquet(df, os.path.join(tdir, "data"), partition_by)
         tmp = os.path.join(tdir, ".meta.tmp")
         with open(tmp, "w") as f:
             json.dump(meta or {}, f)
@@ -125,7 +162,7 @@ class RoundCatalog:
     def read_table(self, spark: SparkSession, name: str) -> DataFrame:
         if not self.has_table(name):
             raise FileNotFoundError(f"no committed table '{name}' under {self.root}")
-        return spark.read.parquet(self.table_dir(name))
+        return read_parquet(spark, self.table_dir(name))
 
     def read_table_meta(self, name: str) -> dict:
         with open(os.path.join(self.root, "tables", name, "meta.json")) as f:
@@ -195,10 +232,9 @@ class RoundCatalog:
                             f"v={last:04d}" + (f".{seq}" if seq else ""))
         if os.path.exists(vdir):  # crashed previous attempt
             shutil.rmtree(vdir)
-        w = df.write.mode("overwrite")
-        if partition_by:  # preserve e.g. the disk-seen _ub bucketing so
-            w = w.partitionBy(*partition_by)  # bucket-pruned reads survive
-        w.parquet(os.path.join(vdir, "data"))
+        # partition_by preserves e.g. the disk-seen _ub bucketing so
+        # bucket-pruned reads survive
+        write_parquet(df, os.path.join(vdir, "data"), partition_by)
         mtmp = os.path.join(vdir, "._COMMITTED.tmp")
         open(mtmp, "w").close()
         os.replace(mtmp, os.path.join(vdir, "_COMMITTED"))
@@ -245,7 +281,7 @@ class RoundCatalog:
         # directory structures" for the disk-seen _ub= layout);
         # allowMissingColumns unions flat and bucketed dirs (the bucket
         # column is null for flat rows)
-        dfs = [spark.read.parquet(p) for p in paths]
+        dfs = [read_parquet(spark, p) for p in paths]
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)

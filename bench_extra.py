@@ -4,11 +4,15 @@ live here, guide §1.4).
 Modes:
   --queries [names...]   noop-sink time (best/median of N) + explain
                          ("formatted") dump for headline queries at
-                         $SPARK_GRAFT_SF_DIR (default sf1.0 — the
-                         driver's measured scale), plans written to
+                         $SPARK_GRAFT_SF_DIR (default: the largest
+                         sf* test-data dir present), plans written to
                          plans/r06/<query>_<tag>.txt
   --crawl                one bench-config crawl with URLMAP_CRAWL_DEBUG=1
                          phase ticks (per-round breakdown)
+
+Host-fit defaults: $SPARK_GRAFT_CPUS defaults to every core nproc
+reports and the driver heap ($URLMAP_SPARK_DRIVER_MEM) to one derived
+from MemTotal (tools/hostfit.py).
 
 Usage:
   python bench_extra.py --queries --tag before
@@ -23,11 +27,15 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [HERE, os.path.join(HERE, "tools")]
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", "48g")
+from hostfit import host_cores, host_heap_gib, largest_sf_dir  # noqa: E402
+
+SF_DIR = (os.environ.get("SPARK_GRAFT_SF_DIR") or largest_sf_dir("/root/testdata")
+          or "/root/testdata/sf0.1")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
+os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", f"{host_heap_gib(CPUS)}g")
 
 PICKS = [
     "fetch-join", "stats-agg", "per-host-quota-topk", "seen-anti-join",

@@ -215,10 +215,11 @@ def test_cli_seen_filter_cuckoo_matches_bloom(spark, tmp_path, capsys):
     for name in ("bloom", "cuckoo"):
         out_p = str(tmp_path / f"out-{name}")
         # --broadcast-seen-max 0 disables the broadcast fast path, so the
-        # named prefilter's cogroup probe genuinely runs every round
+        # named prefilter inside the disk seen gate runs every round
         rc = cli.main([
             "https://h.test/", "--corpus", corpus_p, "--no-path-prefix",
             "--seen-filter", name, "--broadcast-seen-max", "0",
+            "--disk-seen", "--checkpoint", str(tmp_path / f"ck-{name}"),
             "--output", out_p,
         ], _spark=spark)
         assert rc == 0
@@ -231,7 +232,8 @@ def test_cli_seen_filter_cuckoo_matches_bloom(spark, tmp_path, capsys):
 def test_cli_disk_seen(spark, tmp_path):
     """--disk-seen crawls via the disk-backed exact anti-join (with
     --checkpoint) and matches the default path's output; without
-    --checkpoint it exits with a clean diagnostic."""
+    --checkpoint it exits with a clean diagnostic, and so does
+    --seen-filter without --disk-seen."""
     corpus_p = str(tmp_path / "corpus.parquet")
     _corpus(spark).write.parquet(corpus_p)
     import glob
@@ -252,9 +254,11 @@ def test_cli_disk_seen(spark, tmp_path):
     assert rc == 0
     assert open(glob.glob(out_p + "/part-*")[0]).read().splitlines() == want
 
-    rc = cli.main(["https://h.test/", "--corpus", corpus_p,
-                   "--disk-seen"], _spark=spark)
-    assert rc == 2  # disk_seen requires checkpoint -> clean error path
+    for bad in (["--disk-seen"],  # disk_seen requires checkpoint
+                ["--seen-filter", "cuckoo",  # the prefilter requires disk_seen
+                 "--checkpoint", str(tmp_path / "ck-nodisk")]):
+        rc = cli.main(["https://h.test/", "--corpus", corpus_p, *bad], _spark=spark)
+        assert rc == 2  # clean error path
 
 
 def test_cli_priority_queue(spark, tmp_path, capsys):

@@ -157,6 +157,21 @@ def test_seen_set_equality(spark):
     assert len(spark_seen) == estats["total"]
 
 
+def test_empty_results_are_typed(spark, tmp_path):
+    """A crawl that commits no round (max_rounds=0) returns results
+    typed like a real crawl's — int, long and bool columns, not all
+    strings — in memory and from a checkpoint."""
+    cdf = spark.createDataFrame(C.basic_site_pandas())
+    for ck in (None, str(tmp_path / "ck")):
+        kw = dict(checkpoint_dir=ck + "-full" if ck else None)
+        full = crawl(spark, cdf, "https://basic.test/", CrawlConfig(**kw))
+        empty = crawl(spark, cdf, "https://basic.test/",
+                      CrawlConfig(max_rounds=0, checkpoint_dir=ck))
+        assert empty.rounds == 0 and empty.results.count() == 0
+        assert [(f.name, f.dataType) for f in empty.results.schema] == \
+            [(f.name, f.dataType) for f in full.results.schema]
+
+
 def test_bytes_column_pruned(spark):
     """The crawl plan must never read the heavy `bytes` column — check the
     optimized plan's ReadSchema on a parquet-backed corpus."""

@@ -86,8 +86,8 @@ def test_remove_inserted_urls(spark):
     assert dnew_gone.count() >= 25  # fp collisions allowed, bulk cleared
 
 
-def test_crawl_with_cuckoo_seen_equals_plain(spark):
-    """The cuckoo prefilter drops into the crawl's seen path (via
+def test_crawl_with_cuckoo_seen_equals_plain(spark, tmp_path):
+    """The cuckoo prefilter drops into the crawl's disk seen gate (via
     seen_filter='cuckoo') without changing (url, depth, order)."""
     from urlmap_spark.plans.crawl import CrawlConfig, crawl
     from urlmap_spark.sources import corpus as C
@@ -99,8 +99,8 @@ def test_crawl_with_cuckoo_seen_equals_plain(spark):
         max_depth=3, same_path_prefix=False, broadcast_seen_max_urls=0))
     ck = crawl(spark, cdf, seed, CrawlConfig(
         max_depth=3, same_path_prefix=False, broadcast_seen_max_urls=0,
-        bloom_seen=True, seen_filter="cuckoo", bloom_buckets=4,
-        bloom_bits=1 << 14))
+        checkpoint_dir=str(tmp_path / "ck"), disk_seen=True, disk_seen_buckets=4,
+        bloom_seen=True, seen_filter="cuckoo", seen_filter_bits=4 << 14))
     a = [(r["url"], r["depth"], r["order"]) for r in
          plain.results.orderBy("order").collect()]
     b = [(r["url"], r["depth"], r["order"]) for r in

@@ -82,10 +82,9 @@ def test_disk_crawl_equals_plain_crawl(spark, tmp_path):
     want = [(r["url"], r["depth"], r["order"])
             for r in plain.results.orderBy("order").collect()]
 
-    for extra in ({}, {"bloom_seen": True, "bloom_buckets": 8,
-                       "bloom_bits": 1 << 16},
+    for extra in ({}, {"bloom_seen": True, "seen_filter_bits": 8 << 16},
                   {"bloom_seen": True, "seen_filter": "cuckoo",
-                   "bloom_buckets": 8, "bloom_bits": 1 << 16}):
+                   "seen_filter_bits": 8 << 16}):
         ck = str(tmp_path / f"ck_{len(extra)}_{extra.get('seen_filter', '')}")
         disk = crawl(spark, cdf, seed_url, CrawlConfig(
             max_depth=3, same_path_prefix=False, checkpoint_dir=ck,
@@ -141,12 +140,19 @@ def test_disk_seen_resume_guard(spark, tmp_path):
             disk_seen=True), resume=True)
 
 
-def test_disk_seen_requires_checkpoint(spark):
+def test_disk_seen_requires_checkpoint(spark, tmp_path):
+    """disk_seen without a checkpoint, and the prefilter without the
+    disk gate it lives in, are refused before any Spark job runs."""
     pdf = C.corpus_pandas(seed=7, n_hosts=2, total_pages=10, with_bytes=False)
     cdf = spark.createDataFrame(pdf)
-    with pytest.raises(ValueError, match="disk_seen requires checkpoint_dir"):
-        crawl(spark, cdf, "https://h0.example-7.test/",
-              CrawlConfig(disk_seen=True))
+    sc = spark.sparkContext._jsc.sc()
+    for cfg, msg in ((CrawlConfig(disk_seen=True), "disk_seen requires checkpoint_dir"),
+                     (CrawlConfig(bloom_seen=True, checkpoint_dir=str(tmp_path)),
+                      "bloom_seen requires disk_seen")):
+        j0 = sc.dagScheduler().nextJobId()
+        with pytest.raises(ValueError, match=msg):
+            crawl(spark, cdf, "https://h0.example-7.test/", cfg)
+        assert sc.dagScheduler().nextJobId() == j0
 
 
 from hypothesis import given, settings  # noqa: E402
@@ -287,8 +293,7 @@ def test_df_seeds_disk_cuckoo_equals_plain(spark, tmp_path):
     def dcfg(ck, **kw):
         return CrawlConfig(**base, checkpoint_dir=ck, broadcast_seen_max_urls=0,
                            disk_seen=True, disk_seen_buckets=8, bloom_seen=True,
-                           seen_filter="cuckoo", bloom_buckets=4,
-                           bloom_bits=1 << 14, **kw)
+                           seen_filter="cuckoo", seen_filter_bits=4 << 14, **kw)
 
     fresh = crawl(spark, cdf, seeds_df, dcfg(str(tmp_path / "fresh")))
     assert [(r["url"], r["depth"], r["order"])
@@ -317,8 +322,7 @@ cdf = spark.createDataFrame(
 run = crawl(spark, cdf, "https://h0.example-42.test/", CrawlConfig(
     max_depth=3, same_path_prefix=False, checkpoint_dir=ck,
     broadcast_seen_max_urls=0, disk_seen=True, disk_seen_buckets=8,
-    bloom_seen=True, seen_filter="cuckoo", bloom_buckets=4,
-    bloom_bits=1 << 14))
+    bloom_seen=True, seen_filter="cuckoo", seen_filter_bits=4 << 14))
 rows = [(r["url"], r["depth"], r["order"])
         for r in run.results.orderBy("order").collect()]
 with open(out, "w") as f:

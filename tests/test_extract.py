@@ -56,6 +56,8 @@ BASES = [
     "/category/electronics", # file-style page
     "/d2/p10",               # nested
     "/a/b?x=1",              # base with query
+    "/a//",                  # empty path segment: '../c' resolves to '/c'
+    "/a//b",                 # ... also under a file-style base
 ]
 
 

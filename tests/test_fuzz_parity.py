@@ -159,9 +159,11 @@ def test_crawl_fuzzed_vs_oracle(spark, cseed, n_hosts, total_pages,
                                 max_depth, path_prefix, two_seeds, variant):
     """End-to-end crawl fuzz: the full Spark BFS plan — under every
     seen-dedup strategy (broadcast early anti-join, shuffled exact
-    anti-join, bloom-cogroup prefilter) — must reproduce the Python
+    anti-join, bloom-gated disk probe) — must reproduce the Python
     oracle's (url, depth, order, ok) rows and seen set on GENERATED
     corpora, not just the curated seeds in test_crawl.py."""
+    import tempfile
+
     from urlmap_spark.plans.crawl import CrawlConfig, crawl
     from urlmap_spark.plans.oracle import oracle_bfs
     from urlmap_spark.sources import corpus as C
@@ -174,13 +176,13 @@ def test_crawl_fuzzed_vs_oracle(spark, cseed, n_hosts, total_pages,
     kw = dict(max_depth=max_depth, same_path_prefix=path_prefix)
     if variant == "shuffled":
         kw["broadcast_seen_max_urls"] = 0
-    elif variant == "bloom":
-        kw["broadcast_seen_max_urls"] = 0
-        kw["bloom_seen"] = True
-        kw["bloom_buckets"] = 4
-    run = crawl(spark, spark.createDataFrame(pdf), seeds, CrawlConfig(**kw))
-    got = [(r["url"], r["depth"], r["order"], r["ok"])
-           for r in run.results.orderBy("order").collect()]
+    with tempfile.TemporaryDirectory() as ck:  # one checkpoint per example
+        if variant == "bloom":
+            kw.update(broadcast_seen_max_urls=0, checkpoint_dir=ck, disk_seen=True,
+                      disk_seen_buckets=4, bloom_seen=True, seen_filter_bits=4 << 14)
+        run = crawl(spark, spark.createDataFrame(pdf), seeds, CrawlConfig(**kw))
+        got = [(r["url"], r["depth"], r["order"], r["ok"])
+               for r in run.results.orderBy("order").collect()]
     eres, _ = oracle_bfs(pdf, seeds, max_depth=max_depth,
                          same_path_prefix=path_prefix)
     assert got == [(r.url, r.depth, r.order, r.ok) for r in eres]

@@ -1,9 +1,11 @@
 """Checkpoint maintenance: requeue (recrawl-after-TTL) and retire
 (seen-set forget), plus the persisted seen-filter contract they rely
-on: committed blobs cover exactly the committed seen set, resume loads
-them instead of rebuilding, cuckoo deletes fingerprints in place while
-bloom rebuilds."""
+on: the disk gate's committed blobs cover exactly the committed seen
+set, resume reads them instead of rebuilding, cuckoo deletes
+fingerprints in place while bloom rebuilds, and a record of any other
+blob layout counts as no blobs."""
 
+import json
 import os
 
 from urlmap_spark.plans.crawl import CrawlConfig, crawl
@@ -28,32 +30,28 @@ def _web(spark):
 
 def _cfg(ck, seen_filter="cuckoo", **kw):
     return CrawlConfig(max_depth=-1, same_path_prefix=False,
-                       checkpoint_dir=ck, bloom_seen=True,
-                       seen_filter=seen_filter, bloom_buckets=4,
-                       bloom_bits=1 << 14, broadcast_seen_max_urls=0, **kw)
+                       checkpoint_dir=ck, disk_seen=True, disk_seen_buckets=4,
+                       bloom_seen=True, seen_filter=seen_filter,
+                       seen_filter_bits=4 << 14, broadcast_seen_max_urls=0, **kw)
+
+
+def _probe(spark, cat, urls, kind="cuckoo"):
+    """Probe the last committed round's blobs through the disk gate with
+    no seen files: every url the blobs rule out counts as filter_new,
+    every other as filter_maybe."""
+    from urlmap_spark.operators.diskseen import disk_seen_anti_join, filter_config
+
+    gate = disk_seen_anti_join(
+        spark.createDataFrame([(u,) for u in urls], "url string"), [], 4,
+        filter_config(kind, 4, 4 << 14),
+        cat.round_table_dir(cat.last_round(), "seen_filters"))
+    assert len(gate.filters.collect()) == 4  # one blob row per bucket
+    return gate.observation.get
 
 
 def _rows(run):
     return [(r["url"], r["depth"], r["order"], r["round"])
             for r in run.results.orderBy("order").collect()]
-
-
-def test_persisted_filters_cover_committed_seen(spark, tmp_path):
-    """The blobs committed at round r must contain round r's own delta
-    (a stale pre-delta blob would false-negative and re-enqueue
-    duplicates on a filter-loading resume)."""
-    from urlmap_spark.operators.cuckoo import CuckooConfig, split_candidates
-
-    ck = str(tmp_path / "ck")
-    crawl(spark, _web(spark), "https://h.test/", _cfg(ck), )
-    cat = RoundCatalog(ck)
-    last = cat.last_round()
-    seen = cat.read_union(spark, "seen_delta").select("url")
-    filters = cat.read(spark, last, "seen_filters")
-    dnew, maybe = split_candidates(seen, filters,
-                                   CuckooConfig(4, 1 << 14))
-    assert dnew.count() == 0
-    assert cat.read_metrics(last)["seen_filter_cfg"] == ["cuckoo", 4, 1 << 14]
 
 
 def test_requeue_refetches_with_fresh_orders(spark, tmp_path):
@@ -115,8 +113,7 @@ def test_retire_disk_layout_after_blob_vacuum(spark, tmp_path):
     every superseded seen_filters dir is already gone when retire_urls
     and the resume read the last one."""
     ck = str(tmp_path / "ck")
-    _retire_rediscovery(spark, ck, disk_seen=True, disk_seen_buckets=4,
-                        compact_seen_every=1)
+    _retire_rediscovery(spark, ck, compact_seen_every=1)
     cat = RoundCatalog(ck)
     rounds = cat.committed_rounds()
     kept = [r for r in rounds
@@ -128,27 +125,17 @@ def test_retire_disk_layout_after_blob_vacuum(spark, tmp_path):
 
 
 def test_persisted_disk_filters_cover_committed_seen(spark, tmp_path):
-    """Disk twin of test_persisted_filters_cover_committed_seen: the
-    blobs the gate committed with the last round must mark every
+    """The blobs the gate committed with the last round must mark every
     committed seen URL "maybe seen" (a miss would bypass the exact
     probe and re-enqueue it), and record their layout."""
-    from urlmap_spark.operators.diskseen import (disk_seen_anti_join,
-                                                 filter_config)
-
     ck = str(tmp_path / "ck")
-    run = crawl(spark, _web(spark), "https://h.test/",
-                _cfg(ck, disk_seen=True, disk_seen_buckets=4))
+    run = crawl(spark, _web(spark), "https://h.test/", _cfg(ck))
     cat = RoundCatalog(ck)
-    last = cat.last_round()
-    fcfg = filter_config("cuckoo", 4, 4 * (1 << 14))
-    assert cat.read_metrics(last)["seen_filter_cfg"] == ["cuckoo", 4, 1 << 14, "_ub"]
-    seen = cat.read_union(spark, "seen_delta").select("url")
-    n = seen.count()
-    assert n == 3  # b, c, d; the seed never enters a delta
-    gate = disk_seen_anti_join(seen, [], 4, fcfg,
-                               cat.round_table_dir(last, "seen_filters"))
-    assert len(gate.filters.collect()) == 4  # one blob row per bucket
-    assert gate.observation.get == {"filter_maybe": n, "filter_new": 0}
+    assert cat.read_metrics(cat.last_round())["seen_filter_cfg"] == \
+        ["cuckoo", 4, 1 << 14, "_ub"]
+    seen = [r["url"] for r in cat.read_union(spark, "seen_delta").collect()]
+    assert len(seen) == 3  # b, c, d; the seed never enters a delta
+    assert _probe(spark, cat, seen) == {"filter_maybe": 3, "filter_new": 0}
     # the round metrics carry the gate's counts: a definitely-new row is
     # new, and every new row was either proved new or probed exactly
     for m in run.metrics:
@@ -166,20 +153,15 @@ def test_retire_skips_pending_frontier_urls(spark, tmp_path):
 def test_retire_deletes_cuckoo_fingerprints_in_place(spark, tmp_path):
     """The maintenance round's blobs must answer 'definitely new' for
     the retired URL (cuckoo O(1) delete), and keep every survivor."""
-    from urlmap_spark.operators.cuckoo import CuckooConfig, split_candidates
-
     ck = str(tmp_path / "ck")
     crawl(spark, _web(spark), "https://h.test/", _cfg(ck, max_rounds=2))
     retire_urls(spark, ck, ["https://h.test/b"])
     cat = RoundCatalog(ck)
-    filters = cat.read(spark, cat.last_round(), "seen_filters")
-    cfg = CuckooConfig(4, 1 << 14)
-    gone = spark.createDataFrame([("https://h.test/b",)], "url string")
-    dnew, _ = split_candidates(gone, filters, cfg)
-    assert dnew.count() == 1  # fingerprint actually cleared
-    survivors = cat.read_union(spark, "seen_delta").select("url")
-    dnew2, _ = split_candidates(survivors, filters, cfg)
-    assert dnew2.count() == 0  # no collateral false negatives
+    # fingerprint actually cleared
+    assert _probe(spark, cat, ["https://h.test/b"])["filter_new"] == 1
+    survivors = [r["url"] for r in cat.read_union(spark, "seen_delta").collect()]
+    # no collateral false negatives
+    assert _probe(spark, cat, survivors)["filter_new"] == 0
 
 
 def test_retire_with_bloom_rebuilds(spark, tmp_path):
@@ -195,9 +177,48 @@ def test_retire_with_bloom_rebuilds(spark, tmp_path):
     rows = _rows(resumed)
     assert sum(1 for r in rows if r[0] == "https://h.test/b") == 2
 
-    from urlmap_spark.operators.seen import BloomConfig, split_candidates
     cat = RoundCatalog(ck)
-    filters = cat.read(spark, cat.last_round(), "seen_filters")
-    survivors = cat.read_union(spark, "seen_delta").select("url")
-    dnew, _ = split_candidates(survivors, filters, BloomConfig(4, 1 << 14))
-    assert dnew.count() == 0
+    survivors = [r["url"] for r in cat.read_union(spark, "seen_delta").collect()]
+    assert _probe(spark, cat, survivors, "bloom")["filter_new"] == 0
+
+
+def _mark_other_layout(ck):
+    """Rewrite the last round's seen_filter_cfg as the 3-field record of
+    the retired in-memory (bucket, filter) layout."""
+    cat = RoundCatalog(ck)
+    path = os.path.join(os.path.dirname(
+        cat.round_table_dir(cat.last_round(), "seen_filters")), "metrics.json")
+    with open(path) as f:
+        m = json.load(f)
+    m["seen_filter_cfg"] = ["cuckoo", 4, 1 << 14]
+    with open(path, "w") as f:
+        json.dump(m, f)
+
+
+def test_other_blob_layout_counts_as_no_blobs(spark, tmp_path):
+    """A checkpoint whose last round records another blob layout holds
+    no blobs the gate can read. A resume rebuilds every bucket's blob
+    from seen (its first gate rules nothing out) and equals the
+    uninterrupted crawl; maintenance neither reads nor carries the
+    blobs forward, and retire -> rediscover still works."""
+    ref = crawl(spark, _web(spark), "https://h.test/", _cfg(str(tmp_path / "ref")))
+    # round 1's one new URL (d): round 0's blob proves it new
+    assert ref.metrics[1]["filter_new"] == 1
+    ck = str(tmp_path / "ck")
+    crawl(spark, _web(spark), "https://h.test/", _cfg(ck, max_rounds=1))
+    _mark_other_layout(ck)
+    resumed = crawl(spark, _web(spark), "https://h.test/", _cfg(ck), resume=True)
+    assert _rows(resumed) == _rows(ref)
+    assert resumed.metrics[1]["filter_new"] == 0  # no blob read: rebuilt
+
+    ck = str(tmp_path / "ck2")
+    crawl(spark, _web(spark), "https://h.test/", _cfg(ck, max_rounds=2))
+    _mark_other_layout(ck)
+    retire_urls(spark, ck, ["https://h.test/b"])
+    cat = RoundCatalog(ck)
+    mm = cat.read_metrics(cat.last_round())
+    assert "seen_filter_cfg" not in mm and mm["disk_seen_cfg"] == [4]
+    assert not os.path.isdir(cat.round_table_dir(cat.last_round(), "seen_filters"))
+    resumed = crawl(spark, _web(spark), "https://h.test/", _cfg(ck), resume=True)
+    assert [d for (u, d, _, _) in _rows(resumed) if u == "https://h.test/b"] == [1, 3]
+    assert cat.read_metrics(cat.last_round())["seen_filter_cfg"][3] == "_ub"

@@ -149,7 +149,7 @@ def test_durable_crawl_job_budget(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ck"), default_quota=3,
         priority_expr="-depth", robots_rules=rules, verify_payload=True,
         bloom_seen=True, seen_filter="cuckoo", disk_seen=True,
-        disk_seen_buckets=4, bloom_buckets=4, bloom_bits=1 << 14,
+        disk_seen_buckets=4, seen_filter_bits=4 << 14,
         broadcast_seen_max_urls=0, compact_seen_every=2)
     j0 = _next_job_id(spark)
     crawl(spark, cdf, SEEDS, replace(cfg, max_rounds=2))

@@ -107,7 +107,7 @@ def test_retry_with_politeness_and_depth_limit(spark):
     assert res["https://r.test/p0"]["ok"] is True  # recovered on attempt 2
 
 
-def test_retry_composes_with_bloom_seen(spark):
+def test_retry_composes_with_bloom_seen(spark, tmp_path):
     """Retry re-enqueues bypass the seen anti-join by construction (a
     retry IS a seen URL being re-fetched) — with the bloom prefilter on,
     the recovered page and its outlinks must still come out identical."""
@@ -122,7 +122,9 @@ def test_retry_composes_with_bloom_seen(spark):
     bloom = crawl(spark, cdf, "https://r.test/",
                   CrawlConfig(same_path_prefix=False, max_attempts=3,
                               broadcast_seen_max_urls=0,
-                              bloom_seen=True, bloom_buckets=8))
+                              checkpoint_dir=str(tmp_path / "ck"), disk_seen=True,
+                              disk_seen_buckets=8, bloom_seen=True,
+                              seen_filter_bits=8 << 16))
     a = sorted((r["url"], r["depth"], r["order"], r["ok"], r["round"])
                for r in plain.results.collect())
     b = sorted((r["url"], r["depth"], r["order"], r["ok"], r["round"])

@@ -62,7 +62,7 @@ def test_false_positive_rate_bounded(spark):
     assert fpr < 0.05, f"false-positive rate too high: {fpr}"
 
 
-def test_bloom_crawl_equals_plain_crawl(spark):
+def test_bloom_crawl_equals_plain_crawl(spark, tmp_path):
     """End-to-end: a bloom-prefiltered crawl yields the identical
     (url, depth, order) sequence as the plain exact-anti-join crawl."""
     from urlmap_spark.plans.crawl import CrawlConfig, crawl
@@ -72,13 +72,14 @@ def test_bloom_crawl_equals_plain_crawl(spark):
     cdf = spark.createDataFrame(pdf)
     seed_url = "https://h0.example-7.test/"
     # plain arm keeps the default broadcast-seen early anti-join; the
-    # bloom arm disables it (broadcast_seen_max_urls=0) so the in-crawl
-    # bloom-cogroup path is genuinely exercised — the equality therefore
-    # ALSO pins broadcast-path == bloom-path
+    # bloom arm disables it (broadcast_seen_max_urls=0) so the bloom
+    # inside the disk seen gate is genuinely exercised — the equality
+    # therefore ALSO pins broadcast-path == bloom-gate path
     plain = crawl(spark, cdf, seed_url, CrawlConfig(max_depth=3, same_path_prefix=False))
     bloom = crawl(spark, cdf, seed_url, CrawlConfig(
         max_depth=3, same_path_prefix=False, broadcast_seen_max_urls=0,
-        bloom_seen=True, bloom_buckets=8, bloom_bits=1 << 16))
+        checkpoint_dir=str(tmp_path / "ck"), disk_seen=True, disk_seen_buckets=8,
+        bloom_seen=True, seen_filter_bits=8 << 16))
     a = [(r["url"], r["order"]) for r in plain.results.orderBy("order").collect()]
     b = [(r["url"], r["order"]) for r in bloom.results.orderBy("order").collect()]
     assert a == b
@@ -123,13 +124,19 @@ def test_probe_is_distributed_no_driver_collect(spark):
     assert bloom == plain
 
 
-def test_broadcast_limit_crossing_mid_crawl(spark):
+def test_broadcast_limit_crossing_mid_crawl(spark, tmp_path):
     """A crawl whose |seen| crosses broadcast_seen_max_urls MID-CRAWL
-    must transition to the fallback (bloom-cogroup) path and still
-    produce the identical sequence — the filters are maintained every
-    round precisely so the transition is seamless."""
+    moves from the broadcast probe to the bloom-gated disk probe. The
+    broadcast rounds commit no blobs, so the first gated round builds
+    every bucket's blob from the seen files it reads (ruling nothing
+    out); later rounds read the committed blobs, and a resume after
+    the crossing still produces the plain crawl's sequence."""
+    from dataclasses import replace
+
+    from urlmap_spark.operators.diskseen import disk_seen_anti_join, filter_config
     from urlmap_spark.plans.crawl import CrawlConfig, crawl
     from urlmap_spark.sources import corpus as C
+    from urlmap_spark.sources.catalog import RoundCatalog
 
     pdf = C.corpus_pandas(seed=11, n_hosts=4, total_pages=60, with_bytes=False)
     cdf = spark.createDataFrame(pdf)
@@ -138,12 +145,30 @@ def test_broadcast_limit_crossing_mid_crawl(spark):
                  CrawlConfig(max_depth=4, same_path_prefix=False))
     n_total = base.results.count()
     assert n_total > 10
-    # limit of 5: round 0 broadcasts (|seen|=1), later rounds exceed it
-    # and take the bloom-cogroup arm
-    trans = crawl(spark, cdf, seed_url,
-                  CrawlConfig(max_depth=4, same_path_prefix=False,
-                              broadcast_seen_max_urls=5,
-                              bloom_seen=True, bloom_buckets=8))
+    # limit of 5: early rounds broadcast (|seen| <= 5), round k is the
+    # first past it and takes the gated disk probe
+    k = 1 + next(r for r, m in enumerate(base.metrics) if m["order_counter"] > 5)
+    ck = str(tmp_path / "ck")
+    cfg = CrawlConfig(max_depth=4, same_path_prefix=False, broadcast_seen_max_urls=5,
+                      checkpoint_dir=ck, disk_seen=True, disk_seen_buckets=8,
+                      bloom_seen=True, seen_filter_bits=8 << 16)
+    first = crawl(spark, cdf, seed_url, replace(cfg, max_rounds=k + 1))
+    assert [("seen_filter_cfg" in m) for m in first.metrics] == [False] * k + [True]
+    gated = first.metrics[k]
+    assert gated["filter_new"] == 0 and gated["filter_maybe"] >= gated["new_discovered"] > 0
+    # the blobs that round built cover every URL seen so far
+    cat = RoundCatalog(ck)
+    seen = cat.read_union(spark, "seen_delta").select("url")
+    n_seen = seen.count()
+    gate = disk_seen_anti_join(seen, [], 8, filter_config("bloom", 8, 8 << 16),
+                               cat.round_table_dir(k, "seen_filters"))
+    gate.filters.collect()
+    assert gate.observation.get == {"filter_maybe": n_seen, "filter_new": 0}
+
+    trans = crawl(spark, cdf, seed_url, cfg, resume=True)
+    assert trans.rounds > k + 2
+    # the resumed gates read the committed blobs: they prove URLs new
+    assert sum(m.get("filter_new", 0) for m in trans.metrics[k + 1:]) > 0
     a = [(r["url"], r["order"]) for r in base.results.orderBy("order").collect()]
     b = [(r["url"], r["order"]) for r in trans.results.orderBy("order").collect()]
     assert a == b

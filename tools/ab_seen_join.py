@@ -6,7 +6,12 @@ nearly FLAT on small rounds (r2: 2.92 s @1c -> 2.15 s @4c). The VP
 bench always takes the broadcast-seen path (|seen| <= 400k << the
 4M cap), and a broadcast hash relation is built ON THE DRIVER,
 single-threaded, EVERY round — a per-round serial cost the shuffle
-anti-join and the bloom-prefilter paths don't pay.
+anti-join doesn't pay.
+
+An in-memory bloom-prefilter arm used to run here too: 110.5 s against
+55.5 s broadcast and 60.0 s shuffle at local[4] on identical results
+(BENCH/BASELINE.md), which is why the crawl now runs its prefilter only
+inside the disk seen gate (tools/scale_disk_seen.py --prefilter).
 
 Runs bench.run_verified_crawl's exact job (same corpus/seeds/depth)
 under each strategy at the requested core counts and prints walls +
@@ -36,7 +41,6 @@ TICK_RE = re.compile(r"\[r(\d+)\] (\S+)\s+([0-9.]+)s")
 STRATEGIES = {
     "broadcast": dict(),                                   # default path
     "shuffle": dict(broadcast_seen_max_urls=0),            # plain left_anti
-    "bloom": dict(broadcast_seen_max_urls=0, bloom_seen=True),
 }
 
 

@@ -203,8 +203,8 @@ def main() -> None:
         "filters candidates map-side BEFORE the first-wins dedup shuffle — "
         "in a converging crawl most outlinks point at seen URLs and never "
         "ride an exchange. Past the limit the plan reverts to dedup -> "
-        "bloom-cogroup/shuffled anti-join (the 10^10 path). The partial "
-        "(map-side) SortAggregate consumes the already-filtered stream: "
+        "shuffled-hash anti-join or the disk seen gate (the 10^10 path). "
+        "The partial (map-side) SortAggregate consumes the already-filtered stream: "
         "dedup input shrank before its exchange.",
     ))
 

@@ -36,30 +36,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-
-def host_cores() -> int:
-    env = {k: v for k, v in os.environ.items() if k != "OMP_NUM_THREADS"}
-    try:
-        return max(1, int(subprocess.run(["nproc"], env=env, capture_output=True,
-                                         text=True, check=True).stdout))
-    except (OSError, ValueError, subprocess.SubprocessError):
-        return max(1, len(os.sched_getaffinity(0)))
-
-
-def host_heap_gib(cores: int) -> int:
-    with open("/proc/meminfo") as f:
-        total = next(int(ln.split()[1]) for ln in f
-                     if ln.startswith("MemTotal:")) / (1 << 20)
-    return max(1, int((total - 2.0 - 0.5 * cores) / 2))
-
+from hostfit import host_cores, host_heap_gib  # noqa: E402
 
 os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", f"{host_heap_gib(host_cores())}g")
 

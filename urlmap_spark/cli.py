@@ -91,15 +91,16 @@ def build_parser() -> argparse.ArgumentParser:
                    help="SPA detection threshold 0.0-1.0 (reference --js-threshold)")
     p.add_argument("--seen-filter", choices=["bloom", "cuckoo"],
                    default=None,
-                   help="ENABLE the partitioned prefilter backing the URL-seen "
-                        "probe (north_rule: 'bloom/cuckoo URL-seen'); cuckoo "
-                        "adds O(1) deletion for seen-set retirement. Off by "
-                        "default: under --broadcast-seen-max the broadcast "
-                        "path answers the probe exactly anyway")
-    p.add_argument("--broadcast-seen-max", type=int, default=4_000_000,
+                   help="ENABLE the partitioned prefilter inside the disk seen "
+                        "probe (north_rule: 'bloom/cuckoo URL-seen'); requires "
+                        "--disk-seen. cuckoo adds O(1) deletion for seen-set "
+                        "retirement. Off by default: under --broadcast-seen-max "
+                        "the broadcast path answers the probe exactly anyway")
+    p.add_argument("--broadcast-seen-max", type=int, default=None,
                    help="while |seen| is under this, the seen anti-join "
                         "broadcasts (map-side, pre-dedup); 0 disables — "
-                        "past it the prefilter/disk paths take over")
+                        "past it the shuffled/disk paths take over "
+                        "(default: CrawlConfig.broadcast_seen_max_urls)")
     p.add_argument("--disk-seen", action="store_true",
                    help="exact seen anti-join probes the checkpoint's bucketed "
                         "on-disk seen layout task-side (shuffle O(candidates), "
@@ -270,7 +271,8 @@ def main(argv: list[str] | None = None, _spark=None) -> int:
         priority_expr=args.priority,
         bloom_seen=args.seen_filter is not None,
         seen_filter=args.seen_filter or "bloom",
-        broadcast_seen_max_urls=args.broadcast_seen_max,
+        **({"broadcast_seen_max_urls": args.broadcast_seen_max}
+           if args.broadcast_seen_max is not None else {}),
         disk_seen=args.disk_seen,
         disk_seen_buckets=args.disk_seen_buckets,
         compact_seen_every=args.compact_seen_every,

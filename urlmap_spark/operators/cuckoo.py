@@ -1,14 +1,17 @@
 """Partitioned cuckoo-filter URL-seen prefilter — the second structure
 named by the north_rule ("partitioned bloom/cuckoo URL-seen").
 
-Same contract and plumbing as the bloom in seen.py, in two layouts.
-In memory: per hash bucket one fixed-size filter blob persisted as
-(bucket, filter) rows, built/merged with one applyInPandas task per
-bucket and probed by a bucket-cogroup. On disk (operators/diskseen.py):
-one blob per disk-seen bucket that the seen gate's own bucket task
-reads, probes, extends with the round's new URLs and emits — no
-separate build, merge or cogroup pass. Either way the blobs never
-visit the driver, and the filter is ALWAYS backed by the exact
+Same contract and plumbing as the bloom in seen.py. The crawl runs it
+in the disk seen gate's layout only (operators/diskseen.py): one blob
+per disk-seen bucket that the gate's own bucket task reads, probes,
+extends with the round's new URLs and emits — no separate build, merge
+or cogroup pass — and maintenance.retire_urls deletes from those blobs.
+The (bucket, filter) frame API here (``build_filters``,
+``split_candidates``, ``seen_anti_join``, ``remove_urls``: one
+applyInPandas task per bucket, probed by a bucket-cogroup) is kept for
+the declared queries ``seen-cuckoo-anti-join`` / ``seen-cuckoo-delete``
+and the plan dump; the crawl never builds it. Either way the blobs
+never visit the driver, and the filter is ALWAYS backed by the exact
 anti-join — a false positive costs an extra exact check, a false
 negative cannot happen by construction:
 
@@ -24,14 +27,13 @@ DELETION support (drop one copy of the fingerprint) — the bloom can
 only grow, so retiring URLs (e.g. recrawl-after-TTL) needs a rebuild
 there but is an O(1) slot clear here.
 
-In memory, per-URL hashing is JVM-side (the same _with_hash_cols
-columns the bloom uses); the disk layout hashes inside its task
-(seen.task_hashes). Probe, insert and delete are one kernel
-(CuckooBlob) for every path; fingerprint/index math is vectorized
-numpy. Insertion places every fingerprint whose first or second row
-has a free slot in two vectorized passes; only the rest (a few % at
-design occupancy) walk the per-fingerprint eviction chain, which is
-inherently sequential. The PROBE (the per-candidate hot path) is fully
+The frame API hashes JVM-side (the same _with_hash_cols columns the
+bloom uses); the disk layout hashes inside its task (seen.task_hashes).
+Probe, insert and delete are one kernel (CuckooBlob) for every path;
+fingerprint/index math is vectorized numpy. Insertion places every
+fingerprint whose first or second row has a free slot in two
+vectorized passes; only the rest (a few % at design occupancy) walk
+the per-fingerprint eviction chain, which is inherently sequential. The PROBE (the per-candidate hot path) is fully
 vectorized.
 """
 

@@ -25,8 +25,13 @@ SPJ over a bucket-transform-partitioned table): the join aligns with
 the table's persisted bucketing instead of re-hashing it. The same
 layout/contract as the streaming ingest's bucketed seen store.
 
-With a bloom/cuckoo prefilter the whole seen gate is ONE grouped pass
-on the same bucket key (``filter_gate``). Each bucket task
+This is the crawl's only prefilter layout (``CrawlConfig.bloom_seen``
+requires ``disk_seen``): while seen fits in memory the broadcast or
+shuffled-hash anti-join beats a probabilistic pre-pass, and a filter
+pays off through bounded memory and deletion, which is this path and
+maintenance.retire_urls. With a bloom/cuckoo prefilter the whole seen
+gate is ONE grouped pass on the same bucket key (``filter_gate``).
+Each bucket task
 
 1. reads its own prefilter blob task-side from the last committed
    round's ``seen_filters/_ub=<b>/`` (the blobs are partitioned like
@@ -93,8 +98,8 @@ def with_bucket(df: DataFrame, n_buckets: int, url_col: str = "url") -> DataFram
 
 
 def filter_config(kind: str, n_buckets: int, total_bits: int):
-    """Disk-layout prefilter config: one blob per disk bucket, holding
-    the same total bits as the in-memory layout's blobs together."""
+    """Disk-layout prefilter config: ``total_bits`` split evenly over
+    one blob per disk bucket (each rounded down to a multiple of 64)."""
     from .cuckoo import CuckooConfig
     from .seen import BloomConfig
 
@@ -108,9 +113,9 @@ def filter_config(kind: str, n_buckets: int, total_bits: int):
 
 def layout_record(cfg) -> list:
     """What a round's metrics record as ``seen_filter_cfg`` for blobs in
-    this layout; the 4th field tells it apart from the in-memory
-    (bucket, filter) layout, so a checkpoint with other blobs is
-    rebuilt from seen, never misread."""
+    this layout; the 4th field tells it apart from the 3-field record
+    of the retired in-memory (bucket, filter) layout, so a checkpoint
+    with other blobs is rebuilt from seen, never misread."""
     return [cfg.kind, cfg.n_buckets, cfg.m_bits, LAYOUT]
 
 

@@ -98,12 +98,14 @@ def href_category_expr(base_col: str | None = None) -> Column:
     trim/nonempty guards), so no separate skip category is needed — the
     UDF branch drops them.
 
-    base_col — when given, a BASE containing a dot segment routes the
-    whole row to the exact UDF: the native branches splice the base's
-    directory verbatim, but the resolver collapses dot segments of the
-    merged path (RFC 3986 remove_dot_segments), so a dotted base (a
-    user seed is normalized but not dot-collapsed) would diverge.
-    Found by the hypothesis parity fuzz (tests/test_fuzz_parity.py)."""
+    base_col — when given, a BASE containing a dot segment or an empty
+    path segment ('//') routes the whole row to the exact UDF: the
+    native branches splice the base's directory verbatim, but the
+    resolver collapses dot segments of the merged path (RFC 3986
+    remove_dot_segments) and drops its interior empty segments, so a
+    dotted base (a user seed is normalized but not dot-collapsed, found
+    by the hypothesis parity fuzz, tests/test_fuzz_parity.py) or a
+    '/a//' base (reachable through absolute hrefs) would diverge."""
     href = F.col("href")
     trimmed = href == F.trim(href)
     nonempty = href != ""
@@ -115,12 +117,16 @@ def href_category_expr(base_col: str | None = None) -> Column:
 
     is_abs = ((href.startswith("http://") | href.startswith("https://"))
               & trimmed & ~dotseg)
-    # base-DIRECTORY categories (3/4/6) additionally need a dot-free
-    # base: they splice the base's dir verbatim, while the resolver
-    # collapses dot segments of the merged path. Cat 1 never consults
-    # the base; cat 2 only uses its scheme://host — both exempt.
+    # base-DIRECTORY categories (3/4/6) additionally need a base path
+    # without dot or empty segments: they splice the base's dir
+    # verbatim, while the resolver collapses dot segments and drops
+    # interior empty segments of the merged path ('/a//' + '../c' is
+    # '/c' there, '/a/c' spliced). One regex: a dot segment anywhere,
+    # or a '//' after the scheme's '://' and before any '?'/'#'. Cat 1 never
+    # consults the base; cat 2 only uses its scheme://host — both exempt.
     base_ok = (F.lit(True) if base_col is None
-               else ~F.col(base_col).rlike(r"(^|/)\.{1,2}([/?#]|$)"))
+               else ~F.col(base_col).rlike(
+                   r"(^|/)\.{1,2}([/?#]|$)|^[^:/?#]+://[^?#]*//"))
     is_rootrel = (
         href.startswith("/") & ~href.startswith("//") & ~dotseg & trimmed
     )
@@ -277,9 +283,10 @@ def canonicalize_links(exploded: DataFrame, base_col: str = "url",
         .withColumn("_dir", F.when(F.col("_dir") == "", F.lit("/")).otherwise(F.col("_dir")))
         # parent of _dir for '../rest' (cat 4); RFC 3986 clamps '..' at
         # the root, so '/' stays '/': drop the trailing slash, then
-        # strip after the last '/' (pre-guard '/'-input yields '' where
-        # the old regex kept '/', and the guard folds '' -> '/' — the
-        # post-guard value is identical, pinned by the parity fuzz)
+        # strip after the last '/' ('/'-input yields '', which the guard
+        # folds to '/'). Exact for bases without empty path segments
+        # only: a '/a//' dir gives '/a/' here, '/' in the resolver — such
+        # bases never reach cat 4 (href_category_expr's base_ok)
         .withColumn("_t", F.substring(F.col("_dir"), 1, F.length("_dir") - F.lit(1)))
         .withColumn("_pdir", F.substring(
             F.col("_dir"), 1,

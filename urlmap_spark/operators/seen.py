@@ -8,8 +8,8 @@ URL-seen structure". Design (SURVEY.md §4.3.1):
   URL, and a false negative cannot happen by construction;
 - per host-hash bucket, a fixed-size bloom filter (numpy bitmap, k
   hashes derived from two 64-bit hashes) summarizes every seen URL;
-  filters are built/merged per round with applyInPandas (one task per
-  bucket) and persisted as (bucket, version, filter binary) rows;
+  the frame API builds/merges filters with applyInPandas (one task per
+  bucket) as (bucket, filter binary) rows;
 - the probe COGROUPS candidates with the filter table on the bucket
   key (one shuffle on a 4-byte key, no driver hop): rows whose bucket
   filter definitely excludes them are DEFINITELY NEW and skip the
@@ -18,10 +18,20 @@ URL-seen structure". Design (SURVEY.md §4.3.1):
 At 10^10 URLs the exact set is a bucketed Iceberg table and the maybe-
 seen fraction ~= true-dup fraction + false-positive rate — the anti-
 join's probe side shrinks by the share of genuinely-new URLs, which in
-a growing crawl is most of them. That is the disk path's layout
+a growing crawl is most of them.
+
+The crawl runs the prefilter in ONE layout only, the disk seen gate's
 (operators/diskseen.py): one blob per disk-seen bucket, probed and
-extended inside the exact probe's own bucket task through the same
-BloomBlob kernel the in-memory closures here use.
+extended inside the exact probe's own bucket task through the BloomBlob
+kernel and the task-side hashes (``task_hashes``) defined here. While
+seen fits in memory the crawl's broadcast or shuffled-hash anti-join
+beats this frame pre-pass (a local[4] crawl with |seen| <= 400k:
+55.5 s broadcast, 60.0 s shuffled, 110.5 s behind the frame
+prefilter; BENCH/BASELINE.md), so ``crawl()`` never builds a
+(bucket, filter) frame. The frame API below — ``build_filters``,
+``split_candidates``, ``seen_anti_join`` — is kept for the declared
+queries that pin it against DuckDB twins (``seen-bloom-anti-join`` and
+the cuckoo pair) and for the plan dump.
 """
 
 from __future__ import annotations

@@ -33,6 +33,7 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 from urllib.parse import urlsplit
 
 import numpy as np
@@ -42,12 +43,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import urlcore
-from ..functions.urlkernel import (
-    same_domain_expr,
-    same_path_prefix_expr,
-    should_skip_expr,
-    status_ok_expr,
-)
+from ..functions.urlkernel import should_skip_expr, status_ok_expr
+from ..operators import diskseen
 from ..operators.extract import canonicalize_links, explode_hrefs, href_category_expr
 from ..operators.order import (
     first_wins,
@@ -57,7 +54,6 @@ from ..operators.order import (
 )
 from ..operators.politeness import schedule_frontier
 from ..operators.robots import host_rule_lists, robots_gate
-from ..operators.seen import BloomConfig, build_filters, seen_anti_join
 from ..sources.catalog import RoundCatalog
 
 FRONTIER_SCHEMA = T.StructType([
@@ -66,7 +62,16 @@ FRONTIER_SCHEMA = T.StructType([
     T.StructField("order", T.LongType(), False),
 ])
 
-RESULT_COLUMNS = ["url", "depth", "order", "status", "ok", "n_links", "round"]
+RESULT_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("depth", T.IntegerType()),
+    T.StructField("order", T.LongType()),
+    T.StructField("status", T.IntegerType()),
+    T.StructField("ok", T.BooleanType()),
+    T.StructField("n_links", T.IntegerType()),
+    T.StructField("round", T.IntegerType()),
+])
+RESULT_COLUMNS = RESULT_SCHEMA.fieldNames()
 
 _DEBUG = os.environ.get("URLMAP_CRAWL_DEBUG") == "1"
 
@@ -128,15 +133,22 @@ class CrawlConfig:
                                              # rounds unchanged)
     verify_payload: bool = False             # decode fetched bytes + phash check
                                              # (input_hint per-row invariant)
-    bloom_seen: bool = False                 # partitioned bloom prefilter in
-                                             # front of the exact seen anti-join
-    bloom_buckets: int = 32                  # x bloom_bits = total filter bits
-    bloom_bits: int = 1 << 22                # (disk_seen: one blob per disk bucket)
+    bloom_seen: bool = False                 # partitioned prefilter inside the
+                                             # disk seen gate (one blob per disk
+                                             # bucket, probed and extended by the
+                                             # exact bucket probe's own task,
+                                             # operators/diskseen.py). Requires
+                                             # disk_seen: while seen fits in
+                                             # memory the broadcast and
+                                             # shuffled-hash probes beat a
+                                             # probabilistic pre-pass
+    seen_filter_bits: int = 1 << 27          # total prefilter bits, split
+                                             # evenly over the disk buckets
     seen_filter: str = "bloom"               # "bloom" | "cuckoo" — which
-                                             # partitioned prefilter structure
-                                             # backs the seen probe (north_rule
-                                             # names both; operators/cuckoo.py
-                                             # adds deletion support)
+                                             # prefilter structure backs the
+                                             # disk gate (north_rule names
+                                             # both; the cuckoo adds deletion,
+                                             # used by maintenance.retire_urls)
     broadcast_seen_max_urls: int = 600_000   # while |seen| (known EXACTLY
                                              # driver-side: it equals
                                              # order_counter) is under this,
@@ -149,7 +161,7 @@ class CrawlConfig:
                                              # enter a shuffle. Past the
                                              # limit the plan flips to dedup
                                              # -> shuffled-hash anti-join
-                                             # (or bloom-cogroup/disk probe):
+                                             # (or the disk gate):
                                              # the broadcast's serial driver
                                              # build + per-executor ship
                                              # grows with |seen| (measured
@@ -175,7 +187,7 @@ class CrawlConfig:
                                              # analog). Requires
                                              # checkpoint_dir; composes with
                                              # the broadcast-seen fast path and
-                                             # bloom/cuckoo (one-pass gate)
+                                             # bloom_seen (one-pass gate)
     disk_seen_buckets: int = 64              # |seen|/B must fit a task (the
                                              # scale knob: 10^10 urls / 4096
                                              # buckets ~ 150 MB per task)
@@ -228,8 +240,19 @@ class CrawlRun:
     seen: DataFrame | None = None
 
 
-def _empty_frontier(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], FRONTIER_SCHEMA)
+def _union_all(parts: list[DataFrame]) -> DataFrame | None:
+    """unionByName over ``parts`` in order; None when there are none."""
+    return reduce(DataFrame.unionByName, parts) if parts else None
+
+
+def _report(progress, m: dict) -> None:
+    """Hand a copy of one round's metrics to the progress callback;
+    its exceptions are swallowed (reporting never kills a crawl)."""
+    if progress is not None:
+        try:
+            progress(dict(m))
+        except Exception:  # noqa: BLE001
+            pass
 
 
 def crawl(
@@ -257,6 +280,25 @@ def crawl(
     in favor of the persisted table (normalization and round-0 order
     parity are guaranteed by construction)."""
     cfg = cfg or CrawlConfig()
+    if cfg.disk_seen and not cfg.checkpoint_dir:
+        raise ValueError("disk_seen requires checkpoint_dir: the disk-backed "
+                         "anti-join probes the catalog's bucketed seen_delta "
+                         "layout")
+    if cfg.bloom_seen and not cfg.disk_seen:
+        raise ValueError("bloom_seen requires disk_seen: the prefilter lives "
+                         "inside the disk seen gate, one blob per disk bucket")
+    politeness = (cfg.host_quota is not None or cfg.default_quota is not None
+                  or cfg.global_cap is not None)
+    if cfg.priority_expr is not None and not politeness:
+        raise ValueError(
+            "priority_expr needs a politeness budget (host_quota / "
+            "default_quota / global_cap) to act on — without one the "
+            "whole frontier is processed every round and the priority "
+            "would be a silent no-op")
+    # one blob per disk bucket (raises on an unknown seen_filter)
+    filter_cfg = (diskseen.filter_config(cfg.seen_filter, cfg.disk_seen_buckets,
+                                         cfg.seen_filter_bits)
+                  if cfg.bloom_seen else None)
     seeds_df: DataFrame | None = None
     if isinstance(seed_url, DataFrame):
         if cfg.same_domain:
@@ -264,7 +306,6 @@ def crawl(
                              "scoped crawls take a seed list")
         seeds_df = seed_url
         seeds: list[str] = []
-        seed = None
     else:
         seed_list = [seed_url] if isinstance(seed_url, str) else list(seed_url)
         seeds = []
@@ -276,7 +317,8 @@ def crawl(
             if n not in seen_set:
                 seen_set.add(n)
                 seeds.append(n)
-        seed = seeds[0]
+        if not seeds:
+            raise ValueError("no start URL")
     # the seed list as ONE local relation (pandas-built: a LocalTableScan).
     # A list-of-tuples frame plans as a Python-RDD scan that re-runs on
     # every use — the round-0 frontier, the disk gate's broadcast of the
@@ -301,11 +343,6 @@ def crawl(
         "spark.sql.optimizer.excludedRules",
         _EXCLUDE if not old_excluded else f"{old_excluded},{_EXCLUDE}",
     )
-
-    if cfg.disk_seen and not cfg.checkpoint_dir:
-        raise ValueError("disk_seen requires checkpoint_dir: the disk-backed "
-                         "anti-join probes the catalog's bucketed seen_delta "
-                         "layout")
 
     try:
         tick0 = _Tick(0)  # setup attribution (debug only)
@@ -431,8 +468,7 @@ def crawl(
                 sd_pb = None
                 sd_tbl = frontier
                 if cfg.disk_seen:
-                    from ..operators import diskseen as _dsk0
-                    sd_tbl = _dsk0.with_bucket(frontier, cfg.disk_seen_buckets)
+                    sd_tbl = diskseen.with_bucket(frontier, cfg.disk_seen_buckets)
                     sd_pb = ["_ub"]
                     sd_meta["disk_seen_cfg"] = [cfg.disk_seen_buckets]
                 catalog.commit_table("seeds", sd_tbl, partition_by=sd_pb,
@@ -460,6 +496,7 @@ def crawl(
         tick0("setup_seen_ckpt")
         seeds_seen_small: DataFrame | None = None
         seeds_table_dirs: list[str] = []
+        filter_dir = None
         if cfg.disk_seen:
             # the only seen URLs that never reach the catalog's seen_delta
             # tables are the seeds: list seeds stay a tiny broadcastable
@@ -472,11 +509,12 @@ def crawl(
             # FLAT dirs: the bucket probe would read nothing from them and
             # silently re-enqueue seen URLs — refuse instead
             checks = []
-            if df_seeded and catalog is not None and catalog.has_table("seeds"):
+            if df_seeded and catalog.has_table("seeds"):
                 checks.append(("seeds table", catalog.read_table_meta("seeds")))
                 seeds_table_dirs = [catalog.table_dir("seeds")]
-            if resume and catalog is not None and catalog.last_round() is not None:
-                checks.append(("checkpoint", catalog.read_metrics(catalog.last_round())))
+            last = catalog.last_round() if resume else None
+            if last is not None:
+                checks.append(("checkpoint", catalog.read_metrics(last)))
             for what, meta in checks:
                 if meta.get("disk_seen_cfg") != [cfg.disk_seen_buckets]:
                     raise ValueError(
@@ -484,64 +522,18 @@ def crawl(
                         f"{meta.get('disk_seen_cfg')!r}, this run wants "
                         f"{[cfg.disk_seen_buckets]!r} — bucket layouts are "
                         "incompatible; re-crawl or match disk_seen_buckets")
-        # prefilter state. Disk path: the gate reads and rewrites its own
-        # blobs task-side (one per disk bucket, diskseen.filter_gate);
-        # the driver only tracks which committed round holds them — a
-        # checkpoint with another blob layout is rebuilt from seen.
-        # In-memory path: a (bucket, filter) frame folded every round.
-        bloom_cfg = filters = filter_dir = None
-        if cfg.bloom_seen and cfg.disk_seen:
-            from ..operators import diskseen as _dsk
-            bloom_cfg = _dsk.filter_config(cfg.seen_filter, cfg.disk_seen_buckets,
-                                           cfg.bloom_buckets * cfg.bloom_bits)
-            filter_record = _dsk.layout_record(bloom_cfg)
-            last = catalog.last_round() if resume else None
-            if last is not None and catalog.read_metrics(last).get(
-                    "seen_filter_cfg") == filter_record:
+            # the gate reads and rewrites its own prefilter blobs task-side;
+            # the driver only tracks which committed round holds them. A
+            # checkpoint without blobs in this layout has each bucket's
+            # blob rebuilt from seen by the next gate
+            if filter_cfg is not None and last is not None and catalog.read_metrics(
+                    last).get("seen_filter_cfg") == diskseen.layout_record(filter_cfg):
                 filter_dir = catalog.round_table_dir(last, "seen_filters")
-        elif cfg.bloom_seen:
-            from ..operators import cuckoo as _fmod
-            if cfg.seen_filter == "bloom":
-                from ..operators import seen as _fmod
-            elif cfg.seen_filter != "cuckoo":
-                raise ValueError(f"unknown seen_filter: {cfg.seen_filter!r}")
-            bloom_cfg = (_fmod.CuckooConfig if cfg.seen_filter == "cuckoo"
-                         else BloomConfig)(cfg.bloom_buckets, cfg.bloom_bits)
-            filter_record = [cfg.seen_filter, cfg.bloom_buckets, cfg.bloom_bits]
-            if resume and catalog is not None and catalog.last_round() is not None:
-                # the committed seen_filters cover exactly the committed
-                # seen set (folded pre-commit), so a matching-config
-                # resume loads the blobs instead of rebuilding them
-                last = catalog.last_round()
-                if catalog.read_metrics(last).get("seen_filter_cfg") == filter_record:
-                    try:
-                        filters = catalog.read(spark, last, "seen_filters")
-                        if seeds:
-                            # extra resume seeds joined `seen` above, so
-                            # they must enter the blobs too — a filter
-                            # miss bypasses the exact anti-join entirely
-                            filters = _fmod.build_filters(
-                                seed_frame.select("url"), bloom_cfg,
-                                existing=filters)
-                        filters = filters.localCheckpoint(eager=True)
-                    except Exception:  # noqa: BLE001 — older checkpoint layout
-                        filters = None
-            if filters is None:
-                filters = _fmod.build_filters(seen_parts[0], bloom_cfg).localCheckpoint(eager=True)
-        total_skipped = 0
         fcols = ["url", "depth", "order"] + (["attempt"] if has_attempt else [])
         # the robots rules folded once per crawl into one row per host
         # (operators/robots.py): each round's gate is a broadcast join
         robots_lists = (host_rule_lists(cfg.robots_rules).localCheckpoint(eager=True)
                         if cfg.robots_rules is not None else None)
-        politeness = (cfg.host_quota is not None or cfg.default_quota is not None
-                      or cfg.global_cap is not None)
-        if cfg.priority_expr is not None and not politeness:
-            raise ValueError(
-                "priority_expr needs a politeness budget (host_quota / "
-                "default_quota / global_cap) to act on — without one the "
-                "whole frontier is processed every round and the priority "
-                "would be a silent no-op")
         tick0("setup_rest")
 
         # n_frontier, the frontier's exact row count, stays driver-side:
@@ -607,12 +599,7 @@ def crawl(
                     "order_counter": order_counter, "wall_s": round(time.time() - t0, 3),
                     **({"payload_ok": 0} if cfg.verify_payload else {}),
                 })
-                if cfg.progress is not None:
-                    try:
-                        cfg.progress(dict(metrics[-1]))
-                    except Exception:  # noqa: BLE001
-                        pass
-                total_skipped += skipped_depth
+                _report(cfg.progress, metrics[-1])
                 break
 
             # --- fetch = join against the corpus (reference: client.Get ->
@@ -779,9 +766,7 @@ def crawl(
 
             # --- first-wins intra-round dedup + anti-join the seen set --------
             new_filters = gate_obs = None  # set by the disk gate
-            seen = seen_parts[0] if seen_parts else None
-            for p in seen_parts[1:]:
-                seen = seen.unionByName(p)
+            seen = _union_all(seen_parts)
             cand = links.select(
                 F.col("outlink").alias("url"), "parent_order", "pos", "depth")
             # packed-long first-wins when this round's tie-key maxima fit
@@ -811,27 +796,21 @@ def crawl(
                 # the candidates + a 4-byte bucket key; with a prefilter
                 # the same bucket tasks also probe and extend the blobs
                 # (diskseen.py)
-                from ..operators import diskseen as _dsk
-                gate = _dsk.disk_seen_anti_join(
+                gate = diskseen.disk_seen_anti_join(
                     _fw(cand),
                     seeds_table_dirs + catalog.table_paths("seen_delta"),
-                    cfg.disk_seen_buckets, bloom_cfg, filter_dir,
+                    cfg.disk_seen_buckets, filter_cfg, filter_dir,
                     extra_seen=seeds_seen_small,
                 )
                 new, new_filters, gate_obs = gate.new, gate.filters, gate.observation
             else:
-                deduped = _fw(cand)
-                if filters is None:
-                    # shuffled-HASH anti, not sort-merge: both sides are
-                    # exchanged either way, but SHJ skips both sorts and
-                    # builds each partition's seen hash table in parallel
-                    # (url keys are unique, so build partitions are
-                    # uniform — no skew risk; r6 ABAB on the bench crawl:
-                    # late-round walls 6.1-7.1s -> 4.2-4.3s)
-                    new = deduped.join(seen.hint("shuffle_hash"), "url",
-                                       "left_anti")
-                else:
-                    new = _fmod.seen_anti_join(deduped, seen, filters, bloom_cfg)
+                # shuffled-HASH anti, not sort-merge: both sides are
+                # exchanged either way, but SHJ skips both sorts and
+                # builds each partition's seen hash table in parallel
+                # (url keys are unique, so build partitions are uniform —
+                # no skew risk; r6 ABAB on the bench crawl: late-round
+                # walls 6.1-7.1s -> 4.2-4.3s)
+                new = _fw(cand).join(seen.hint("shuffle_hash"), "url", "left_anti")
 
             # --- assign global crawl order (FIFO enqueue order). ONE fused
             # materialization: with_global_order eagerly checkpoints the
@@ -867,7 +846,7 @@ def crawl(
             tick("frontier_ckpt")
 
             results_r = final.select(
-                "url", "depth", "order", "status", "ok",
+                "url", "depth", "order", F.col("status").cast("int"), "ok",
                 F.lit(round_idx).alias("round"),
             ).withColumn("n_links", F.lit(None).cast("int")).select(*RESULT_COLUMNS)
 
@@ -887,8 +866,8 @@ def crawl(
                 **({"deferred": n_deferred} if politeness else {}),
                 # lets resume/maintenance validate the persisted
                 # seen_filters blobs before trusting them
-                **({"seen_filter_cfg": filter_record}
-                   if filters is not None or new_filters is not None else {}),
+                **({"seen_filter_cfg": diskseen.layout_record(filter_cfg)}
+                   if new_filters is not None else {}),
                 # lets a disk_seen resume validate the persisted bucket
                 # layout before trusting it
                 **({"disk_seen_cfg": [cfg.disk_seen_buckets]}
@@ -903,17 +882,6 @@ def crawl(
                 **({"payload_ok": int(om["payload_ok"] or 0)} if cfg.verify_payload else {}),
                 **({"rendered": int(om["rendered"] or 0)} if dispatch else {}),
             })
-            total_skipped += skipped_depth + int(blocked_robots)
-
-            if filters is not None:
-                # fold the round's delta BEFORE the commit so the
-                # persisted seen_filters cover exactly the committed
-                # seen set — a resume can then load the blobs directly
-                # instead of rebuilding from 10^10 seen rows (a stale
-                # pre-delta blob would false-negative this round's URLs
-                # and re-enqueue duplicates)
-                filters = _fmod.build_filters(new.select("url"), bloom_cfg,
-                                              existing=filters).localCheckpoint(eager=True)
 
             if catalog is not None:
                 # per-PARTITION lineage (north_rule): bucket is the same
@@ -936,8 +904,7 @@ def crawl(
                 if bucket_nf:
                     pb["next_frontier"] = ["_hb"]
                 if cfg.disk_seen and n_new > 0:  # 0-row partitionBy writes no files
-                    from ..operators import diskseen as _dsk
-                    sd = _dsk.with_bucket(sd, cfg.disk_seen_buckets)
+                    sd = diskseen.with_bucket(sd, cfg.disk_seen_buckets)
                     pb["seen_delta"] = ["_ub"]
                 tables = {
                     "results": results_r,
@@ -949,9 +916,7 @@ def crawl(
                     "seen_delta": sd,
                     "lineage": lineage,
                 }
-                if filters is not None:
-                    tables["seen_filters"] = filters
-                elif new_filters is not None:
+                if new_filters is not None:
                     tables["seen_filters"] = new_filters
                     pb["seen_filters"] = ["_ub"]
                 # the gate's filter counts are observed on its blob write
@@ -995,36 +960,24 @@ def crawl(
                 frontier = next_frontier
 
             if len(seen_parts) > 64:  # bound the union width on deep crawls
-                compacted = seen_parts[0]
-                for p in seen_parts[1:]:
-                    compacted = compacted.unionByName(p)
-                seen_parts = [compacted.localCheckpoint(eager=True)]
+                seen_parts = [_union_all(seen_parts).localCheckpoint(eager=True)]
 
             n_frontier = n_new + n_deferred + n_retry
             metrics.append(m)
-            if cfg.progress is not None:
-                try:
-                    cfg.progress(dict(m))
-                except Exception:  # noqa: BLE001 — reporting never kills a crawl
-                    pass
+            _report(cfg.progress, m)
             round_idx += 1
 
         if catalog is not None:
             # interrupted before any round committed (e.g. a max_rounds=0
             # probe of a DataFrame-seeded setup): the seeds are all state
             results = (catalog.read_union(spark, "results")
-                       if catalog.committed_rounds()
-                       else spark.createDataFrame([], T.StructType(
-                           [T.StructField(c, T.StringType()) for c in RESULT_COLUMNS])))
+                       if catalog.committed_rounds() else None)
             seen_df = committed_seen()
         else:
-            results = results_parts[0] if results_parts else spark.createDataFrame([], T.StructType(
-                [T.StructField(c, T.StringType()) for c in RESULT_COLUMNS]))
-            for p in results_parts[1:]:
-                results = results.unionByName(p)
-            seen_df = seen_parts[0]
-            for p in seen_parts[1:]:
-                seen_df = seen_df.unionByName(p)
+            results = _union_all(results_parts)
+            seen_df = _union_all(seen_parts)
+        if results is None:
+            results = spark.createDataFrame([], RESULT_SCHEMA)
 
         return CrawlRun(results=results, metrics=metrics, rounds=round_idx, seen=seen_df)
 

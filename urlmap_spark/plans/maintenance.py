@@ -17,13 +17,18 @@ operations become first-class:
   them. The seen rewrite is the catalog's snapshot-minus path (an
   Iceberg row-level DELETE becomes a rewrite in the shim), and the
   persisted prefilter blobs are updated in place: the cuckoo filter
-  DELETES the fingerprints in O(retired) (operators/cuckoo.py
-  remove_urls — safe because every retired URL was inserted), while a
-  bloom cannot unset bits and must REBUILD from the surviving seen
-  rows — the concrete reason the north_rule names both structures.
-  Blobs in the disk layout (one per disk bucket, diskseen.py) are
-  deleted from / rebuilt under the same bucket key and task-side
-  hashes the crawl's seen gate inserts with.
+  DELETES the fingerprints in O(retired) (diskseen.remove_urls — safe
+  because every retired URL was inserted), while a bloom cannot unset
+  bits and must REBUILD from the surviving seen rows — the concrete
+  reason the north_rule names both structures.
+
+The crawl persists prefilter blobs in one layout only, the disk seen
+gate's (one blob per disk bucket, operators/diskseen.py); maintenance
+deletes from / rebuilds them under the same bucket key and task-side
+hashes the gate inserts with. A checkpoint whose last round records
+any other ``seen_filter_cfg`` (the retired in-memory layout's three
+fields) counts as holding no blobs: they are neither read nor carried
+forward, and the next gate rebuilds each bucket's blob from seen.
 
 Both commit a normal catalog round (marker-last atomicity), so a
 crashed maintenance run is invisible and ``crawl(..., resume=True)``
@@ -35,8 +40,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import diskseen
 from ..operators.order import with_global_order
 from ..sources.catalog import RoundCatalog
+
+_BLOB_PB = {"seen_filters": ["_ub"]}  # blobs are committed one per disk bucket
 
 
 def _url_frame(spark: SparkSession, urls) -> DataFrame:
@@ -61,26 +69,25 @@ def _zero_metrics(round_idx: int, order_counter: int, **extra) -> dict:
 
 
 def _load_filter_state(spark, cat: RoundCatalog, last: int):
-    """(cfg, filters_df, partition_by) from the last committed round, or
-    (None, None, None) when blobs were not persisted there. A 4-field
-    seen_filter_cfg marks the disk layout: one (_ub, filter) blob per
-    disk bucket, committed partitioned by _ub."""
+    """(cfg, blobs) of the disk-layout prefilter blobs the last committed
+    round holds, or (None, None): no blobs, or a record of another
+    layout (module doc)."""
     fc = cat.read_metrics(last).get("seen_filter_cfg")
-    if not fc:
-        return None, None, None
-    kind, n_buckets, m_bits = fc[0], int(fc[1]), int(fc[2])
+    if not fc or fc[3:] != [diskseen.LAYOUT]:
+        return None, None
     try:
         filters = cat.read(spark, last, "seen_filters")
-    except Exception:  # noqa: BLE001 — blobs absent in this layout
-        return None, None, None
-    if len(fc) > 3:
-        from ..operators.diskseen import filter_config
-        return filter_config(kind, n_buckets, n_buckets * m_bits), filters, ["_ub"]
-    if kind == "cuckoo":
-        from ..operators.cuckoo import CuckooConfig
-        return CuckooConfig(n_buckets, m_bits), filters, None
-    from ..operators.seen import BloomConfig
-    return BloomConfig(n_buckets, m_bits), filters, None
+    except Exception:  # noqa: BLE001 — blobs absent
+        return None, None
+    n_buckets = int(fc[1])
+    return diskseen.filter_config(fc[0], n_buckets, n_buckets * int(fc[2])), filters
+
+
+def _layout_meta(m: dict, blobs: bool) -> dict:
+    """The layout records a maintenance round carries forward: the disk
+    seen layout always, the prefilter's only along with its blobs."""
+    keys = ("disk_seen_cfg", "seen_filter_cfg") if blobs else ("disk_seen_cfg",)
+    return {k: m[k] for k in keys if m.get(k)}
 
 
 def requeue_urls(spark: SparkSession, checkpoint_dir: str, urls,
@@ -120,17 +127,13 @@ def requeue_urls(spark: SparkSession, checkpoint_dir: str, urls,
     n_requeued = new_counter - order_counter
 
     tables = {"next_frontier": merged}
-    _, filters, fpb = _load_filter_state(spark, cat, last)
+    _, filters = _load_filter_state(spark, cat, last)
     if filters is not None:
         tables["seen_filters"] = filters  # carry forward unchanged
     mm = _zero_metrics(last + 1, new_counter, maintenance="requeue",
-                       requeued=n_requeued,
-                       **({"seen_filter_cfg": m["seen_filter_cfg"]}
-                          if m.get("seen_filter_cfg") else {}),
-                       **({"disk_seen_cfg": m["disk_seen_cfg"]}
-                          if m.get("disk_seen_cfg") else {}))
+                       requeued=n_requeued, **_layout_meta(m, filters is not None))
     cat.commit_round(last + 1, tables, mm,
-                     partition_by={"seen_filters": fpb} if fpb else None)
+                     partition_by=_BLOB_PB if filters is not None else None)
     return {"requeued": n_requeued, "round": last + 1}
 
 
@@ -144,9 +147,9 @@ def retire_urls(spark: SparkSession, checkpoint_dir: str, urls) -> dict:
     committed seen deltas (resume re-pins them into seen from the
     ``seeds`` argument every run), so they fall out of the semi-join
     below. The seen rewrite is ``compact(minus=...)``
-    (snapshot-isolated); persisted prefilter blobs are deleted from in
-    O(retired) for the cuckoo filter and rebuilt from the surviving
-    rows for the bloom.
+    (snapshot-isolated); persisted disk-layout prefilter blobs are
+    deleted from in O(retired) for the cuckoo filter and rebuilt from
+    the surviving rows for the bloom.
     """
     cat = RoundCatalog(checkpoint_dir)
     last = cat.last_round()
@@ -164,42 +167,29 @@ def retire_urls(spark: SparkSession, checkpoint_dir: str, urls) -> dict:
         .localCheckpoint(eager=True)
     n_retired = retire.count()
 
-    fcfg, filters, fpb = _load_filter_state(spark, cat, last)
+    fcfg, filters = _load_filter_state(spark, cat, last)
 
     # snapshot = (all committed seen) minus retired; vacuums the deltas
     # it covers so resume reads one snapshot + post-maintenance deltas
     cat.compact(spark, "seen_delta", minus=retire, vacuum=True)
 
     tables = {"next_frontier": frontier}
-    if filters is not None and fpb:
-        from ..operators import diskseen
-        if fcfg.kind == "cuckoo":
-            tables["seen_filters"] = diskseen.remove_urls(filters, retire, fcfg)
-        else:
-            # the disk gate with no blobs to read rebuilds each bucket's
-            # blob from its surviving seen rows (the seed table's too)
-            dirs = cat.table_paths("seen_delta")
-            if cat.has_table("seeds"):
-                dirs.append(cat.table_dir("seeds"))
-            tables["seen_filters"] = diskseen.disk_seen_anti_join(
-                spark.createDataFrame([], "url string"), dirs, fcfg.n_buckets,
-                fcfg, None).filters
+    if filters is not None and fcfg.kind == "cuckoo":
+        tables["seen_filters"] = diskseen.remove_urls(filters, retire, fcfg)
     elif filters is not None:
-        if fcfg.kind == "cuckoo":
-            from ..operators.cuckoo import remove_urls
-            tables["seen_filters"] = remove_urls(filters, retire, fcfg)
-        else:
-            from ..operators.seen import build_filters
-            tables["seen_filters"] = build_filters(
-                cat.read_union(spark, "seen_delta").select("url"), fcfg)
+        # the disk gate with no blobs to read rebuilds each bucket's
+        # blob from its surviving seen rows (the seed table's too)
+        dirs = cat.table_paths("seen_delta")
+        if cat.has_table("seeds"):
+            dirs.append(cat.table_dir("seeds"))
+        tables["seen_filters"] = diskseen.disk_seen_anti_join(
+            spark.createDataFrame([], "url string"), dirs, fcfg.n_buckets,
+            fcfg, None).filters
     mm = _zero_metrics(last + 1, int(m["order_counter"]),
                        maintenance="retire", retired=n_retired,
                        skipped_pending=n_pending,
-                       **({"seen_filter_cfg": m["seen_filter_cfg"]}
-                          if m.get("seen_filter_cfg") else {}),
-                       **({"disk_seen_cfg": m["disk_seen_cfg"]}
-                          if m.get("disk_seen_cfg") else {}))
+                       **_layout_meta(m, filters is not None))
     cat.commit_round(last + 1, tables, mm,
-                     partition_by={"seen_filters": fpb} if fpb else None)
+                     partition_by=_BLOB_PB if filters is not None else None)
     return {"retired": n_retired, "skipped_pending": n_pending,
             "round": last + 1}

@@ -7,8 +7,10 @@ Modes:
                          $SPARK_GRAFT_SF_DIR (default: the largest
                          sf* test-data dir present), plans written to
                          plans/r06/<query>_<tag>.txt
-  --crawl                one bench-config crawl with URLMAP_CRAWL_DEBUG=1
-                         phase ticks (per-round breakdown)
+  --crawl                three bench-config crawls over one cached
+                         corpus: each prints its per-round metrics dicts
+                         and then bench.run_crawl's summary, one JSON
+                         line each
 
 Host-fit defaults: $SPARK_GRAFT_CPUS defaults to every core nproc
 reports and the driver heap ($URLMAP_SPARK_DRIVER_MEM) to one derived
@@ -17,7 +19,10 @@ from MemTotal (tools/hostfit.py).
 Usage:
   python bench_extra.py --queries --tag before
   python bench_extra.py --queries --tag after text-langid text-quality
-  URLMAP_CRAWL_DEBUG=1 python bench_extra.py --crawl
+  python bench_extra.py --crawl
+
+Per-phase attribution of a crawl comes from the benchmark's tracer:
+``python3 perfbench/run.py --workload crawl-durable --trace 1``.
 """
 
 from __future__ import annotations
@@ -78,10 +83,22 @@ def run_queries(tag: str, names: list[str], repeats: int = 3) -> None:
     spark.stop()
 
 
-def run_crawl_debug(trials: int = 3) -> None:
+def run_crawl(trials: int = 3) -> None:
+    import dataclasses
+
     import bench as B
+    from urlmap_spark.plans import crawl as C
     from urlmap_spark.session import get_spark
 
+    real = C.crawl
+
+    def crawl_printing_rounds(spark, corpus, seeds, cfg, **kw):
+        # bench.run_crawl binds crawl at call time: each round's metrics
+        # dict is printed as it is reported
+        cfg = dataclasses.replace(cfg, progress=lambda m: print(json.dumps(m), flush=True))
+        return real(spark, corpus, seeds, cfg, **kw)
+
+    C.crawl = crawl_printing_rounds
     spark = get_spark(master=f"local[{CPUS}]", app_name="bench_extra_crawl")
     spark.sparkContext.setLogLevel("ERROR")
     cp = B.ensure_corpus(spark)
@@ -97,7 +114,7 @@ def run_crawl_debug(trials: int = 3) -> None:
 if __name__ == "__main__":
     argv = sys.argv[1:]
     if "--crawl" in argv:
-        run_crawl_debug()
+        run_crawl()
     else:
         tag = "before"
         if "--tag" in argv:

@@ -193,15 +193,20 @@ def test_cli_concurrent_and_progress_flags(spark, tmp_path, capsys):
 
 
 def test_cli_invalid_seed_clean_error(spark, tmp_path, capsys):
-    """An invalid seed exits 2 with a diagnostic, never a traceback
-    (reference cobra error path; e2e_test.go error handling)."""
+    """An invalid seed, or 65 seeds for a scoped crawl (the default),
+    exits 2 with a diagnostic, never a traceback (reference cobra error
+    path; e2e_test.go error handling)."""
     corpus_p = str(tmp_path / "e.parquet")
     _corpus(spark).write.parquet(corpus_p)
-    rc = cli.main(["notaurl", "--corpus", corpus_p], _spark=spark)
-    assert rc == 2
-    err = capsys.readouterr().err
-    assert "error:" in err and "notaurl" in err
-    assert "Traceback" not in err
+    seeds_p = tmp_path / "seeds.txt"
+    seeds_p.write_text("".join(f"https://s{i}.test/\n" for i in range(65)))
+    for args, msg in ((["notaurl"], "notaurl"),
+                      (["--seeds-file", str(seeds_p)], "at most 64 seeds")):
+        rc = cli.main([*args, "--corpus", corpus_p], _spark=spark)
+        assert rc == 2
+        err = capsys.readouterr().err
+        assert "error:" in err and msg in err
+        assert "Traceback" not in err
 
 
 def test_cli_seen_filter_cuckoo_matches_bloom(spark, tmp_path, capsys):

@@ -172,6 +172,21 @@ def test_empty_results_are_typed(spark, tmp_path):
             [(f.name, f.dataType) for f in full.results.schema]
 
 
+def test_scoped_seed_limit_checked_before_any_job(spark):
+    """A scoped crawl takes at most 64 seeds: 65 are refused with a
+    ValueError before any Spark job runs and before the crawl touches
+    the optimizer's excluded rules."""
+    cdf = spark.createDataFrame(C.basic_site_pandas())
+    seeds = [f"https://s{i}.test/" for i in range(65)]
+    sc = spark.sparkContext._jsc.sc()
+    rules = spark.conf.get("spark.sql.optimizer.excludedRules", None)
+    j0 = sc.dagScheduler().nextJobId()
+    with pytest.raises(ValueError, match="at most 64 seeds"):
+        crawl(spark, cdf, seeds, CrawlConfig(same_domain=True))
+    assert sc.dagScheduler().nextJobId() == j0
+    assert spark.conf.get("spark.sql.optimizer.excludedRules", None) == rules
+
+
 def test_bytes_column_pruned(spark):
     """The crawl plan must never read the heavy `bytes` column — check the
     optimized plan's ReadSchema on a parquet-backed corpus."""
@@ -297,7 +312,7 @@ def test_catalog_compaction_and_vacuum_preserve_resume(spark, tmp_path):
         max_depth=3, same_path_prefix=False, checkpoint_dir=ck, max_rounds=2))
     cat = RoundCatalog(ck)
     before = cat.read_union(spark, "seen_delta").count()
-    v = cat.compact(spark, "seen_delta", num_files=1, vacuum=True)
+    v = cat.compact(spark, "seen_delta")
     assert v == 1
     # covered per-round delta dirs are gone; snapshot serves their rows
     assert not any(
@@ -314,7 +329,7 @@ def test_catalog_compaction_and_vacuum_preserve_resume(spark, tmp_path):
     n_seen = full.seen.dropDuplicates(["url"]).count() - 1
     assert cat.read_union(spark, "seen_delta").count() == n_seen
     # a second compaction covering everything also works
-    v2 = cat.compact(spark, "seen_delta", num_files=1, vacuum=True)
+    v2 = cat.compact(spark, "seen_delta")
     assert v2 == resumed.rounds - 1
     assert cat.read_union(spark, "seen_delta").count() == n_seen
 

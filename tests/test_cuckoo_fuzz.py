@@ -67,7 +67,7 @@ def test_no_false_negatives(hash_pairs):
 @settings(max_examples=200, deadline=None)
 @given(i64, st.integers(min_value=1, max_value=(1 << 16) - 1))
 def test_partner_is_involution(h2, fp):
-    row = int(np.uint64(h2) & np.uint64(CFG.n_rows - 1))
+    row = int(np.int64(h2).view(np.uint64) & np.uint64(CFG.n_rows - 1))
     assert _partner(_partner(row, fp, CFG), fp, CFG) == row
 
 

@@ -116,13 +116,44 @@ def test_disk_crawl_resume_and_compaction(spark, tmp_path):
     # compact the committed deltas mid-crawl: the snapshot must keep the
     # _ub layout (a flat snapshot would be invisible to the bucket probe)
     cat = RoundCatalog(ck)
-    cat.compact(spark, "seen_delta", vacuum=True)
+    cat.compact(spark, "seen_delta")
     snap = cat.table_paths("seen_delta")[0]
     assert any(x.startswith("_ub=") for x in os.listdir(snap))
     resumed = crawl(spark, cdf, seed, CrawlConfig(**dcfg), resume=True)
     got = [(r["url"], r["depth"], r["order"])
            for r in resumed.results.orderBy("order").collect()]
     assert got == want
+
+
+def _data_files(d):
+    return [f for _, _, fs in os.walk(d) for f in fs if not f.startswith(("_", "."))]
+
+
+def test_resume_of_a_finished_disk_crawl(spark, tmp_path):
+    """A disk crawl run to completion, then resumed: the resume runs no
+    round and returns the same results. The last round found nothing
+    new, so its next_frontier and seen_delta tables (partitioned by
+    host and url bucket) hold no data files, only their schema."""
+    pdf = C.corpus_pandas(seed=42, n_hosts=4, total_pages=60, with_bytes=False)
+    cdf = spark.createDataFrame(pdf)
+    seed = "https://h0.example-42.test/"
+    ck = str(tmp_path / "ck")
+    cfg = CrawlConfig(same_path_prefix=False, checkpoint_dir=ck,
+                      broadcast_seen_max_urls=0, disk_seen=True, disk_seen_buckets=8,
+                      bloom_seen=True, seen_filter_bits=8 << 16)
+    full = crawl(spark, cdf, seed, cfg)
+    want = [tuple(r) for r in full.results.orderBy("order").collect()]
+    cat = RoundCatalog(ck)
+    last = cat.last_round()
+    assert full.metrics[-1]["new_discovered"] == 0
+    for name in ("next_frontier", "seen_delta"):
+        tdir = cat.round_table_dir(last, name)
+        assert os.path.exists(os.path.join(tdir, "_schema.json"))
+        assert _data_files(tdir) == [], name
+
+    resumed = crawl(spark, cdf, seed, cfg, resume=True)
+    assert resumed.rounds == full.rounds and cat.last_round() == last
+    assert [tuple(r) for r in resumed.results.orderBy("order").collect()] == want
 
 
 def test_disk_seen_resume_guard(spark, tmp_path):

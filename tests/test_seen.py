@@ -3,6 +3,7 @@ must never change anti-join results — only route definitely-new rows
 around the exact join."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from urlmap_spark.operators.seen import (
@@ -38,6 +39,9 @@ def test_prefilter_equivalence_with_plain_anti_join(spark):
     plain = {r["url"] for r in cand.join(seen, "url", "left_anti").collect()}
     bloom = {r["url"] for r in seen_anti_join(cand, seen, filters, CFG).collect()}
     assert bloom == plain
+    # a filter frame is only read under the config it was built with
+    with pytest.raises(ValueError, match="config"):
+        seen_anti_join(cand, seen, filters)
 
 
 def test_incremental_merge(spark):

@@ -1,10 +1,12 @@
 """Alternating A/B of the broadcast-seen early anti-join vs the
 post-dedup shuffled anti-join, at one core count per invocation.
 
-Usage: python tools/ab_broadcast_seen.py <cores> [trials_per_arm]
-Each trial is a fresh SparkSession over the SAME cached VP corpus
-recipe; arms alternate A,B,A,B,... and best-of-N per arm is reported
-(the repo's standard discipline for this drifting host).
+Usage: python tools/ab_broadcast_seen.py [cores] [trials_per_arm]
+(cores defaults to every core nproc reports, tools/hostfit.py; the
+corpus generator always uses all of them). Each trial is a fresh
+SparkSession over the SAME cached VP corpus recipe; arms alternate
+A,B,A,B,... and best-of-N per arm is reported (the repo's standard
+discipline for this drifting host).
 """
 
 import os
@@ -14,6 +16,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
+from hostfit import host_cores  # noqa: E402
 from urlmap_spark.session import get_spark  # noqa: E402
 
 
@@ -44,9 +47,9 @@ def one(cores: int, broadcast: bool, cp: str) -> dict:
 
 
 def main() -> None:
-    cores = int(sys.argv[1]) if len(sys.argv) > 1 else 8
+    cores = int(sys.argv[1]) if len(sys.argv) > 1 else host_cores()
     trials = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    gen = get_spark(master="local[32]", app_name="ab_gen")
+    gen = get_spark(master=f"local[{host_cores()}]", app_name="ab_gen")
     gen.sparkContext.setLogLevel("ERROR")
     cp = bench.ensure_vp_corpus(gen)
     gen.stop()

@@ -261,7 +261,6 @@ def main(argv: list[str] | None = None, _spark=None) -> int:
         max_depth=args.depth,
         same_domain=not args.no_same_domain,
         same_path_prefix=not args.no_path_prefix,
-        user_agent=args.user_agent,
         max_attempts=args.retry_attempts,
         robots_rules=robots_rules,
         render_modes=render_modes_df,
@@ -279,7 +278,6 @@ def main(argv: list[str] | None = None, _spark=None) -> int:
         checkpoint_dir=args.checkpoint,
         verify_payload=args.verify_payload,
         frontier_partitions=args.concurrent or None,
-        extract_partitions=args.concurrent or None,
         progress=_progress if (args.progress or args.verbose
                                or args.log_format == "json") else None,
     )

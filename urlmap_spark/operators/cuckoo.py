@@ -6,12 +6,13 @@ in the disk seen gate's layout only (operators/diskseen.py): one blob
 per disk-seen bucket that the gate's own bucket task reads, probes,
 extends with the round's new URLs and emits — no separate build, merge
 or cogroup pass — and maintenance.retire_urls deletes from those blobs.
-The (bucket, filter) frame API here (``build_filters``,
-``split_candidates``, ``seen_anti_join``, ``remove_urls``: one
-applyInPandas task per bucket, probed by a bucket-cogroup) is kept for
-the declared queries ``seen-cuckoo-anti-join`` / ``seen-cuckoo-delete``
-and the plan dump; the crawl never builds it. Either way the blobs
-never visit the driver, and the filter is ALWAYS backed by the exact
+The (bucket, filter) frame API (``build_filters``, ``split_candidates``,
+``seen_anti_join`` — seen.py's generic set, re-exported here — and
+``remove_urls``: one applyInPandas task per bucket, probed by a
+bucket-cogroup) is kept for the declared queries
+``seen-cuckoo-anti-join`` / ``seen-cuckoo-delete`` and the plan dump;
+the crawl never builds it. Either way the blobs never visit the
+driver, and the filter is ALWAYS backed by the exact
 anti-join — a false positive costs an extra exact check, a false
 negative cannot happen by construction:
 
@@ -42,10 +43,14 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .seen import FILTER_SCHEMA, _with_hash_cols
+from .seen import (  # noqa: F401 — the frame API, generic over cfg.blob()
+    FILTER_SCHEMA,
+    _with_hash_cols,
+    build_filters,
+    seen_anti_join,
+    split_candidates,
+)
 
 _FP_MULT = np.uint64(0x5BD1E995)  # odd mixer for the partner-index hash
 
@@ -221,32 +226,6 @@ class CuckooBlob:
         return _serialize(self.table, self.stash)
 
 
-def build_filters(urls: DataFrame, cfg: CuckooConfig,
-                  existing: DataFrame | None = None) -> DataFrame:
-    """urls(url) [+ existing (bucket, filter)] -> merged (bucket, filter).
-    Merge reinserts every occupied entry of the later blobs into the
-    first — possible (unlike a generic hash set) because an entry's
-    current row IS one of its two legal rows and the partner relation
-    is an involution."""
-    tagged = _with_hash_cols(urls, cfg).select("_h1", "_h2", "_bk")
-
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = cfg.blob()
-        blob.insert(pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy())
-        return pd.DataFrame({"bucket": [int(key[0])], "filter": [blob.to_bytes()]})
-
-    fresh = tagged.groupBy("_bk").applyInPandas(build, FILTER_SCHEMA)
-    if existing is None:
-        return fresh
-    both = fresh.unionByName(existing)
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"bucket": [int(key[0])],
-                             "filter": [cfg.blob(pdf["filter"]).to_bytes()]})
-
-    return both.groupBy("bucket").applyInPandas(merge, FILTER_SCHEMA)
-
-
 def remove_urls(filters: DataFrame, urls: DataFrame,
                 cfg: CuckooConfig) -> DataFrame:
     """Delete one stored copy of each URL's fingerprint — the operation
@@ -276,43 +255,3 @@ def remove_urls(filters: DataFrame, urls: DataFrame,
 
     return filters.groupBy("bucket").cogroup(
         tagged.groupBy("_bk")).applyInPandas(drop, FILTER_SCHEMA)
-
-
-def split_candidates(candidates: DataFrame, filters: DataFrame,
-                     cfg: CuckooConfig,
-                     url_col: str = "url") -> tuple[DataFrame, DataFrame]:
-    """candidates -> (definitely_new, maybe_seen); bucket-cogrouped like
-    the bloom probe, fully vectorized per batch."""
-    cand = _with_hash_cols(candidates, cfg, url_col)
-    schema = T.StructType(cand.schema.fields +
-                          [T.StructField("_maybe", T.BooleanType())])
-    out_cols = [f.name for f in schema.fields]
-
-    def probe(key, cpdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
-        out = cpdf.copy()
-        if len(cpdf) == 0 or len(fpdf) == 0:
-            out["_maybe"] = np.zeros(len(cpdf), dtype=bool)
-            return out[out_cols]
-        # first blob + any unmerged deltas
-        out["_maybe"] = cfg.blob(fpdf["filter"]).probe(
-            cpdf["_h1"].to_numpy(), cpdf["_h2"].to_numpy())
-        return out[out_cols]
-
-    probed = cand.groupBy("_bk").cogroup(
-        filters.groupBy("bucket")).applyInPandas(probe, schema)
-    drop = ["_maybe", "_h1", "_h2", "_bk"]
-    return (probed.filter(~F.col("_maybe")).drop(*drop),
-            probed.filter(F.col("_maybe")).drop(*drop))
-
-
-def seen_anti_join(candidates: DataFrame, seen: DataFrame,
-                   filters: DataFrame | None, cfg: CuckooConfig | None = None,
-                   url_col: str = "url") -> DataFrame:
-    """Exact NOT-IN(seen) with the cuckoo prefilter — same contract as
-    seen.seen_anti_join; equality with the plain anti-join pinned by
-    tests."""
-    if filters is None:
-        return candidates.join(seen, url_col, "left_anti")
-    cfg = cfg or CuckooConfig()
-    definitely_new, maybe = split_candidates(candidates, filters, cfg, url_col)
-    return definitely_new.unionByName(maybe.join(seen, url_col, "left_anti"))

@@ -87,14 +87,10 @@ from .seen import task_hashes
 LAYOUT = "_ub"  # seen_filter_cfg tag of the one-blob-per-disk-bucket layout
 
 
-def bucket_expr(url_col: str, n_buckets: int):
-    """The shared row->bucket key (JVM-side; identical for persisted
-    seen rows and probe candidates)."""
-    return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
-
-
-def with_bucket(df: DataFrame, n_buckets: int, url_col: str = "url") -> DataFrame:
-    return df.withColumn("_ub", bucket_expr(url_col, n_buckets))
+def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
+    """Add the shared url->bucket key ``_ub`` (JVM-side; identical for
+    persisted seen rows and probe candidates)."""
+    return df.withColumn("_ub", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
 
 
 def filter_config(kind: str, n_buckets: int, total_bits: int):
@@ -130,17 +126,17 @@ def _unpack(stored) -> list[bytes]:
     return [zlib.decompress(bytes(b)) for b in stored]
 
 
-def _bucket_urls(dirs: list[str], b: int, url_col: str) -> pd.Series:
+def _bucket_urls(dirs: list[str], b: int) -> pd.Series:
     import pyarrow.parquet as pq
 
-    slices = [pq.read_table(p, columns=[url_col]).column(url_col).to_pandas()
+    slices = [pq.read_table(p, columns=["url"]).column("url").to_pandas()
               for p in (os.path.join(d, f"_ub={b}") for d in dirs)
               if os.path.isdir(p)]
     return pd.concat(slices, ignore_index=True) if slices else pd.Series([], dtype=object)
 
 
 def disk_anti_join(candidates: DataFrame, seen_table_dirs: list[str],
-                   n_buckets: int, url_col: str = "url") -> DataFrame:
+                   n_buckets: int) -> DataFrame:
     """candidates NOT IN (url rows persisted under seen_table_dirs).
 
     seen_table_dirs: parquet table dirs, each written partitionBy("_ub")
@@ -150,13 +146,13 @@ def disk_anti_join(candidates: DataFrame, seen_table_dirs: list[str],
     (the pruning is physical: the task list, not a filter).
     """
     dirs = list(seen_table_dirs)
-    cand = with_bucket(candidates, n_buckets, url_col)
+    cand = with_bucket(candidates, n_buckets)
     out_cols = list(candidates.columns)
 
     def anti(key, pdf):
-        seen_vals = _bucket_urls(dirs, int(key[0]), url_col)
+        seen_vals = _bucket_urls(dirs, int(key[0]))
         if len(seen_vals):
-            pdf = pdf[~pdf[url_col].isin(seen_vals)]
+            pdf = pdf[~pdf["url"].isin(seen_vals)]
         return pdf[out_cols]
 
     return cand.groupBy("_ub").applyInPandas(anti, candidates.schema)
@@ -174,10 +170,9 @@ def _placeholder(f: T.StructField):
 
 
 def filter_gate(candidates: DataFrame, seen_table_dirs: list[str],
-                n_buckets: int, cfg, filter_dir: str | None,
-                url_col: str = "url") -> DataFrame:
+                n_buckets: int, cfg, filter_dir: str | None) -> DataFrame:
     """The one-pass prefiltered seen gate (module doc): candidates
-    (non-null ``url_col``) -> rows of the candidates' columns plus
+    (non-null ``url``) -> rows of the candidates' columns plus
     ``_ub``, ``filter``, ``_maybe`` and ``_new``. Rows with a url are
     the new candidates; the n_buckets rows with a null url carry each
     bucket's updated blob in ``filter`` and the bucket's count of
@@ -188,10 +183,10 @@ def filter_gate(candidates: DataFrame, seen_table_dirs: list[str],
     spark = candidates.sparkSession
     cols = list(candidates.columns)
     dummies = spark.range(n_buckets).select(
-        *[(F.lit(None).cast(f.dataType) if f.name == url_col else _placeholder(f))
+        *[(F.lit(None).cast(f.dataType) if f.name == "url" else _placeholder(f))
           .alias(f.name) for f in candidates.schema.fields],
         F.col("id").cast("int").alias("_ub"))
-    grouped = with_bucket(candidates, n_buckets, url_col).unionByName(dummies)
+    grouped = with_bucket(candidates, n_buckets).unionByName(dummies)
     schema = T.StructType(
         [T.StructField(f.name, f.dataType, True) for f in candidates.schema.fields]
         + [T.StructField("_ub", T.IntegerType()),
@@ -203,9 +198,9 @@ def filter_gate(candidates: DataFrame, seen_table_dirs: list[str],
         import pyarrow.parquet as pq
 
         b = int(key[0])
-        is_cand = pdf[url_col].notna().to_numpy()
+        is_cand = pdf["url"].notna().to_numpy()
         cand = pdf[is_cand]
-        urls = cand[url_col].to_numpy(dtype=object)
+        urls = cand["url"].to_numpy(dtype=object)
         bdir = os.path.join(filter_dir, f"_ub={b}") if filter_dir else None
         prev = (pq.read_table(bdir, columns=["filter"]).column("filter").to_pylist()
                 if bdir and os.path.isdir(bdir) else [])
@@ -214,7 +209,7 @@ def filter_gate(candidates: DataFrame, seen_table_dirs: list[str],
         maybe = blob.probe(h1, h2) if prev else np.ones(len(urls), dtype=bool)
         hit = np.zeros(len(urls), dtype=bool)
         if maybe.any() or not prev:
-            seen = _bucket_urls(dirs, b, url_col)
+            seen = _bucket_urls(dirs, b)
             if not prev and len(seen):
                 blob.insert(*task_hashes(seen.to_numpy(dtype=object)))
             if len(seen):
@@ -245,8 +240,7 @@ def disk_seen_anti_join(candidates: DataFrame, seen_table_dirs: list[str],
                         n_buckets: int,
                         filter_cfg=None,
                         filter_dir: str | None = None,
-                        extra_seen: DataFrame | None = None,
-                        url_col: str = "url") -> SeenGate:
+                        extra_seen: DataFrame | None = None) -> SeenGate:
     """The full seen gate in disk mode. First a broadcast anti-join
     against `extra_seen` — the handful of seen URLs never committed to
     disk (the seed list); always small, so broadcasting is free, and
@@ -259,14 +253,13 @@ def disk_seen_anti_join(candidates: DataFrame, seen_table_dirs: list[str],
     writes them — no job of its own."""
     out = candidates
     if extra_seen is not None:
-        out = out.join(F.broadcast(extra_seen.select(F.col(url_col))),
-                       url_col, "left_anti")
+        out = out.join(F.broadcast(extra_seen.select("url")), "url", "left_anti")
     if filter_cfg is None:
-        return SeenGate(disk_anti_join(out, seen_table_dirs, n_buckets, url_col))
+        return SeenGate(disk_anti_join(out, seen_table_dirs, n_buckets))
     obs = Observation()
-    gated = filter_gate(out, seen_table_dirs, n_buckets, filter_cfg, filter_dir,
-                        url_col).localCheckpoint(eager=False)
-    is_blob = F.col(url_col).isNull()
+    gated = filter_gate(out, seen_table_dirs, n_buckets, filter_cfg,
+                        filter_dir).localCheckpoint(eager=False)
+    is_blob = F.col("url").isNull()
     return SeenGate(
         new=gated.filter(~is_blob).select(*candidates.columns),
         filters=gated.filter(is_blob).observe(
@@ -275,13 +268,12 @@ def disk_seen_anti_join(candidates: DataFrame, seen_table_dirs: list[str],
         observation=obs)
 
 
-def remove_urls(filters: DataFrame, urls: DataFrame, cfg,
-                url_col: str = "url") -> DataFrame:
+def remove_urls(filters: DataFrame, urls: DataFrame, cfg) -> DataFrame:
     """Delete retired URLs' fingerprints from disk-layout cuckoo blobs
     (_ub, filter): the retired URLs are bucketed by the same key and
     hashed by the same task-side hashes as the gate's inserts. Only
     URLs that were inserted may be deleted (cuckoo.remove_urls)."""
-    tagged = with_bucket(urls.select(url_col), cfg.n_buckets, url_col)
+    tagged = with_bucket(urls.select("url"), cfg.n_buckets)
     schema = T.StructType([T.StructField("_ub", T.IntegerType()),
                            T.StructField("filter", T.BinaryType())])
 
@@ -289,7 +281,7 @@ def remove_urls(filters: DataFrame, urls: DataFrame, cfg,
         if len(fpdf) == 0:  # removals for a bucket with no blob: no-op
             return pd.DataFrame({"_ub": [], "filter": []})
         blob = cfg.blob(_unpack(fpdf["filter"]))
-        blob.delete(*task_hashes(updf[url_col].to_numpy(dtype=object)))
+        blob.delete(*task_hashes(updf["url"].to_numpy(dtype=object)))
         return pd.DataFrame({"_ub": [int(key[0])], "filter": [_pack(blob)]})
 
     return filters.groupBy("_ub").cogroup(tagged.groupBy("_ub")).applyInPandas(

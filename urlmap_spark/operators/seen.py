@@ -31,7 +31,10 @@ prefilter; BENCH/BASELINE.md), so ``crawl()`` never builds a
 (bucket, filter) frame. The frame API below — ``build_filters``,
 ``split_candidates``, ``seen_anti_join`` — is kept for the declared
 queries that pin it against DuckDB twins (``seen-bloom-anti-join`` and
-the cuckoo pair) and for the plan dump.
+the cuckoo pair) and for the plan dump. It is generic over the filter
+structure: every step reaches its kernel through ``cfg.blob()``, so a
+BloomConfig or a CuckooConfig (operators/cuckoo.py, which re-exports
+these three names) drives the same code.
 """
 
 from __future__ import annotations
@@ -50,15 +53,15 @@ FILTER_SCHEMA = T.StructType([
 _HASH_COLS = ["_h1", "_h2", "_bk"]
 
 
-def _with_hash_cols(df: DataFrame, cfg: "BloomConfig", url_col: str = "url") -> DataFrame:
+def _with_hash_cols(df: DataFrame, cfg) -> DataFrame:
     """All URL hashing stays JVM-side (whole-stage codegen): two
     independent xxhash64 families for double hashing plus the bucket
     key. Build and probe derive from the SAME columns, so they cannot
     disagree — the Python side only ever sees int64 arrays."""
     return (
-        df.withColumn("_h1", F.xxhash64(F.col(url_col)))
-        .withColumn("_h2", F.xxhash64(F.lit("urlmap-bloom-h2"), F.col(url_col)))
-        .withColumn("_bk", F.pmod(F.xxhash64(F.lit("urlmap-bucket"), F.col(url_col)),
+        df.withColumn("_h1", F.xxhash64(F.col("url")))
+        .withColumn("_h2", F.xxhash64(F.lit("urlmap-bloom-h2"), F.col("url")))
+        .withColumn("_bk", F.pmod(F.xxhash64(F.lit("urlmap-bucket"), F.col("url")),
                                   F.lit(cfg.n_buckets)).cast("int"))
     )
 
@@ -134,13 +137,15 @@ class BloomBlob:
         return self.bits.tobytes()
 
 
-def build_filters(urls: DataFrame, cfg: BloomConfig,
+def build_filters(urls: DataFrame, cfg,
                   existing: DataFrame | None = None) -> DataFrame:
     """urls(url) [+ existing (bucket, filter)] -> merged (bucket, filter).
-    One applyInPandas task per bucket; merge = bitwise OR. The per-URL
-    work is fully vectorized: hashes computed JVM-side, bit positions as
-    one (n, k) numpy broadcast, bits set with a single bitwise_or.at
-    (BloomBlob)."""
+    One applyInPandas task per bucket, hashes computed JVM-side. The
+    merge folds a bucket's blobs through ``cfg.blob``: bitwise OR for
+    the bloom; for the cuckoo, every occupied entry of the later blobs
+    is reinserted into the first — possible because an entry's current
+    row IS one of its two legal rows and the partner relation is an
+    involution."""
     tagged = _with_hash_cols(urls, cfg).select("_h1", "_h2", "_bk")
 
     def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -160,8 +165,8 @@ def build_filters(urls: DataFrame, cfg: BloomConfig,
     return both.groupBy("bucket").applyInPandas(merge, FILTER_SCHEMA)
 
 
-def split_candidates(candidates: DataFrame, filters: DataFrame, cfg: BloomConfig,
-                     url_col: str = "url") -> tuple[DataFrame, DataFrame]:
+def split_candidates(candidates: DataFrame, filters: DataFrame,
+                     cfg) -> tuple[DataFrame, DataFrame]:
     """candidates -> (definitely_new, maybe_seen).
 
     FULLY DISTRIBUTED probe: candidates are cogrouped with the
@@ -174,7 +179,7 @@ def split_candidates(candidates: DataFrame, filters: DataFrame, cfg: BloomConfig
     once on the 4-byte bucket key; on a cluster that shuffle replaces a
     per-round broadcast of the whole filter set to every executor.
     """
-    cand = _with_hash_cols(candidates, cfg, url_col)
+    cand = _with_hash_cols(candidates, cfg)
     schema = T.StructType(cand.schema.fields + [T.StructField("_maybe", T.BooleanType())])
     out_cols = [f.name for f in schema.fields]
 
@@ -184,7 +189,7 @@ def split_candidates(candidates: DataFrame, filters: DataFrame, cfg: BloomConfig
             # no candidates in this bucket, or no filter yet -> all new
             out["_maybe"] = np.zeros(len(cpdf), dtype=bool)
             return out[out_cols]
-        # unmerged deltas fold by OR
+        # unmerged deltas fold into one blob
         out["_maybe"] = cfg.blob(fpdf["filter"]).probe(
             cpdf["_h1"].to_numpy(), cpdf["_h2"].to_numpy())
         return out[out_cols]
@@ -196,13 +201,17 @@ def split_candidates(candidates: DataFrame, filters: DataFrame, cfg: BloomConfig
 
 
 def seen_anti_join(candidates: DataFrame, seen: DataFrame,
-                   filters: DataFrame | None, cfg: BloomConfig | None = None,
-                   url_col: str = "url") -> DataFrame:
-    """Exact NOT-IN(seen) with optional bloom prefilter: rows the bloom
-    proves unseen bypass the join; the rest take the authoritative
-    left_anti. Equality with the plain anti-join is pinned by tests."""
+                   filters: DataFrame | None, cfg=None) -> DataFrame:
+    """Exact NOT-IN(seen) with an optional bloom/cuckoo prefilter: rows
+    the filter proves unseen bypass the join; the rest take the
+    authoritative left_anti. ``filters`` needs the ``cfg`` it was built
+    with — there is no default, since a blob read under the wrong
+    structure would be misread. Equality with the plain anti-join is
+    pinned by tests."""
     if filters is None:
-        return candidates.join(seen, url_col, "left_anti")
-    cfg = cfg or BloomConfig()
-    definitely_new, maybe = split_candidates(candidates, filters, cfg, url_col)
-    return definitely_new.unionByName(maybe.join(seen, url_col, "left_anti"))
+        return candidates.join(seen, "url", "left_anti")
+    if cfg is None:
+        raise ValueError("seen_anti_join: a filter frame needs the config "
+                         "it was built with")
+    definitely_new, maybe = split_candidates(candidates, filters, cfg)
+    return definitely_new.unionByName(maybe.join(seen, "url", "left_anti"))

@@ -30,7 +30,6 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 from functools import reduce
@@ -73,19 +72,10 @@ RESULT_SCHEMA = T.StructType([
 ])
 RESULT_COLUMNS = RESULT_SCHEMA.fieldNames()
 
-_DEBUG = os.environ.get("URLMAP_CRAWL_DEBUG") == "1"
-
-
-class _Tick:
-    def __init__(self, round_idx: int):
-        self.r = round_idx
-        self.t = time.time()
-
-    def __call__(self, label: str) -> None:
-        if _DEBUG:
-            now = time.time()
-            print(f"  [r{self.r}] {label:24s} {now - self.t:6.2f}s", flush=True)
-            self.t = now
+# host-hash partitioning of the CHECKPOINTED frontier (north_rule:
+# frontier partitioned by host-hash; per-host maintenance reads prune
+# bucket dirs at scan time)
+FRONTIER_HOST_BUCKETS = 16
 
 
 @dataclass
@@ -93,7 +83,6 @@ class CrawlConfig:
     max_depth: int = -1                      # -1 = unlimited (reference default)
     same_domain: bool = True                 # hard-coded true in the reference CLI
     same_path_prefix: bool = True            # (cmd/urlmap/main.go:165-166)
-    user_agent: str = "urlmap/1.0"
     max_attempts: int = 1                    # total fetch attempts per URL:
                                              # 5xx is TRANSIENT and re-enqueues
                                              # into the next round until this
@@ -112,14 +101,10 @@ class CrawlConfig:
     default_quota: int | None = None
     global_cap: int | None = None            # per-round global rate cap
     checkpoint_dir: str | None = None        # None = in-memory (tests)
-    frontier_host_buckets: int = 16          # host-hash partitioning of the
-                                             # CHECKPOINTED frontier (north_rule:
-                                             # frontier partitioned by host-hash;
-                                             # per-host maintenance reads prune
-                                             # bucket dirs at scan time)
     max_rounds: int = 10_000
-    frontier_partitions: int | None = None
-    extract_partitions: int | None = None    # UDF-stage fan-out (default: cores)
+    frontier_partitions: int | None = None   # fan-out of the ordering pass
+                                             # and of the explode / UDF
+                                             # stage (default: cores)
     corpus_unique: bool = True               # contract: corpus has ONE row per
                                              # url (a web cannot return two
                                              # responses for one GET). A dirty
@@ -319,6 +304,19 @@ def crawl(
                 seeds.append(n)
         if not seeds:
             raise ValueError("no start URL")
+    # --- scope vs the normalized seed(s) (crawler.go:233-249): the seed
+    # host/dir pairs are Python literals that canonicalize_links applies
+    # per branch (see operators/extract.py for the codegen-size rationale)
+    seed_scopes = None
+    if cfg.same_domain:
+        if len(seeds) > 64:
+            raise ValueError("scoped crawls support at most 64 seeds; "
+                             "disable same_domain for open crawls")
+        seed_scopes = [
+            ((urlcore.extract_domain(s) or "").lower(),
+             urlcore._dir_path(urlsplit(s).path or "/"))
+            for s in seeds
+        ]
     # the seed list as ONE local relation (pandas-built: a LocalTableScan).
     # A list-of-tuples frame plans as a Python-RDD scan that re-runs on
     # every use — the round-0 frontier, the disk gate's broadcast of the
@@ -345,7 +343,6 @@ def crawl(
     )
 
     try:
-        tick0 = _Tick(0)  # setup attribution (debug only)
         catalog = RoundCatalog(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
         # The crawl plan never touches `bytes` unless payload verification
         # is on; select the narrow columns explicitly so even a cache()
@@ -441,7 +438,6 @@ def crawl(
             n_frontier = order_counter
             seen = frontier.select("url")
             round_idx = 0
-            tick0("setup_seeds_table_resume")
         elif seeds_df is not None:
             from ..functions.urlkernel import is_valid_udf, normalize_udf
 
@@ -475,7 +471,6 @@ def crawl(
                                      meta=sd_meta)
             seen = frontier.select("url")
             round_idx = 0
-            tick0("setup_seeds_df")
         else:
             frontier = seed_frame
             if len(seeds) > 64:
@@ -493,7 +488,6 @@ def crawl(
         seen_parts: list[DataFrame] = []
         if keeps_seen_frames():
             seen_parts = [seen.localCheckpoint(eager=True)]
-        tick0("setup_seen_ckpt")
         seeds_seen_small: DataFrame | None = None
         seeds_table_dirs: list[str] = []
         filter_dir = None
@@ -534,13 +528,11 @@ def crawl(
         # (operators/robots.py): each round's gate is a broadcast join
         robots_lists = (host_rule_lists(cfg.robots_rules).localCheckpoint(eager=True)
                         if cfg.robots_rules is not None else None)
-        tick0("setup_rest")
 
         # n_frontier, the frontier's exact row count, stays driver-side:
         # each round's counts give the next one (no count() job per round)
         while round_idx < cfg.max_rounds and n_frontier > 0:
             t0 = time.time()
-            tick = _Tick(round_idx)
 
             # --- dequeue-time depth gate (reference: crawler.go:207-211).
             # Pure BFS keeps one depth per round (= round_idx), so the gate is
@@ -679,7 +671,6 @@ def crawl(
                     "url", "depth", "order",
                     (F.col("attempt") + 1).alias("attempt"))
                 final = fetched.filter(~can_retry)
-            tick("fetch_ckpt")
 
             # --- outlink extraction on OK pages only (crawler.go:644).
             # The exploded hrefs are materialized once per round: it (a) runs
@@ -697,7 +688,7 @@ def crawl(
             # repartition remains only for the narrow case where the
             # fetch materialization came out under-partitioned (tiny
             # corpora whose join AQE-coalesced below the core count).
-            n_extract = cfg.extract_partitions or spark.sparkContext.defaultParallelism
+            n_extract = cfg.frontier_partitions or spark.sparkContext.defaultParallelism
             exploded = (
                 explode_hrefs(
                     final.filter(F.col("ok")).select("url", "depth", "order", "caption")
@@ -737,22 +728,7 @@ def crawl(
             ).localCheckpoint(eager=True)
             n_slow = int(eobs.get["n_slow"] or 0)
             max_pos = int(eobs.get["max_pos"] or 0)
-            tick("explode_ckpt")
 
-            # --- scope vs the normalized seed(s) (crawler.go:233-249) is
-            # applied INSIDE canonicalize_links, per branch, with the seed
-            # host/dir precomputed as Python literals — see
-            # operators/extract.py for the codegen-size rationale.
-            seed_scopes = None
-            if cfg.same_domain:
-                if len(seeds) > 64:
-                    raise ValueError("scoped crawls support at most 64 seeds; "
-                                     "disable same_domain for open crawls")
-                seed_scopes = [
-                    ((urlcore.extract_domain(s) or "").lower(),
-                     urlcore._dir_path(urlsplit(s).path or "/"))
-                    for s in seeds
-                ]
             links = canonicalize_links(
                 exploded, seed_scopes=seed_scopes,
                 scope_prefix=cfg.same_path_prefix,
@@ -825,7 +801,6 @@ def crawl(
                 new, ["parent_order", "pos"], order_col="order", start=order_counter,
                 num_partitions=cfg.frontier_partitions,
             )
-            tick("extract_dedup_ckpt")
             n_new = order_counter - prev_counter
             new_frontier = new.select("url", "depth", "order")
             if has_attempt:
@@ -843,7 +818,6 @@ def crawl(
             # (rank offsets are driver literals) with one consumer
             if catalog is None and (deferred is not None or n_retry):
                 next_frontier = next_frontier.localCheckpoint(eager=True)
-            tick("frontier_ckpt")
 
             results_r = final.select(
                 "url", "depth", "order", F.col("status").cast("int"), "ok",
@@ -884,35 +858,27 @@ def crawl(
             })
 
             if catalog is not None:
+                # the persisted frontier is partitioned by host-hash; a
+                # 0-row table reads back empty through its recorded schema
+                host = F.expr("try_parse_url(url, 'HOST')")
+                host_bucket = F.pmod(F.xxhash64(host),
+                                     F.lit(FRONTIER_HOST_BUCKETS)).cast("int")
                 # per-PARTITION lineage (north_rule): bucket is the same
                 # host-hash key the persisted frontier is partitioned by,
                 # so each lineage row describes one physical partition's
                 # slice of the frontier (host granularity within it)
                 lineage = next_frontier.groupBy(
-                    F.pmod(F.xxhash64(F.expr("try_parse_url(url, 'HOST')")),
-                           F.lit(cfg.frontier_host_buckets)).cast("int")
-                    .alias("bucket"),
-                    F.expr("try_parse_url(url, 'HOST')").alias("host"),
+                    host_bucket.alias("bucket"), host.alias("host"),
                 ).agg(F.count("*").alias("n"), F.min("order").alias("min_order"),
                       F.max("order").alias("max_order"))
-                # bucket the persisted frontier by host-hash UNLESS it is
-                # empty — a 0-row partitionBy write leaves no data files
-                # and the re-read below could not infer a schema
-                bucket_nf = (n_new + n_deferred + n_retry) > 0
                 sd = new.select("url")
-                pb: dict[str, list[str]] = {}
-                if bucket_nf:
-                    pb["next_frontier"] = ["_hb"]
-                if cfg.disk_seen and n_new > 0:  # 0-row partitionBy writes no files
+                pb = {"next_frontier": ["_hb"]}
+                if cfg.disk_seen:
                     sd = diskseen.with_bucket(sd, cfg.disk_seen_buckets)
                     pb["seen_delta"] = ["_ub"]
                 tables = {
                     "results": results_r,
-                    "next_frontier": next_frontier.withColumn(
-                        "_hb",
-                        F.pmod(F.xxhash64(F.expr("try_parse_url(url, 'HOST')")),
-                               F.lit(cfg.frontier_host_buckets)).cast("int"))
-                    if bucket_nf else next_frontier,
+                    "next_frontier": next_frontier.withColumn("_hb", host_bucket),
                     "seen_delta": sd,
                     "lineage": lineage,
                 }
@@ -921,7 +887,7 @@ def crawl(
                     pb["seen_filters"] = ["_ub"]
                 # the gate's filter counts are observed on its blob write
                 catalog.commit_round(round_idx, tables, m,
-                                     partition_by=pb or None, observed=gate_obs)
+                                     partition_by=pb, observed=gate_obs)
                 # the next gate reads the blobs this round just committed;
                 # a round without them (broadcast path) leaves none
                 filter_dir = (catalog.round_table_dir(round_idx, "seen_filters")
@@ -935,7 +901,7 @@ def crawl(
                     seen_parts = []
                 if cfg.compact_seen_every > 0 and \
                         (round_idx + 1) % cfg.compact_seen_every == 0:
-                    catalog.compact(spark, "seen_delta", vacuum=True)
+                    catalog.compact(spark, "seen_delta")
                     # same cadence for the append-only results/lineage
                     # tables (VERDICT r4 #5): a 10^3-round crawl would
                     # otherwise accrete per-round dirs whose open/footer
@@ -944,8 +910,8 @@ def crawl(
                     # + <cadence> deltas per table. Resume never reads
                     # these tables (frontier/seen/metrics only), so the
                     # fold cannot perturb resume state.
-                    catalog.compact(spark, "results", vacuum=True)
-                    catalog.compact(spark, "lineage", vacuum=True)
+                    catalog.compact(spark, "results")
+                    catalog.compact(spark, "lineage")
                     # resume, maintenance and the next gate read only the
                     # last round's prefilter blobs: older ones are dead
                     catalog.drop_superseded("seen_filters")
@@ -953,7 +919,6 @@ def crawl(
                     # just-vacuumed delta dirs — rebuild from the snapshot
                     if seen_parts:
                         seen_parts = [committed_seen()]
-                    tick("seen_compact")
             else:
                 results_parts.append(results_r)
                 seen_parts.append(new.select("url"))

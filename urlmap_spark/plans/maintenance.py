@@ -90,8 +90,7 @@ def _layout_meta(m: dict, blobs: bool) -> dict:
     return {k: m[k] for k in keys if m.get(k)}
 
 
-def requeue_urls(spark: SparkSession, checkpoint_dir: str, urls,
-                 num_partitions: int | None = None) -> dict:
+def requeue_urls(spark: SparkSession, checkpoint_dir: str, urls) -> dict:
     """Re-enqueue already-fetched URLs for refetch (recrawl-after-TTL).
 
     Only URLs with a committed result row qualify — a never-fetched URL
@@ -117,8 +116,7 @@ def requeue_urls(spark: SparkSession, checkpoint_dir: str, urls,
     requeue = latest.join(frontier.select("url"), "url", "left_anti")
 
     ordered, new_counter = with_global_order(
-        requeue, ["url"], order_col="order", start=order_counter,
-        num_partitions=num_partitions)
+        requeue, ["url"], order_col="order", start=order_counter)
     ordered = ordered.select("url", F.col("depth").cast("int").alias("depth"),
                              "order")
     if "attempt" in frontier.columns:
@@ -171,7 +169,7 @@ def retire_urls(spark: SparkSession, checkpoint_dir: str, urls) -> dict:
 
     # snapshot = (all committed seen) minus retired; vacuums the deltas
     # it covers so resume reads one snapshot + post-maintenance deltas
-    cat.compact(spark, "seen_delta", minus=retire, vacuum=True)
+    cat.compact(spark, "seen_delta", minus=retire)
 
     tables = {"next_frontier": frontier}
     if filters is not None and fcfg.kind == "cuckoo":

@@ -191,10 +191,7 @@ class RoundCatalog:
         return max(vs) if vs else None
 
     def compact(self, spark: SparkSession, name: str = "seen_delta",
-                num_files: int | None = None, vacuum: bool = False,
-                minus: DataFrame | None = None,
-                minus_key: str = "url",
-                partition_by: list[str] | None = None) -> int | None:
+                minus: DataFrame | None = None) -> int | None:
         """Fold every committed per-round `name` table into ONE snapshot
         (compact/<name>/v=<last_round>/) — the Iceberg rewrite_data_files
         analog for this shim. A 1000-round crawl otherwise accretes
@@ -204,26 +201,25 @@ class RoundCatalog:
         against everything earlier), so compaction is pure concatenation.
         Readers only trust a snapshot with its _COMMITTED marker, and
         read_union automatically serves snapshot + post-snapshot deltas.
-        vacuum=True removes the per-round table dirs the snapshot covers
-        (the round markers and other tables stay; read_union skips the
-        missing subdirs). `minus` anti-joins rows out of the snapshot on
-        `minus_key` — the delete path of the Iceberg analogy
-        (row-level DELETE becomes a rewrite here; used by seen-set
-        retirement). Returns the snapshot round, or None if there is
-        nothing to compact."""
+        Once the snapshot is committed, the per-round table dirs and the
+        older snapshots it covers are vacuumed (the round markers and
+        other tables stay; read_union skips the missing subdirs). Deltas
+        in the disk-seen bucket layout (a ``_ub`` column) keep it in the
+        snapshot; any other table is written flat. `minus` anti-joins
+        rows out of the snapshot on ``url`` — the delete path of the
+        Iceberg analogy (row-level DELETE becomes a rewrite here; used by
+        seen-set retirement). Returns the snapshot round, or None if
+        there is nothing to compact."""
         last = self.last_round()
         if last is None:
             return None
         df = self.read_union(spark, name, upto=last)
-        if partition_by is None and "_ub" in df.columns:
-            # the deltas are disk-seen bucketed: a FLAT snapshot would be
-            # invisible to the task-side bucket probe (silent re-enqueue
-            # of seen URLs) — always preserve the layout
-            partition_by = ["_ub"]
+        # the deltas are disk-seen bucketed: a FLAT snapshot would be
+        # invisible to the task-side bucket probe (silent re-enqueue of
+        # seen URLs) — always preserve the layout
+        partition_by = ["_ub"] if "_ub" in df.columns else None
         if minus is not None:
-            df = df.join(minus.select(minus_key), minus_key, "left_anti")
-        if num_files:
-            df = df.coalesce(num_files)
+            df = df.join(minus.select("url"), "url", "left_anti")
         # never overwrite the committed snapshot this one reads from:
         # the deltas it covers may already be vacuumed
         prev = self._snapshot(name)
@@ -232,22 +228,19 @@ class RoundCatalog:
                             f"v={last:04d}" + (f".{seq}" if seq else ""))
         if os.path.exists(vdir):  # crashed previous attempt
             shutil.rmtree(vdir)
-        # partition_by preserves e.g. the disk-seen _ub bucketing so
-        # bucket-pruned reads survive
         write_parquet(df, os.path.join(vdir, "data"), partition_by)
         mtmp = os.path.join(vdir, "._COMMITTED.tmp")
         open(mtmp, "w").close()
         os.replace(mtmp, os.path.join(vdir, "_COMMITTED"))
-        if vacuum:
-            for r in self.committed_rounds():
-                if r <= last:
-                    tdir = os.path.join(self._rdir(r), name)
-                    if os.path.exists(tdir):
-                        shutil.rmtree(tdir)
-            # older snapshots are fully covered by the new one
-            for d in os.listdir(self._cdir(name)):
-                if d.startswith("v=") and os.path.join(self._cdir(name), d) != vdir:
-                    shutil.rmtree(os.path.join(self._cdir(name), d))
+        for r in self.committed_rounds():
+            if r <= last:
+                tdir = os.path.join(self._rdir(r), name)
+                if os.path.exists(tdir):
+                    shutil.rmtree(tdir)
+        # older snapshots are fully covered by the new one
+        for d in os.listdir(self._cdir(name)):
+            if d.startswith("v=") and os.path.join(self._cdir(name), d) != vdir:
+                shutil.rmtree(os.path.join(self._cdir(name), d))
         return last
 
     def table_paths(self, name: str, upto: int | None = None) -> list[str]:

@@ -209,6 +209,21 @@ def test_cli_invalid_seed_clean_error(spark, tmp_path, capsys):
         assert "Traceback" not in err
 
 
+def test_cli_used_checkpoint_needs_resume(spark, tmp_path, capsys):
+    """A second --checkpoint run into the same dir exits 2 with a
+    diagnostic unless --resume continues the committed crawl."""
+    corpus_p = str(tmp_path / "c.parquet")
+    _corpus(spark).write.parquet(corpus_p)
+    args = ["https://h.test/", "--corpus", corpus_p, "--no-path-prefix",
+            "--checkpoint", str(tmp_path / "ck"), "--output", str(tmp_path / "out")]
+    assert cli.main(args, _spark=spark) == 0
+    capsys.readouterr()
+    assert cli.main(args, _spark=spark) == 2
+    err = capsys.readouterr().err
+    assert "holds a committed crawl" in err and "Traceback" not in err
+    assert cli.main([*args, "--resume"], _spark=spark) == 0
+
+
 def test_cli_seen_filter_cuckoo_matches_bloom(spark, tmp_path, capsys):
     """--seen-filter cuckoo produces the identical URL set and round
     structure as the default bloom (the prefilter is an execution

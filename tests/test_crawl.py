@@ -105,9 +105,11 @@ def test_parallelism_invariance(spark):
     assert a == b
 
 
-def test_checkpoint_resume(spark, tmp_path):
+@pytest.mark.parametrize("interrupt", [1, 2, 3])
+def test_checkpoint_resume(spark, tmp_path, interrupt):
     """Kill-between-rounds -> resume -> identical final output
-    (SURVEY.md §7 M5; north_rule checkpoint/resume)."""
+    (SURVEY.md §7 M5; north_rule checkpoint/resume), whichever round
+    the first run stops after."""
     pdf = C.corpus_pandas(seed=42, n_hosts=4, total_pages=60, with_bytes=False)
     cdf = spark.createDataFrame(pdf)
     seed = "https://h0.example-42.test/"
@@ -115,11 +117,11 @@ def test_checkpoint_resume(spark, tmp_path):
     full = crawl(spark, cdf, seed, CrawlConfig(max_depth=3, same_path_prefix=False))
     expect = [(r["url"], r["depth"], r["order"]) for r in full.results.orderBy("order").collect()]
 
-    # run only 2 rounds, then resume from checkpoint
+    # run only `interrupt` rounds, then resume from checkpoint
     ck = str(tmp_path / "ckpt")
     partial = crawl(spark, cdf, seed, CrawlConfig(
-        max_depth=3, same_path_prefix=False, checkpoint_dir=ck, max_rounds=2))
-    assert partial.rounds == 2
+        max_depth=3, same_path_prefix=False, checkpoint_dir=ck, max_rounds=interrupt))
+    assert partial.rounds == interrupt
     resumed = crawl(spark, cdf, seed, CrawlConfig(
         max_depth=3, same_path_prefix=False, checkpoint_dir=ck), resume=True)
     got = [(r["url"], r["depth"], r["order"]) for r in resumed.results.orderBy("order").collect()]
@@ -142,6 +144,81 @@ def test_checkpoint_resume(spark, tmp_path):
         lin_r = cat.read(spark, rnd, "lineage")
         got_n = lin_r.agg(F.sum("n")).collect()[0][0] or 0
         assert got_n == nf.count()
+
+
+def _order_rows(run):
+    return [(r["url"], r["depth"], r["order"]) for r in run.results.orderBy("order").collect()]
+
+
+def test_seen_union_fold_is_a_durable_compaction(spark, tmp_path, monkeypatch):
+    """A checkpointed broadcast-seen crawl folds its committed seen dirs
+    into one compaction snapshot once a probing round finds more than
+    SEEN_UNION_MAX (here 2), with no compaction cadence set, and reads
+    every committed seen dir (deltas, snapshots) once however many
+    rounds probe it. The crawl, the in-memory crawl (which folds in
+    memory) and a resume after a fold agree on every result row and
+    `order`."""
+    import os
+    from collections import Counter
+
+    from urlmap_spark.plans import crawl as crawl_mod
+    from urlmap_spark.sources.catalog import RoundCatalog
+
+    reads = Counter()
+    real = crawl_mod.read_parquet
+
+    def counting(spark_, path):
+        reads[path] += 1
+        return real(spark_, path)
+
+    monkeypatch.setattr(crawl_mod, "SEEN_UNION_MAX", 2)
+    cdf = spark.createDataFrame(
+        C.corpus_pandas(seed=42, n_hosts=4, total_pages=60, with_bytes=False))
+    seed = "https://h0.example-42.test/"
+    kw = dict(same_path_prefix=False, compact_seen_every=0)
+    expect = _order_rows(crawl(spark, cdf, seed, CrawlConfig(**kw)))
+
+    ck = str(tmp_path / "ck")
+    with monkeypatch.context() as mp:
+        mp.setattr(crawl_mod, "read_parquet", counting)
+        run = crawl(spark, cdf, seed, CrawlConfig(**kw, checkpoint_dir=ck))
+    assert run.rounds >= 4
+    assert os.listdir(os.path.join(ck, "compact", "seen_delta"))
+    assert _order_rows(run) == expect
+    assert any("/compact/seen_delta/" in p for p in reads)
+    assert sum("/seen_delta" in p for p in reads) >= 4
+    assert set(reads.values()) == {1}, reads
+
+    ck = str(tmp_path / "ck-resume")
+    crawl(spark, cdf, seed, CrawlConfig(**kw, checkpoint_dir=ck, max_rounds=4))
+    assert RoundCatalog(ck).table_paths("seen_delta")[0].startswith(
+        os.path.join(ck, "compact", "seen_delta"))
+    resumed = crawl(spark, cdf, seed, CrawlConfig(**kw, checkpoint_dir=ck), resume=True)
+    assert _order_rows(resumed) == expect
+
+
+def test_fresh_crawl_refuses_a_used_checkpoint_dir(spark, tmp_path):
+    """Without resume, a checkpoint dir that holds a committed round or
+    a committed seeds table is refused with a ValueError, before any
+    Spark job runs and before the crawl touches the optimizer's
+    excluded rules: a fresh crawl would otherwise read the old rounds'
+    results and seen set as its own. resume=True continues it."""
+    cdf = spark.createDataFrame(C.basic_site_pandas())
+    sc = spark.sparkContext._jsc.sc()
+    rounds_ck, seeds_ck = str(tmp_path / "rounds"), str(tmp_path / "seeds")
+    crawl(spark, cdf, "https://basic.test/", CrawlConfig(checkpoint_dir=rounds_ck))
+    seeds_df = spark.createDataFrame([("https://basic.test/",)], "url string")
+    crawl(spark, cdf, seeds_df, CrawlConfig(same_domain=False, checkpoint_dir=seeds_ck,
+                                            max_rounds=0))
+    rules = spark.conf.get("spark.sql.optimizer.excludedRules", None)
+    for seed, kw in (("https://basic.test/", dict(checkpoint_dir=rounds_ck, max_rounds=1)),
+                     (seeds_df, dict(checkpoint_dir=seeds_ck, same_domain=False))):
+        j0 = sc.dagScheduler().nextJobId()
+        with pytest.raises(ValueError, match="holds a committed crawl"):
+            crawl(spark, cdf, seed, CrawlConfig(**kw))
+        assert sc.dagScheduler().nextJobId() == j0
+        assert spark.conf.get("spark.sql.optimizer.excludedRules", None) == rules
+        assert crawl(spark, cdf, seed, CrawlConfig(**kw), resume=True).results.count() > 0
 
 
 def test_seen_set_equality(spark):

@@ -384,3 +384,24 @@ def test_disk_cuckoo_order_parallelism_invariant(tmp_path):
         assert r.returncode == 0, r.stderr[-3000:]
         got[n] = json.loads(out.read_text())
     assert got[2] == got[4] and len(got[2]) > 10
+
+
+def test_grouped_gates_build_without_type_hint_warning(spark, tmp_path):
+    """The grouped applyInPandas bodies carry no type hints, so building
+    the one-pass disk gate or a build -> merge of filter frames warns
+    nothing: PySpark infers the eval type only from complete hints and
+    warns on partial ones."""
+    import warnings
+
+    from urlmap_spark.operators.diskseen import filter_config
+    from urlmap_spark.operators.seen import BloomConfig, build_filters
+
+    d = str(tmp_path / "seen")
+    _write_bucketed(_urls(spark, ["https://a.test/"]), d, 4)
+    cands = _urls(spark, ["https://a.test/", "https://b.test/"])
+    cfg = BloomConfig(n_buckets=4, m_bits=1 << 12, k=3)
+    with warnings.catch_warnings(record=True) as got:
+        warnings.simplefilter("always")
+        disk_seen_anti_join(cands, [d], 4, filter_config("cuckoo", 4, 4 << 12), None)
+        build_filters(cands, cfg, existing=build_filters(cands, cfg))
+    assert not [w for w in got if "Cannot infer the eval type" in str(w.message)]

@@ -10,7 +10,8 @@ sweep asks whether the optimum sits lower (smaller resident buffers,
 better cache locality, more pipelining) or higher (fewer per-batch
 overheads) at the bandwidth-saturated point.
 
-Usage: python tools/ab_arrow_batch.py <cores> [trials] [sizes,csv]
+Usage: python tools/ab_arrow_batch.py [cores] [trials] [sizes,csv]
+(cores and the driver heap default to the host's, tools/hostfit.py)
 Arm order rotates per trial (round-robin shift) so every size sees
 every within-trial position across the run — the same drift-cancelling
 discipline as the codec A/B's ABBA. Fresh session per run; same cached
@@ -24,6 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
+from hostfit import host_cores, host_heap_gib  # noqa: E402
 from urlmap_spark.session import get_spark  # noqa: E402
 
 
@@ -39,11 +41,12 @@ def one(cores: int, size: int, cp: str) -> dict:
 
 
 def main() -> None:
-    cores = int(sys.argv[1]) if len(sys.argv) > 1 else 8
+    cores = int(sys.argv[1]) if len(sys.argv) > 1 else host_cores()
     trials = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     sizes = [int(s) for s in sys.argv[3].split(",")] if len(sys.argv) > 3 \
         else [256, 1024, 4096]
-    gen = get_spark(master="local[32]", app_name="ab_arrow_gen")
+    os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", f"{host_heap_gib(cores)}g")
+    gen = get_spark(master=f"local[{host_cores()}]", app_name="ab_arrow_gen")
     gen.sparkContext.setLogLevel("ERROR")
     cp = bench.ensure_vp_corpus(gen)
     gen.stop()

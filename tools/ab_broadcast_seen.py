@@ -2,8 +2,9 @@
 post-dedup shuffled anti-join, at one core count per invocation.
 
 Usage: python tools/ab_broadcast_seen.py [cores] [trials_per_arm]
-(cores defaults to every core nproc reports, tools/hostfit.py; the
-corpus generator always uses all of them). Each trial is a fresh
+(cores defaults to every core nproc reports and the driver heap to one
+that fits the host, tools/hostfit.py; the corpus generator always uses
+all the cores). Each trial is a fresh
 SparkSession over the SAME cached VP corpus recipe; arms alternate
 A,B,A,B,... and best-of-N per arm is reported (the repo's standard
 discipline for this drifting host).
@@ -16,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
-from hostfit import host_cores  # noqa: E402
+from hostfit import host_cores, host_heap_gib  # noqa: E402
 from urlmap_spark.session import get_spark  # noqa: E402
 
 
@@ -49,6 +50,7 @@ def one(cores: int, broadcast: bool, cp: str) -> dict:
 def main() -> None:
     cores = int(sys.argv[1]) if len(sys.argv) > 1 else host_cores()
     trials = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+    os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", f"{host_heap_gib(cores)}g")
     gen = get_spark(master=f"local[{host_cores()}]", app_name="ab_gen")
     gen.sparkContext.setLogLevel("ERROR")
     cp = bench.ensure_vp_corpus(gen)

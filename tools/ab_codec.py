@@ -8,7 +8,8 @@ operating point that trade could raise throughput AND the N->4N ratio
 (2-core is compute-bound, so the CPU cost lands where there is slack...
 or hurts; that is what the A/B decides).
 
-Usage: python tools/ab_codec.py <cores> [trials_per_arm]
+Usage: python tools/ab_codec.py [cores] [trials_per_arm]
+(cores and the driver heap default to the host's, tools/hostfit.py)
 Arms alternate A,B,A,B,...; best-of-N per arm reported (the repo's
 standard discipline on this drifting host).
 """
@@ -20,6 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
+from hostfit import host_cores, host_heap_gib  # noqa: E402
 from urlmap_spark.session import get_spark  # noqa: E402
 
 
@@ -35,9 +37,10 @@ def one(cores: int, codec: str, cp: str) -> dict:
 
 
 def main() -> None:
-    cores = int(sys.argv[1]) if len(sys.argv) > 1 else 8
+    cores = int(sys.argv[1]) if len(sys.argv) > 1 else host_cores()
     trials = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    gen = get_spark(master="local[32]", app_name="ab_codec_gen")
+    os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", f"{host_heap_gib(cores)}g")
+    gen = get_spark(master=f"local[{host_cores()}]", app_name="ab_codec_gen")
     gen.sparkContext.setLogLevel("ERROR")
     cp = bench.ensure_vp_corpus(gen)
     gen.stop()

@@ -3,7 +3,8 @@ bucket probe (operators/diskseen.py), both under a checkpoint catalog
 with the broadcast fast path disabled so the measured path is the
 past-4M-|seen| regime each round.
 
-Usage: python tools/ab_disk_seen.py <cores> [trials_per_arm]
+Usage: python tools/ab_disk_seen.py [cores] [trials_per_arm]
+(cores and the driver heap default to the host's, tools/hostfit.py)
 Arms alternate A,B,A,B,...; best-of-N per arm reported (the repo's
 standard discipline on this drifting host).
 """
@@ -17,6 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
+from hostfit import host_cores, host_heap_gib  # noqa: E402
 from urlmap_spark.session import get_spark  # noqa: E402
 
 
@@ -55,9 +57,10 @@ def one(cores: int, disk: bool, cp: str, seeds: list[str]) -> dict:
 
 
 def main() -> None:
-    cores = int(sys.argv[1]) if len(sys.argv) > 1 else 8
+    cores = int(sys.argv[1]) if len(sys.argv) > 1 else host_cores()
     trials = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    gen = get_spark(master="local[32]", app_name="ab_gen")
+    os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", f"{host_heap_gib(cores)}g")
+    gen = get_spark(master=f"local[{host_cores()}]", app_name="ab_gen")
     gen.sparkContext.setLogLevel("ERROR")
     cp = bench.ensure_corpus(gen)
     gen.stop()

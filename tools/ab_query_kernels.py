@@ -15,7 +15,10 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", "48g")
+from hostfit import host_cores, host_heap_gib  # noqa: E402
+
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
+os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", f"{host_heap_gib(CPUS)}g")
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -23,7 +26,6 @@ from pyspark.sql import functions as F
 from urlmap_spark.session import get_spark
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/tmp/sfx10")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def noop(df):

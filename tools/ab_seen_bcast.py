@@ -22,9 +22,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from urlmap_spark.session import get_spark
+from hostfit import host_cores, host_heap_gib
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", "48g")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
+os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", f"{host_heap_gib(CPUS)}g")
 
 N_SEEN = 2_400_000
 N_CAND = 8_000_000

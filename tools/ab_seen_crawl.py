@@ -16,12 +16,14 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", "48g")
+from hostfit import host_cores, host_heap_gib  # noqa: E402
+
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
+os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", f"{host_heap_gib(CPUS)}g")
 
 import bench as BB
 from urlmap_spark.session import get_spark
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 THR = int(sys.argv[1]) if len(sys.argv) > 1 else 600_000
 REPS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 

@@ -1,5 +1,7 @@
 """Decompose the verified-crawl fetch stage: cached-corpus scan vs join
 vs decode, at several core counts. Usage: python tools/decompose_vp.py [cores...]
+(default: a quarter of the host's cores and all of them; the driver heap
+defaults to the host's, tools/hostfit.py)
 """
 
 import os
@@ -9,12 +11,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
+from hostfit import host_cores, host_heap_gib  # noqa: E402
 from urlmap_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    cores = [int(c) for c in sys.argv[1:]] or [4, 16]
-    gen = get_spark(master="local[32]", app_name="gen")
+    cores = [int(c) for c in sys.argv[1:]] or [max(1, host_cores() // 4), host_cores()]
+    os.environ.setdefault("URLMAP_SPARK_DRIVER_MEM", f"{host_heap_gib(max(cores))}g")
+    gen = get_spark(master=f"local[{host_cores()}]", app_name="gen")
     gen.sparkContext.setLogLevel("ERROR")
     cp = bench.ensure_vp_corpus(gen)
     gen.stop()

@@ -113,8 +113,13 @@ def build_parser() -> argparse.ArgumentParser:
                    help="fold the checkpoint's seen deltas into one snapshot "
                         "every N rounds (inline rewrite_data_files analog; "
                         "caps probe-side file opens on long crawls; 0 = off)")
-    p.add_argument("--checkpoint", help="checkpoint directory (enables resume)")
-    p.add_argument("--resume", action="store_true")
+    p.add_argument("--checkpoint",
+                   help="checkpoint directory: every round commits there and "
+                        "the crawl continues from what it committed. A new "
+                        "crawl needs an empty (or absent) directory; one that "
+                        "holds a committed crawl is refused unless --resume")
+    p.add_argument("--resume", action="store_true",
+                   help="continue the crawl committed under --checkpoint")
     p.add_argument("--verify-payload", action="store_true",
                    help="decode fetched image bytes and verify phash per row")
     p.add_argument("--output", help="output path (default: print to stdout)")

@@ -194,7 +194,7 @@ def filter_gate(candidates: DataFrame, seen_table_dirs: list[str],
            T.StructField("_maybe", T.LongType()),
            T.StructField("_new", T.LongType())])
 
-    def gate(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gate(key, pdf):
         import pyarrow.parquet as pq
 
         b = int(key[0])

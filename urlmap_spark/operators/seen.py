@@ -148,7 +148,7 @@ def build_filters(urls: DataFrame, cfg,
     involution."""
     tagged = _with_hash_cols(urls, cfg).select("_h1", "_h2", "_bk")
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key, pdf):
         blob = cfg.blob()
         blob.insert(pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy())
         return pd.DataFrame({"bucket": [int(key[0])], "filter": [blob.to_bytes()]})
@@ -158,7 +158,7 @@ def build_filters(urls: DataFrame, cfg,
         return fresh
     both = fresh.unionByName(existing)
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(key, pdf):
         return pd.DataFrame({"bucket": [int(key[0])],
                              "filter": [cfg.blob(pdf["filter"]).to_bytes()]})
 

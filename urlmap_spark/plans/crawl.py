@@ -26,6 +26,17 @@ Scale notes (the 100 TB story):
 - the seen set is only ever used build-side of a left_anti join and is
   re-read from compact parquet deltas — nothing is O(frontier) on the
   driver; driver traffic is one int per partition per round.
+
+Checkpointed state: each round commits its tables (sources/catalog.py)
+and the crawl continues from exactly what it committed: one ``restore``
+reads the frontier, its size, the order counter and the prefilter dir
+back after every commit, as at the start of a resume (or of a DataFrame-
+seeded crawl, from its seeds table). Seen is read only from committed
+dirs, each once per ``crawl()`` call, and only by a round that probes a
+seen frame (broadcast or shuffled-hash); one that finds more than
+SEEN_UNION_MAX seen_delta dirs first folds them into a compaction
+snapshot, which a resume reads too. A committed dir never changes, so a
+fresh crawl needs a checkpoint dir with no committed round or seeds table.
 """
 
 from __future__ import annotations
@@ -53,7 +64,7 @@ from ..operators.order import (
 )
 from ..operators.politeness import schedule_frontier
 from ..operators.robots import host_rule_lists, robots_gate
-from ..sources.catalog import RoundCatalog
+from ..sources.catalog import RoundCatalog, read_parquet
 
 FRONTIER_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -67,15 +78,19 @@ RESULT_SCHEMA = T.StructType([
     T.StructField("order", T.LongType()),
     T.StructField("status", T.IntegerType()),
     T.StructField("ok", T.BooleanType()),
-    T.StructField("n_links", T.IntegerType()),
     T.StructField("round", T.IntegerType()),
 ])
-RESULT_COLUMNS = RESULT_SCHEMA.fieldNames()
 
 # host-hash partitioning of the CHECKPOINTED frontier (north_rule:
 # frontier partitioned by host-hash; per-host maintenance reads prune
 # bucket dirs at scan time)
 FRONTIER_HOST_BUCKETS = 16
+
+# the broadcast / shuffled-hash seen probe reads a union of frames, one
+# per committed dir (checkpointed crawl) or per round (in memory); a
+# round that finds more folds them into one first — a compaction
+# snapshot of seen_delta, or an in-memory checkpoint
+SEEN_UNION_MAX = 64
 
 
 @dataclass
@@ -100,7 +115,9 @@ class CrawlConfig:
     host_quota: DataFrame | None = None      # (host, quota) per-round politeness
     default_quota: int | None = None
     global_cap: int | None = None            # per-round global rate cap
-    checkpoint_dir: str | None = None        # None = in-memory (tests)
+    checkpoint_dir: str | None = None        # None = in-memory (tests); set:
+                                             # rounds commit there (module doc),
+                                             # a fresh crawl needs it unused
     max_rounds: int = 10_000
     frontier_partitions: int | None = None   # fan-out of the ordering pass
                                              # and of the explode / UDF
@@ -187,7 +204,8 @@ class CrawlConfig:
                                              # must open at B×N instead of
                                              # B×rounds. Snapshot-isolated:
                                              # a crash mid-compaction leaves
-                                             # the deltas authoritative
+                                             # the deltas authoritative. 0:
+                                             # folded only past SEEN_UNION_MAX
     priority_expr: str | None = None         # SQL expression over the frontier
                                              # columns (url, depth, order[,
                                              # attempt]) -> numeric priority:
@@ -258,12 +276,15 @@ def crawl(
 
     With a checkpoint_dir, DataFrame seeds are persisted as the
     catalog's named ``seeds`` table (url, depth, order — the normalized
-    round-0 frontier) BEFORE round 0 runs, so the crawl is resumable
-    from any interrupt point: a resume rebuilds ``seen`` from the seed
-    table plus the committed deltas, exactly as the list path rebuilds
-    it from the config seeds. On resume the passed DataFrame is ignored
-    in favor of the persisted table (normalization and round-0 order
-    parity are guaranteed by construction)."""
+    round-0 frontier) BEFORE round 0 runs, and round 0 starts from that
+    table, so the crawl is resumable from any interrupt point: seen is
+    the seed table plus the committed deltas, exactly as the list path
+    adds the config seeds. On resume the passed DataFrame is ignored in
+    favor of the persisted table (normalization and round-0 order
+    parity are guaranteed by construction).
+
+    resume=False with a checkpoint_dir that holds a committed round or
+    seeds table raises ValueError before any Spark job."""
     cfg = cfg or CrawlConfig()
     if cfg.disk_seen and not cfg.checkpoint_dir:
         raise ValueError("disk_seen requires checkpoint_dir: the disk-backed "
@@ -317,6 +338,15 @@ def crawl(
              urlcore._dir_path(urlsplit(s).path or "/"))
             for s in seeds
         ]
+    catalog = RoundCatalog(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
+    if catalog is not None and not resume and (
+            catalog.last_round() is not None or catalog.has_table("seeds")):
+        # a fresh crawl's commits replace only the round dirs it writes,
+        # while the results, the seen set and the disk gate read every
+        # committed one: stale rounds would leak into this crawl
+        raise ValueError(
+            f"checkpoint_dir {cfg.checkpoint_dir} holds a committed crawl: "
+            "pass resume=True to continue it, or start in an empty dir")
     # the seed list as ONE local relation (pandas-built: a LocalTableScan).
     # A list-of-tuples frame plans as a Python-RDD scan that re-runs on
     # every use — the round-0 frontier, the disk gate's broadcast of the
@@ -325,6 +355,8 @@ def crawl(
         "url": seeds, "depth": np.zeros(len(seeds), dtype=np.int32),
         "order": np.arange(len(seeds), dtype=np.int64)}), FRONTIER_SCHEMA)
         if seeds else None)
+    # list seeds never enter a committed dir: every seen probe adds them
+    seed_urls = seed_frame.select("url") if seed_frame is not None else None
 
     # The round plan places every filter by hand (depth gate before fetch,
     # scope before dedup, ...). Catalyst's PushPredicateThroughNonJoin
@@ -343,7 +375,6 @@ def crawl(
     )
 
     try:
-        catalog = RoundCatalog(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
         # The crawl plan never touches `bytes` unless payload verification
         # is on; select the narrow columns explicitly so even a cache()
         # stays slim. With verification, bytes flow ONLY through the fetch
@@ -385,60 +416,65 @@ def crawl(
 
         metrics: list[dict] = []
         results_parts: list[DataFrame] = []
-        # df_seeded: this crawl's seed set lives in the catalog's named
-        # `seeds` table (fresh DataFrame-seed run writes it below; a
-        # resume finds it already committed) rather than in the config
-        df_seeded = seeds_df is not None or (
-            catalog is not None and catalog.has_table("seeds"))
+        # in memory, seen is this call's list of per-round frames; with a
+        # catalog it is read from the committed dirs alone (committed_seen)
+        seen_parts: list[DataFrame] = []
+        seen_reads: dict[str, DataFrame] = {}
 
-        def committed_seen(upto: int | None = None) -> DataFrame:
-            """The committed seen set: every seen_delta plus the seeds,
-            which never enter any delta — list seeds from the config, a
-            DataFrame-seeded crawl's from its persisted seed table."""
-            seen = (catalog.read_union(spark, "seen_delta", upto=upto).select("url")
-                    if catalog.committed_rounds()
-                    else spark.createDataFrame([], "url string"))
-            if seed_frame is not None:
-                seen = seen.unionByName(seed_frame.select("url"))
-            if catalog.has_table("seeds"):
-                seen = seen.unionByName(
-                    catalog.read_table(spark, "seeds").select("url"))
-            return seen
+        def seen_dirs() -> list[str]:
+            """The committed dirs holding seen URLs: a DataFrame-seeded
+            crawl's seeds table, then the seen_delta snapshot and deltas."""
+            seeds_dir = [catalog.table_dir("seeds")] if catalog.has_table("seeds") else []
+            return seeds_dir + catalog.table_paths("seen_delta")
 
-        def keeps_seen_frames() -> bool:
-            """Whether the next round may read `seen` as DataFrames: the
-            disk gate reads its bucket files task-side, so a disk crawl
-            needs them only while a broadcast round can still come
-            (|seen| == order_counter only grows)."""
-            return not cfg.disk_seen or order_counter <= cfg.broadcast_seen_max_urls
+        def committed_seen() -> DataFrame:
+            """The committed seen set plus the list seeds. Each dir is read
+            once per crawl() call: a committed dir never changes (a fresh
+            crawl starts in an empty checkpoint dir)."""
+            parts = [seed_urls] if seed_urls is not None else []
+            for d in seen_dirs():
+                if d not in seen_reads:
+                    seen_reads[d] = read_parquet(spark, d).select("url")
+                parts.append(seen_reads[d])
+            return _union_all(parts)
 
-        if resume and catalog is not None and catalog.last_round() is not None:
-            last = catalog.last_round()
+        def probe_seen() -> DataFrame:
+            """The seen frame a broadcast or shuffled-hash probe reads."""
+            if catalog is None:
+                return _union_all(seen_parts)
+            if len(catalog.table_paths("seen_delta")) > SEEN_UNION_MAX:
+                # the durable fold: a resume reads the snapshot too
+                catalog.compact(spark, "seen_delta")
+            return committed_seen()
+
+        def restore(last: int | None, m: dict | None):
+            """The state a checkpointed crawl continues from: committed
+            round `last` (m: its metrics) or, with none, the committed
+            seeds table. Serves the start of a resume or of a DataFrame-
+            seeded crawl and the step after every commit. Returns the
+            frontier, its row count, order_counter, the next round index
+            and the committed prefilter blobs' dir (None: the next gate
+            rebuilds each bucket's blob from seen)."""
+            if last is None:
+                # the passed seed DataFrame, if any, is ignored: the table
+                # is the normalization/ordering-parity source of truth
+                n = int(catalog.read_table_meta("seeds")["order_counter"])
+                frontier = catalog.read_table(spark, "seeds").select("url", "depth", "order")
+                return frontier, n, n, 0, None
             # drop is a no-op on pre-bucketing checkpoints (no _hb column)
             frontier = catalog.read(spark, last, "next_frontier").drop("_hb")
-            m = catalog.read_metrics(last)
-            order_counter = int(m["order_counter"])
             # the committed frontier is that round's new, deferred and
             # retried rows; a maintenance round rewrote it, so count it
-            n_frontier = (frontier.count() if "maintenance" in m else
-                          sum(int(m.get(k, 0)) for k in
-                              ("new_discovered", "deferred", "retried")))
-            seen = committed_seen(upto=last) if keeps_seen_frames() else None
-            round_idx = last + 1
-            metrics = [catalog.read_metrics(r) for r in catalog.committed_rounds()]
-        elif resume and catalog is not None and catalog.has_table("seeds"):
-            # DataFrame-seeded crawl interrupted BEFORE the round-0
-            # commit: restart round 0 from the persisted seed table (the
-            # passed seed DataFrame, if any, is ignored — the table is
-            # the normalization/ordering-parity source of truth)
-            frontier = (catalog.read_table(spark, "seeds")
-                        .select("url", "depth", "order")
-                        .localCheckpoint(eager=True))
-            order_counter = int(catalog.read_table_meta("seeds")["order_counter"])
-            n_frontier = order_counter
-            seen = frontier.select("url")
-            round_idx = 0
-        elif seeds_df is not None:
+            n = (frontier.count() if "maintenance" in m else
+                 sum(int(m.get(k, 0)) for k in ("new_discovered", "deferred", "retried")))
+            blobs = (catalog.round_table_dir(last, "seen_filters")
+                     if filter_cfg is not None and m.get("seen_filter_cfg")
+                     == diskseen.layout_record(filter_cfg) else None)
+            return frontier, n, int(m["order_counter"]), last + 1, blobs
+
+        last = catalog.last_round() if catalog is not None else None
+        restored = catalog is not None and (last is not None or catalog.has_table("seeds"))
+        if seeds_df is not None and not restored:
             from ..functions.urlkernel import is_valid_udf, normalize_udf
 
             norm = (
@@ -450,79 +486,56 @@ def crawl(
             frontier, order_counter = with_global_order(
                 norm.withColumn("depth", F.lit(0)), ["url"], order_col="order",
                 start=0, num_partitions=cfg.frontier_partitions)
-            frontier = frontier.select("url", "depth", "order").localCheckpoint(eager=True)
-            n_frontier = order_counter
-            if catalog is not None:
+            frontier = frontier.select("url", "depth", "order")
+            if catalog is None:
+                frontier = frontier.localCheckpoint(eager=True)
+                seen_parts = [frontier.select("url")]
+                n_frontier, round_idx = order_counter, 0
+            else:
                 # persist the normalized round-0 frontier as the named
-                # seed table BEFORE any round runs: from here on every
-                # interrupt point is resumable (VERDICT r4 #2). Bucketed
-                # by the disk-seen key when disk_seen is on, so the
-                # bucket probe reads it like one more seen_delta dir —
-                # at the 10^10-frontier design point the seed set is
-                # itself a table and must never ride a broadcast.
-                sd_meta: dict = {"order_counter": order_counter}
-                sd_pb = None
-                sd_tbl = frontier
-                if cfg.disk_seen:
-                    sd_tbl = diskseen.with_bucket(frontier, cfg.disk_seen_buckets)
-                    sd_pb = ["_ub"]
-                    sd_meta["disk_seen_cfg"] = [cfg.disk_seen_buckets]
-                catalog.commit_table("seeds", sd_tbl, partition_by=sd_pb,
-                                     meta=sd_meta)
-            seen = frontier.select("url")
-            round_idx = 0
-        else:
+                # seed table BEFORE any round runs, then start from it
+                # like a resume: from here on every interrupt point is
+                # resumable (VERDICT r4 #2). Bucketed by the disk-seen key
+                # when disk_seen is on, so the bucket probe reads it like
+                # one more seen_delta dir — at the 10^10-frontier design
+                # point the seed set is itself a table and must never
+                # ride a broadcast.
+                layout = {"disk_seen_cfg": [cfg.disk_seen_buckets]} if cfg.disk_seen else {}
+                catalog.commit_table(
+                    "seeds", diskseen.with_bucket(frontier, cfg.disk_seen_buckets)
+                    if layout else frontier, partition_by=["_ub"] if layout else None,
+                    meta={"order_counter": order_counter, **layout})
+                restored = True
+        elif not restored:
             frontier = seed_frame
             if len(seeds) > 64:
                 frontier = frontier.repartition(
                     cfg.frontier_partitions or spark.sparkContext.defaultParallelism)
-            seen = frontier.select("url")
             order_counter = n_frontier = len(seeds)
             round_idx = 0
+            if catalog is None:
+                seen_parts = [seed_urls]
+        filter_dir = None
+        if restored:
+            metrics = [catalog.read_metrics(r) for r in catalog.committed_rounds()]
+            if cfg.disk_seen:
+                # a checkpoint (or seed table) written without disk_seen
+                # has FLAT dirs: the bucket probe would read nothing from
+                # them and silently re-enqueue seen URLs — refuse instead
+                checks = ([("seeds table", catalog.read_table_meta("seeds"))]
+                          if catalog.has_table("seeds") else [])
+                for what, meta in checks + [("checkpoint", m) for m in metrics[-1:]]:
+                    if meta.get("disk_seen_cfg") != [cfg.disk_seen_buckets]:
+                        raise ValueError(
+                            f"disk_seen resume: {what} was written with disk_seen_cfg="
+                            f"{meta.get('disk_seen_cfg')!r}, this run wants "
+                            f"{[cfg.disk_seen_buckets]!r} — bucket layouts are "
+                            "incompatible; re-crawl or match disk_seen_buckets")
+            frontier, n_frontier, order_counter, round_idx, filter_dir = restore(
+                last, metrics[-1] if metrics else None)
 
         if has_attempt and "attempt" not in frontier.columns:
             frontier = frontier.withColumn("attempt", F.lit(1))
-
-        # seen is kept as a list of materialized deltas (union on demand):
-        # no per-round checkpoint of the whole set, compacted past a threshold
-        seen_parts: list[DataFrame] = []
-        if keeps_seen_frames():
-            seen_parts = [seen.localCheckpoint(eager=True)]
-        seeds_seen_small: DataFrame | None = None
-        seeds_table_dirs: list[str] = []
-        filter_dir = None
-        if cfg.disk_seen:
-            # the only seen URLs that never reach the catalog's seen_delta
-            # tables are the seeds: list seeds stay a tiny broadcastable
-            # frame; a DataFrame seed TABLE (never broadcastable) is
-            # persisted in the same _ub layout, so the bucket probe reads
-            # it like one more delta dir
-            if seed_frame is not None:
-                seeds_seen_small = seed_frame.select("url")
-            # a checkpoint (or seed table) written without disk_seen has
-            # FLAT dirs: the bucket probe would read nothing from them and
-            # silently re-enqueue seen URLs — refuse instead
-            checks = []
-            if df_seeded and catalog.has_table("seeds"):
-                checks.append(("seeds table", catalog.read_table_meta("seeds")))
-                seeds_table_dirs = [catalog.table_dir("seeds")]
-            last = catalog.last_round() if resume else None
-            if last is not None:
-                checks.append(("checkpoint", catalog.read_metrics(last)))
-            for what, meta in checks:
-                if meta.get("disk_seen_cfg") != [cfg.disk_seen_buckets]:
-                    raise ValueError(
-                        f"disk_seen resume: {what} was written with disk_seen_cfg="
-                        f"{meta.get('disk_seen_cfg')!r}, this run wants "
-                        f"{[cfg.disk_seen_buckets]!r} — bucket layouts are "
-                        "incompatible; re-crawl or match disk_seen_buckets")
-            # the gate reads and rewrites its own prefilter blobs task-side;
-            # the driver only tracks which committed round holds them. A
-            # checkpoint without blobs in this layout has each bucket's
-            # blob rebuilt from seen by the next gate
-            if filter_cfg is not None and last is not None and catalog.read_metrics(
-                    last).get("seen_filter_cfg") == diskseen.layout_record(filter_cfg):
-                filter_dir = catalog.round_table_dir(last, "seen_filters")
         fcols = ["url", "depth", "order"] + (["attempt"] if has_attempt else [])
         # the robots rules folded once per crawl into one row per host
         # (operators/robots.py): each round's gate is a broadcast join
@@ -742,7 +755,6 @@ def crawl(
 
             # --- first-wins intra-round dedup + anti-join the seen set --------
             new_filters = gate_obs = None  # set by the disk gate
-            seen = _union_all(seen_parts)
             cand = links.select(
                 F.col("outlink").alias("url"), "parent_order", "pos", "depth")
             # packed-long first-wins when this round's tie-key maxima fit
@@ -762,9 +774,9 @@ def crawl(
                 # estimate. Broadcasting seen lets the anti-join run map-
                 # side BEFORE the dedup shuffle: in a converging crawl most
                 # candidate links point at seen URLs and never reach an
-                # exchange. Catalyst can't make this call itself — seen is
-                # a union of checkpointed RDDs with no size stats.
-                cand = cand.join(F.broadcast(seen), "url", "left_anti")
+                # exchange. Catalyst can't make this call itself: it only
+                # sees file sizes, and checkpointed frames have no stats.
+                cand = cand.join(F.broadcast(probe_seen()), "url", "left_anti")
                 new = _fw(cand)
             elif cfg.disk_seen:
                 # 10^10 exact path: seen stays in its persisted _ub bucket
@@ -773,11 +785,8 @@ def crawl(
                 # the same bucket tasks also probe and extend the blobs
                 # (diskseen.py)
                 gate = diskseen.disk_seen_anti_join(
-                    _fw(cand),
-                    seeds_table_dirs + catalog.table_paths("seen_delta"),
-                    cfg.disk_seen_buckets, filter_cfg, filter_dir,
-                    extra_seen=seeds_seen_small,
-                )
+                    _fw(cand), seen_dirs(), cfg.disk_seen_buckets, filter_cfg,
+                    filter_dir, extra_seen=seed_urls)
                 new, new_filters, gate_obs = gate.new, gate.filters, gate.observation
             else:
                 # shuffled-HASH anti, not sort-merge: both sides are
@@ -786,7 +795,7 @@ def crawl(
                 # (url keys are unique, so build partitions are uniform —
                 # no skew risk; r6 ABAB on the bench crawl: late-round
                 # walls 6.1-7.1s -> 4.2-4.3s)
-                new = _fw(cand).join(seen.hint("shuffle_hash"), "url", "left_anti")
+                new = _fw(cand).join(probe_seen().hint("shuffle_hash"), "url", "left_anti")
 
             # --- assign global crawl order (FIFO enqueue order). ONE fused
             # materialization: with_global_order eagerly checkpoints the
@@ -822,7 +831,7 @@ def crawl(
             results_r = final.select(
                 "url", "depth", "order", F.col("status").cast("int"), "ok",
                 F.lit(round_idx).alias("round"),
-            ).withColumn("n_links", F.lit(None).cast("int")).select(*RESULT_COLUMNS)
+            )
 
             round_wall = time.time() - t0
             m = {
@@ -888,17 +897,6 @@ def crawl(
                 # the gate's filter counts are observed on its blob write
                 catalog.commit_round(round_idx, tables, m,
                                      partition_by=pb, observed=gate_obs)
-                # the next gate reads the blobs this round just committed;
-                # a round without them (broadcast path) leaves none
-                filter_dir = (catalog.round_table_dir(round_idx, "seen_filters")
-                              if new_filters is not None else None)
-                # re-read from storage: snapshot-isolated resume point
-                frontier = catalog.read(spark, round_idx, "next_frontier").drop("_hb")
-                if keeps_seen_frames():
-                    seen_parts.append(
-                        catalog.read(spark, round_idx, "seen_delta").select("url"))
-                else:
-                    seen_parts = []
                 if cfg.compact_seen_every > 0 and \
                         (round_idx + 1) % cfg.compact_seen_every == 0:
                     catalog.compact(spark, "seen_delta")
@@ -915,36 +913,30 @@ def crawl(
                     # resume, maintenance and the next gate read only the
                     # last round's prefilter blobs: older ones are dead
                     catalog.drop_superseded("seen_filters")
-                    # the old seen_parts entries lazily reference the
-                    # just-vacuumed delta dirs — rebuild from the snapshot
-                    if seen_parts:
-                        seen_parts = [committed_seen()]
+                # continue from what this round committed, as a resume would
+                frontier, n_frontier, order_counter, round_idx, filter_dir = restore(
+                    round_idx, m)
             else:
                 results_parts.append(results_r)
                 seen_parts.append(new.select("url"))
-                frontier = next_frontier
-
-            if len(seen_parts) > 64:  # bound the union width on deep crawls
-                seen_parts = [_union_all(seen_parts).localCheckpoint(eager=True)]
-
-            n_frontier = n_new + n_deferred + n_retry
+                if len(seen_parts) > SEEN_UNION_MAX:
+                    seen_parts = [_union_all(seen_parts).localCheckpoint(eager=True)]
+                frontier, n_frontier = next_frontier, n_new + n_deferred + n_retry
+                round_idx += 1
             metrics.append(m)
             _report(cfg.progress, m)
-            round_idx += 1
 
         if catalog is not None:
             # interrupted before any round committed (e.g. a max_rounds=0
             # probe of a DataFrame-seeded setup): the seeds are all state
             results = (catalog.read_union(spark, "results")
                        if catalog.committed_rounds() else None)
-            seen_df = committed_seen()
         else:
             results = _union_all(results_parts)
-            seen_df = _union_all(seen_parts)
         if results is None:
             results = spark.createDataFrame([], RESULT_SCHEMA)
-
-        return CrawlRun(results=results, metrics=metrics, rounds=round_idx, seen=seen_df)
+        return CrawlRun(results=results, metrics=metrics, rounds=round_idx,
+                        seen=_union_all(seen_parts) if catalog is None else committed_seen())
 
     finally:
         if old_excluded:

@@ -4,11 +4,13 @@ failure handling, depth limits, checkpoint/resume, parallelism
 invariance. Mirrors the reference's crawler behavior suite
 (reference: internal/crawler/comprehensive_test.go, crawler_test.go)."""
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from urlmap_spark.plans.crawl import CrawlConfig, crawl
+from urlmap_spark.plans.crawl import CrawlConfig, crawl, frontier_lineage
 from urlmap_spark.plans.oracle import oracle_bfs
 from urlmap_spark.sources import corpus as C
 
@@ -126,24 +128,27 @@ def test_checkpoint_resume(spark, tmp_path, interrupt):
         max_depth=3, same_path_prefix=False, checkpoint_dir=ck), resume=True)
     got = [(r["url"], r["depth"], r["order"]) for r in resumed.results.orderBy("order").collect()]
     assert got == expect
-    # lineage table exists per committed round
     from urlmap_spark.sources.catalog import RoundCatalog
     cat = RoundCatalog(ck)
     assert cat.committed_rounds() == list(range(resumed.rounds))
-    lin = cat.read_union(spark, "lineage")
-    assert {"bucket", "host", "n", "min_order", "max_order"} <= set(lin.columns)
-    # the lineage bucket IS the persisted frontier's partition key: every
-    # (bucket, host) row must agree with pmod(xxhash64(host), buckets), and
-    # the per-round n must sum to the committed frontier's row count
-    from pyspark.sql import functions as F
-    bad = lin.filter(
-        F.col("bucket") != F.pmod(F.xxhash64("host"), F.lit(16)).cast("int"))
-    assert bad.count() == 0
     for rnd in cat.committed_rounds():
-        nf = cat.read(spark, rnd, "next_frontier")
-        lin_r = cat.read(spark, rnd, "lineage")
-        got_n = lin_r.agg(F.sum("n")).collect()[0][0] or 0
-        assert got_n == nf.count()
+        assert not os.path.exists(cat.round_table_dir(rnd, "lineage"))
+        check_frontier_lineage(spark, cat, rnd)
+
+
+def check_frontier_lineage(spark, cat, rnd):
+    """Round `rnd`'s lineage, derived on read from its committed frontier:
+    every bucket is pmod(xxhash64(host), 16) and the `_hb` partition the
+    rows were committed in, and n sums to the frontier's row count."""
+    nf = cat.read(spark, rnd, "next_frontier")
+    lin = frontier_lineage(nf)
+    assert set(lin.columns) == {"bucket", "host", "n", "min_order", "max_order"}
+    assert lin.filter(
+        F.col("bucket") != F.pmod(F.xxhash64("host"), F.lit(16)).cast("int")).count() == 0
+    assert (lin.agg(F.sum("n")).collect()[0][0] or 0) == nf.count()
+    per_bucket = lin.groupBy("bucket").agg(F.sum("n").alias("n")).collect()
+    assert {r["bucket"]: r["n"] for r in per_bucket} == \
+        {r["_hb"]: r["count"] for r in nf.groupBy("_hb").count().collect()}
 
 
 def _order_rows(run):
@@ -610,3 +615,32 @@ def test_commit_round_failed_write_leaves_round_uncommitted(spark, tmp_path):
     cat.commit_round(0, {"a": good, "b": good}, {"round": 0})
     assert cat.committed_rounds() == [0]
     assert cat.read(spark, 0, "b").count() == 5
+
+
+def test_commit_round_carries_session_tags(spark, tmp_path, monkeypatch):
+    """commit_round's writer threads run under the caller's session job
+    tags (spark.addTag), and PySpark does not warn "Tags will not be
+    inherited"."""
+    import warnings
+
+    from urlmap_spark.sources import catalog
+
+    tags = []
+    write = catalog.write_parquet
+
+    def spy(df, path, partition_by=None):
+        tags.append(df.sparkSession.getTags())
+        write(df, path, partition_by)
+
+    monkeypatch.setattr(catalog, "write_parquet", spy)
+    cat = catalog.RoundCatalog(str(tmp_path))
+    spark.addTag("commit-probe")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            cat.commit_round(0, {"a": spark.range(3), "b": spark.range(2)}, {"round": 0})
+    finally:
+        spark.removeTag("commit-probe")
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
+    assert tags == [{"commit-probe"}] * 2
+    assert cat.committed_rounds() == [0]

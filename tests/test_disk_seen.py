@@ -244,7 +244,7 @@ def test_inline_seen_compaction_parity(spark, tmp_path):
                for r in run.results.orderBy("order").collect()]
         assert got == want, f"inline compaction broke parity ({mode})"
         cat = RoundCatalog(ck)
-        for tbl in ("seen_delta", "results", "lineage"):
+        for tbl in ("seen_delta", "results"):
             paths = cat.table_paths(tbl)
             assert any(os.sep + "compact" + os.sep in p for p in paths), \
                 f"no {tbl} compaction snapshot served ({mode})"

@@ -222,3 +222,29 @@ def test_other_blob_layout_counts_as_no_blobs(spark, tmp_path):
     resumed = crawl(spark, _web(spark), "https://h.test/", _cfg(ck), resume=True)
     assert [d for (u, d, _, _) in _rows(resumed) if u == "https://h.test/b"] == [1, 3]
     assert cat.read_metrics(cat.last_round())["seen_filter_cfg"][3] == "_ub"
+
+
+def test_maintenance_rounds_keep_the_frontier_layout(spark, tmp_path):
+    """requeue_urls and retire_urls commit next_frontier in the crawl's
+    host-bucket layout (`_hb=` partition dirs), so lineage derives from a
+    maintenance round like from a crawl round; a resume after both
+    refetches the requeued C and the rediscovered B."""
+    from test_crawl import check_frontier_lineage
+
+    ck = str(tmp_path / "ck")
+    crawl(spark, _web(spark), "https://h.test/", _cfg(ck, max_rounds=2))
+    cat = RoundCatalog(ck)
+    assert requeue_urls(spark, ck, ["https://h.test/c"])["requeued"] == 1
+    assert retire_urls(spark, ck, ["https://h.test/b"])["retired"] == 1
+    for rnd in (2, 3):  # requeue, then retire
+        assert cat.read_metrics(rnd)["maintenance"] in ("requeue", "retire")
+        nf_dir = cat.round_table_dir(rnd, "next_frontier")
+        assert [d for d in os.listdir(nf_dir) if d.startswith("_hb=")]
+        assert cat.read(spark, rnd, "next_frontier").count() == 2  # d, c
+        check_frontier_lineage(spark, cat, rnd)
+
+    resumed = crawl(spark, _web(spark), "https://h.test/", _cfg(ck), resume=True)
+    assert _rows(resumed) == [
+        ("https://h.test/", 0, 0, 0), ("https://h.test/b", 1, 1, 1),
+        ("https://h.test/c", 1, 2, 1), ("https://h.test/d", 2, 3, 4),
+        ("https://h.test/c", 1, 4, 4), ("https://h.test/b", 3, 5, 5)]

@@ -43,8 +43,9 @@ from pyspark.sql import functions as F
 from ..operators import diskseen
 from ..operators.order import with_global_order
 from ..sources.catalog import RoundCatalog
+from .crawl import FRONTIER_PB, bucketed_frontier, read_frontier
 
-_BLOB_PB = {"seen_filters": ["_ub"]}  # blobs are committed one per disk bucket
+_PB = {**FRONTIER_PB, "seen_filters": ["_ub"]}  # blobs: one per disk bucket
 
 
 def _url_frame(spark: SparkSession, urls) -> DataFrame:
@@ -112,7 +113,7 @@ def requeue_urls(spark: SparkSession, checkpoint_dir: str, urls) -> dict:
     # original discovery depth — depth is a property of the link graph)
     latest = (results.join(want, "url", "left_semi")
               .groupBy("url").agg(F.min("depth").alias("depth")))
-    frontier = cat.read(spark, last, "next_frontier").drop("_hb")
+    frontier = read_frontier(spark, cat, last)
     requeue = latest.join(frontier.select("url"), "url", "left_anti")
 
     ordered, new_counter = with_global_order(
@@ -124,14 +125,13 @@ def requeue_urls(spark: SparkSession, checkpoint_dir: str, urls) -> dict:
     merged = frontier.unionByName(ordered)
     n_requeued = new_counter - order_counter
 
-    tables = {"next_frontier": merged}
+    tables = {"next_frontier": bucketed_frontier(merged)}
     _, filters = _load_filter_state(spark, cat, last)
     if filters is not None:
         tables["seen_filters"] = filters  # carry forward unchanged
     mm = _zero_metrics(last + 1, new_counter, maintenance="requeue",
                        requeued=n_requeued, **_layout_meta(m, filters is not None))
-    cat.commit_round(last + 1, tables, mm,
-                     partition_by=_BLOB_PB if filters is not None else None)
+    cat.commit_round(last + 1, tables, mm, partition_by=_PB)
     return {"requeued": n_requeued, "round": last + 1}
 
 
@@ -156,7 +156,7 @@ def retire_urls(spark: SparkSession, checkpoint_dir: str, urls) -> dict:
     m = cat.read_metrics(last)
 
     want = _url_frame(spark, urls)
-    frontier = cat.read(spark, last, "next_frontier").drop("_hb")
+    frontier = read_frontier(spark, cat, last)
     pending = want.join(frontier.select("url"), "url", "left_semi")
     n_pending = pending.count()
     retire = want.join(frontier.select("url"), "url", "left_anti")
@@ -171,7 +171,7 @@ def retire_urls(spark: SparkSession, checkpoint_dir: str, urls) -> dict:
     # it covers so resume reads one snapshot + post-maintenance deltas
     cat.compact(spark, "seen_delta", minus=retire)
 
-    tables = {"next_frontier": frontier}
+    tables = {"next_frontier": bucketed_frontier(frontier)}
     if filters is not None and fcfg.kind == "cuckoo":
         tables["seen_filters"] = diskseen.remove_urls(filters, retire, fcfg)
     elif filters is not None:
@@ -187,7 +187,6 @@ def retire_urls(spark: SparkSession, checkpoint_dir: str, urls) -> dict:
                        maintenance="retire", retired=n_retired,
                        skipped_pending=n_pending,
                        **_layout_meta(m, filters is not None))
-    cat.commit_round(last + 1, tables, mm,
-                     partition_by=_BLOB_PB if filters is not None else None)
+    cat.commit_round(last + 1, tables, mm, partition_by=_PB)
     return {"retired": n_retired, "skipped_pending": n_pending,
             "round": last + 1}

@@ -4,9 +4,10 @@ The target deployment uses Iceberg tables (snapshot-isolated commits);
 the Iceberg runtime JAR is not available in this sandbox, so this shim
 provides the same contract over a directory layout:
 
-    <root>/rounds/r=NNNN/{frontier,results,seen_delta,lineage}/  (parquet)
+    <root>/rounds/r=NNNN/{next_frontier,results,seen_delta,seen_filters}/  (parquet)
     <root>/rounds/r=NNNN/metrics.json
     <root>/rounds/r=NNNN/_COMMITTED          <- written LAST (atomic marker)
+    <root>/tables/seeds/{data/,meta.json,_COMMITTED}   (named seeds table)
 
 A round is visible iff its _COMMITTED marker exists; a crashed round
 leaves no marker and is overwritten on resume. This emulates Iceberg's
@@ -99,8 +100,8 @@ class RoundCatalog:
         with ThreadPoolExecutor(max(1, len(tables))) as pool:
             writes = [pool.submit(
                 # carries this thread's job properties (e.g. a job
-                # description) over to the writer thread
-                inheritable_thread_target(write_parquet),
+                # description) and session job tags over to the writer
+                inheritable_thread_target(df.sparkSession)(write_parquet),
                 df, os.path.join(rdir, name), (partition_by or {}).get(name))
                 for name, df in tables.items()]
             for w in writes:
